@@ -124,7 +124,7 @@ def bfs_expand(
         visited = spark.createDataFrame(
             [(root, 0, None)], f"id {id_type}, depth int, parent {id_type}"
         )
-        visited = ctx.truncate(visited, 0)
+        visited, _ = ctx.truncate(visited, 0)
     frontier = visited.where(F.col("depth") == start_level).select("id")
 
     depth_reached = start_level
@@ -141,7 +141,7 @@ def bfs_expand(
             .agg(F.min("parent").alias("parent"))
             .select("id", F.lit(depth + 1).alias("depth"), "parent")
         )
-        visited = ctx.truncate(visited.unionByName(new), depth + 1)
+        visited, _ = ctx.truncate(visited.unionByName(new), depth + 1)
         n_new = visited.where(F.col("depth") == depth + 1).count()
         ctx.record(visited, depth + 1, {"level": depth + 1, "new_vertices": n_new})
         if n_new == 0:
@@ -154,7 +154,7 @@ def bfs_expand(
         # the level that recorded new_vertices=0, so without this a resume
         # of an exhausted run could not detect the dead frontier and would
         # re-execute one wasted empty superstep
-        visited = ctx.finish(
+        ctx.finish(
             visited, depth_reached, {"final": True, "new_vertices": n_new}
         )
     adj.unpersist()

@@ -12,21 +12,21 @@ first-wins visited-set insert (``src/citation_graph/traverser.py:97-107``):
 
 Per iteration: one join of the (small) label frame against the persisted
 symmetrized edge table on ``src`` + one ``groupBy(dst).min()`` (map-side
-partial agg bounds hub fan-in), one scalar action for the changed-count
-fixpoint test. Runs in O(diameter) supersteps; state is plan-truncated per
-iteration and durably checkpointed like PageRank.
+partial agg bounds hub fan-in); the changed count for the fixpoint test is
+observed by the same Spark job. Runs in O(diameter) supersteps; state is
+plan-truncated per iteration and durably checkpointed like PageRank.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, functions as F
 
 from citation_graph_spark.edges import symmetrize, vertices_of
 from citation_graph_spark.operators.prepared import PreparedGraph
-from citation_graph_spark.operators.superstep import SuperstepContext
+from citation_graph_spark.operators.superstep import SuperstepContext, count_true
 from citation_graph_spark.sources.checkpoint import CheckpointManager
 
 
@@ -76,9 +76,7 @@ def connected_components(
             )
         if algorithm != "hash_min":
             raise ValueError(f"unknown algorithm {algorithm!r}")
-        return _hash_min(
-            prepared, edges, max_iter, checkpoint_dir, durable_every, resume
-        )
+        return _hash_min(prepared, max_iter, checkpoint_dir, durable_every, resume)
     finally:
         if owns_prepared:
             prepared.unpersist()
@@ -86,86 +84,92 @@ def connected_components(
 
 def _hash_min(
     prepared: PreparedGraph,
-    edges: DataFrame,
     max_iter: int,
     checkpoint_dir: str | None,
     durable_every: int,
     resume: bool,
 ) -> ComponentsResult:
-    spark = edges.sparkSession
-
-    ckpt = None
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(
-            spark,
-            checkpoint_dir,
-            args={"algorithm": "connected_components", "max_iter": max_iter},
-        )
-    ctx = SuperstepContext(checkpoint=ckpt, durable_every=durable_every)
-
-    start_iter = 1
-    state = None
-    if ckpt is not None and resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            it, state_df, manifest = latest
-            from citation_graph_spark.sources.checkpoint import resume_compatible
-
-            if resume_compatible(manifest.get("args"), ckpt.args):
-                if manifest["metrics"].get("changed") == 0:
-                    return ComponentsResult(state_df.select("id", "label"), it, True, [])
-                state = state_df
-                start_iter = it + 1
-
-    # CSR-style layout (see pagerank.py): cache-sorted on src so each
-    # superstep's merge join re-sorts only the label frame. Shared with LPA
-    # via PreparedGraph when the caller passed one.
-    sym = prepared.symmetrized()
-
-    if state is None:
-        # vertex set from the PreparedGraph's cached flag table (one
-        # aggregation, shared with pagerank/lpa and prebuilt by callers
-        # that pass a prepared graph) instead of a private
-        # union-distinct over the edge table (r06)
-        state = prepared.dangling_flagged().select(
-            "id", F.col("id").alias("label")
-        )
-        state = ctx.truncate(state, 0)
-        ctx.record(state, 0, {"changed": None})
-
-    import time as _time
-
-    changed = -1
-    it = start_iter - 1
-    for it in range(start_iter, max_iter + 1):
-        _t_iter = _time.time()
+    # CSR-style layout (see pagerank.py): the symmetrized view is cache-sorted
+    # on src and the label state co-partitioned with it on id, so each
+    # superstep's merge join shuffles neither side
+    def step(state: DataFrame, sym: DataFrame) -> DataFrame:
         nbr_min = (
             state.join(sym.hint("merge"), state.id == sym.src)
             .groupBy(sym.dst.alias("id"))
             .agg(F.min("label").alias("nbr_label"))
         )
-        new_state = (
-            state.join(nbr_min.hint("merge"), "id", "left")
-            .select(
-                "id",
-                F.least("label", F.coalesce("nbr_label", "label")).alias("label"),
-                (F.col("label") > F.coalesce("nbr_label", "label")).alias("_changed"),
-            )
+        return state.join(nbr_min.hint("merge"), "id", "left").select(
+            "id",
+            F.least("label", F.coalesce("nbr_label", "label")).alias("label"),
+            (F.col("label") > F.coalesce("nbr_label", "label")).alias("_changed"),
         )
-        new_state = ctx.truncate(new_state, it)
-        changed = new_state.where("_changed").count()
-        state = new_state.drop("_changed")
-        state = ctx.record(
-            state,
-            it,
-            {"changed": changed, "seconds": round(_time.time() - _t_iter, 3)},
+
+    return label_fixpoint(
+        prepared, "connected_components", step, max_iter, checkpoint_dir,
+        durable_every, resume,
+    )
+
+
+def label_fixpoint(
+    prepared: PreparedGraph,
+    algorithm: str,
+    step: Callable[[DataFrame, DataFrame], DataFrame],
+    max_iter: int,
+    checkpoint_dir: str | None,
+    durable_every: int,
+    resume: bool,
+) -> ComponentsResult:
+    """The superstep loop of hash-min CC and label propagation: every vertex
+    starts labelled with its own id; ``step(state, sym)`` maps the
+    ``(id, label)`` state and the PreparedGraph's symmetrized edge cache to
+    the next ``(id, label, _changed)``. Stops when no label changed or after
+    ``max_iter`` supersteps; checkpointed and resumable under ``algorithm``."""
+    ckpt = None
+    if checkpoint_dir is not None:
+        ckpt = CheckpointManager(
+            prepared.edges.sparkSession,
+            checkpoint_dir,
+            args={"algorithm": algorithm, "max_iter": max_iter},
         )
+    ctx = SuperstepContext(
+        checkpoint=ckpt, durable_every=durable_every,
+        num_partitions=prepared.num_partitions,
+    )
+
+    latest = ctx.resume() if resume else None
+    if latest is not None and latest[2].get("changed") == 0:
+        return ComponentsResult(latest[1].select("id", "label"), latest[0], True, [])
+
+    # shared by CC and LPA via PreparedGraph when the caller passed one
+    sym = prepared.symmetrized()
+
+    if latest is None:
+        # vertex set from the PreparedGraph's cached flag table (one
+        # aggregation, shared with pagerank and prebuilt by callers that
+        # pass a prepared graph) instead of a private union-distinct over
+        # the edge table (r06)
+        state, _ = ctx.truncate(
+            prepared.dangling_flagged().select("id", F.col("id").alias("label")), 0
+        )
+        ctx.record(state, 0, {"changed": None})
+        done = 0
+    else:
+        done, state, _ = latest
+        state, _ = ctx.truncate(state, done)
+
+    changed = -1
+    it = done
+    for it in range(done + 1, max_iter + 1):
+        state, seen = ctx.truncate(
+            step(state, sym), it, changed=count_true("_changed")
+        )
+        changed = seen["changed"]
+        ctx.record(state, it, {"changed": changed})
         if changed == 0:
             break
 
     converged = changed == 0
-    if ckpt is not None:
-        state = ctx.finish(state, it, {"changed": changed, "final": converged})
+    ctx.finish(state, it, {"changed": changed, "final": converged})
     return ComponentsResult(state.select("id", "label"), it, converged, ctx.history)
 
 
@@ -259,7 +263,7 @@ def _two_star(
     if state is None:
         sym0 = prepared.symmetrized() if prepared is not None else symmetrize(edges)
         pairs = sym0.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        state = ctx.truncate(pairs.repartition(num_partitions, "u"), 0)
+        state, _ = ctx.truncate(pairs.repartition(num_partitions, "u"), 0)
 
     def large_star(p: DataFrame) -> DataFrame:
         # Γ(u) is the SYMMETRIC neighbourhood (each edge contributes both
@@ -315,7 +319,7 @@ def _two_star(
             # state as iteration 0 and CheckpointManager.save would then
             # prune every iteration > 0 — deleting the checkpoint just
             # loaded (ADVICE r04; _hash_min guards with `state is None`).
-            state = ctx.record(
+            ctx.record(
                 state,
                 0,
                 {
@@ -328,10 +332,10 @@ def _two_star(
     it = start_iter - 1
     converged = False
     for it in range(start_iter, max_iter + 1):
-        state = ctx.truncate(small_star(large_star(state)), it)
+        state, _ = ctx.truncate(small_star(large_star(state)), it)
         cur_sum = checksum(state)
         converged = cur_sum == prev_sum
-        state = ctx.record(
+        ctx.record(
             state,
             it,
             {
@@ -346,7 +350,7 @@ def _two_star(
         prev_sum = cur_sum
 
     if ckpt is not None:
-        state = ctx.finish(
+        ctx.finish(
             state,
             it,
             {

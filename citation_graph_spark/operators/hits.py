@@ -140,8 +140,8 @@ def hits(
                 F.lit(0.0).alias("auth"),
                 F.lit(1.0 / n).alias("hub"),
             )
-            state = ctx.truncate(state, 0)
-            state = ctx.record(state, 0, {"delta": None})
+            state, _ = ctx.truncate(state, 0)
+            ctx.record(state, 0, {"delta": None})
 
         delta = float("inf") if resumed_delta is None else resumed_delta
         it = start_iter - 1
@@ -185,7 +185,7 @@ def hits(
                     "hub",
                 )
             )
-            raw = ctx.truncate(raw, it)
+            raw, _ = ctx.truncate(raw, it)
             # ONE driver action: both normalization sums
             row = raw.agg(
                 F.sum("a_raw").alias("asum"), F.sum("h_raw").alias("hsum")
@@ -207,7 +207,7 @@ def hits(
                 new_state.agg(F.sum("_delta")).first()[0] or 0.0
             )
             state = new_state.drop("_delta")
-            state = ctx.record(
+            ctx.record(
                 state,
                 it,
                 {"delta": delta, "seconds": round(_time.time() - _t_iter, 3)},
@@ -217,7 +217,7 @@ def hits(
 
         converged = delta < tol
         if ckpt is not None:
-            state = ctx.finish(state, it, {"delta": delta, "final": converged})
+            ctx.finish(state, it, {"delta": delta, "final": converged})
         return HITSResult(
             state.select("id", "auth", "hub"), it, delta, converged, ctx.history
         )

@@ -76,9 +76,9 @@ def k_core(
     # both directions present, deduped, self-loops dropped → one
     # groupBy(src) == undirected degree
     state = symmetrize(edges).repartition(num_partitions, "src")
-    state = ctx.truncate(state, 0)
+    state, _ = ctx.truncate(state, 0)
     prev_ne = state.count()
-    state = ctx.record(state, 0, {"edges": prev_ne})
+    ctx.record(state, 0, {"edges": prev_ne})
 
     it = 0
     converged = prev_ne == 0
@@ -91,10 +91,10 @@ def k_core(
         new_state = state.join(
             survivors, state.src == survivors.id, "left_semi"
         ).join(survivors, F.col("dst") == survivors.id, "left_semi")
-        new_state = ctx.truncate(new_state, it)
-        ne = new_state.count()  # materializes the truncated state
-        state = ctx.record(
-            new_state,
+        state, _ = ctx.truncate(new_state, it)
+        ne = state.count()  # materializes the truncated state
+        ctx.record(
+            state,
             it,
             {
                 "edges": ne,

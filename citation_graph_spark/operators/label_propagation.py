@@ -20,10 +20,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
 
-from citation_graph_spark.edges import vertices_of
+from citation_graph_spark.operators.components import label_fixpoint
 from citation_graph_spark.operators.prepared import PreparedGraph
-from citation_graph_spark.operators.superstep import SuperstepContext
-from citation_graph_spark.sources.checkpoint import CheckpointManager
 
 
 @dataclass
@@ -48,66 +46,8 @@ def label_propagation(
         if edges is None:
             raise ValueError("pass either edges or prepared")
         prepared = PreparedGraph(edges, num_partitions)
-    else:
-        edges = prepared.edges
-    try:
-        return _lpa_loop(
-            prepared, edges, max_iter, checkpoint_dir, durable_every, resume
-        )
-    finally:
-        if owns_prepared:
-            prepared.unpersist()
 
-
-def _lpa_loop(
-    prepared: PreparedGraph,
-    edges: DataFrame,
-    max_iter: int,
-    checkpoint_dir: str | None,
-    durable_every: int,
-    resume: bool,
-) -> LPAResult:
-    spark = edges.sparkSession
-
-    ckpt = None
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(
-            spark,
-            checkpoint_dir,
-            args={"algorithm": "label_propagation", "max_iter": max_iter},
-        )
-    ctx = SuperstepContext(checkpoint=ckpt, durable_every=durable_every)
-
-    start_iter = 1
-    state = None
-    if ckpt is not None and resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            it, state_df, manifest = latest
-            from citation_graph_spark.sources.checkpoint import resume_compatible
-
-            if resume_compatible(manifest.get("args"), ckpt.args):
-                if manifest["metrics"].get("changed") == 0:
-                    return LPAResult(state_df.select("id", "label"), it, True, [])
-                state = state_df
-                start_iter = it + 1
-
-    sym = prepared.symmetrized()
-
-    if state is None:
-        # vertex set from the PreparedGraph's cached flag table (r06; see
-        # components.py — one shared aggregation instead of a private
-        # union-distinct over the edge table)
-        state = prepared.dangling_flagged().select("id", F.col("id").alias("label"))
-        state = ctx.truncate(state, 0)
-        ctx.record(state, 0, {"changed": None})
-
-    import time as _time
-
-    changed = -1
-    it = start_iter - 1
-    for it in range(start_iter, max_iter + 1):
-        _t_iter = _time.time()
+    def step(state: DataFrame, sym: DataFrame) -> DataFrame:
         # Count neighbour labels per vertex, then a type-agnostic argmax:
         # max count first, smallest label on ties. Two hash aggs (both with
         # map-side partials), no window sort, works for long AND string ids.
@@ -123,26 +63,18 @@ def _lpa_loop(
             .groupBy("id")
             .agg(F.min("label").alias("best_label"))
         )
-        new_state = (
-            state.join(nbr_best.hint("merge"), "id", "left")
-            .select(
-                "id",
-                F.coalesce("best_label", "label").alias("label"),
-                (F.coalesce("best_label", "label") != F.col("label")).alias("_changed"),
-            )
+        return state.join(nbr_best.hint("merge"), "id", "left").select(
+            "id",
+            F.coalesce("best_label", "label").alias("label"),
+            (F.coalesce("best_label", "label") != F.col("label")).alias("_changed"),
         )
-        new_state = ctx.truncate(new_state, it)
-        changed = new_state.where("_changed").count()
-        state = new_state.drop("_changed")
-        state = ctx.record(
-            state,
-            it,
-            {"changed": changed, "seconds": round(_time.time() - _t_iter, 3)},
-        )
-        if changed == 0:
-            break
 
-    converged = changed == 0
-    if ckpt is not None:
-        state = ctx.finish(state, it, {"changed": changed, "final": converged})
-    return LPAResult(state.select("id", "label"), it, converged, ctx.history)
+    try:
+        res = label_fixpoint(
+            prepared, "label_propagation", step, max_iter, checkpoint_dir,
+            durable_every, resume,
+        )
+    finally:
+        if owns_prepared:
+            prepared.unpersist()
+    return LPAResult(res.labels, res.iterations, res.converged, res.history)

@@ -126,7 +126,7 @@ def hyperanf(
     if registers_out is not None:
         state.write.mode("overwrite").parquet(registers_out)
         state = spark.read.parquet(registers_out)
-    state = ctx.truncate(state, 0)
+    state, _ = ctx.truncate(state, 0)
     state.count()
     ctx.record(state, 0)
 
@@ -159,7 +159,7 @@ def hyperanf(
                     for i in range(k)
                 ],
             )
-            state = ctx.truncate(state, d)
+            state, _ = ctx.truncate(state, d)
             snapshot = state.select("id", F.lit(d).alias("d"), _rho_sum_expr(k))
             snapshot = snapshot.localCheckpoint(eager=True)  # outlives ctx
             per_d.append(snapshot)

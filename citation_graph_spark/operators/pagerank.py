@@ -11,33 +11,34 @@ degree special case of this, ``src/citation_graph/traverser.py:109-116``):
 Converges when the L1 delta ``sum |r' - r|`` drops below ``tol`` (1e-6 per
 the north rule).
 
-Scale shape per iteration (what runs on 1000 executors):
+Scale shape per superstep (what runs on 1000 executors):
 - ``ranks ⋈ edges`` on ``src`` — the big side (edges) is pre-weighted,
-  pre-partitioned on ``src`` and persisted ONCE; only the small rank frame
-  shuffles each superstep. AQE skew-join splits hub-src partitions; an
-  explicit ``salt_factor`` replicates rank rows across salted edge splits
-  for deterministic hub handling.
+  pre-partitioned on ``src`` and persisted ONCE, and the rank state is
+  kept hash-partitioned on ``id`` into the same partition count
+  (``SuperstepContext.truncate``), so neither side shuffles. An explicit
+  ``salt_factor`` replicates rank rows across salted edge splits for
+  deterministic hub handling (that join does shuffle the rank side).
 - ``groupBy(dst).sum()`` — partial (map-side) aggregation bounds a hub
   dst's shuffle rows by the partition count, the built-in equivalent of
-  two-phase salted aggregation.
-- one driver-side scalar action per iteration reads BOTH the L1 delta and
-  the next iteration's dangling mass from the already-materialized state —
-  no extra pass.
-- plan lineage is truncated per iteration (localCheckpoint), durable
-  Parquet checkpoints + manifest every ``durable_every`` iterations; a
-  killed run resumes from the newest valid manifest (metrics carry the
-  dangling mass, so resume is exact).
+  two-phase salted aggregation. Its Exchange is the superstep's only one:
+  the following ``state ⋈ contribs`` on ``id`` is co-partitioned.
+- the superstep is ONE Spark job: the L1 delta and the next superstep's
+  dangling mass are observed (``pyspark.sql.Observation``) by the job that
+  checkpoints the new state, not read by an action of their own.
+- durable Parquet checkpoints + manifest every ``durable_every``
+  supersteps; a killed run resumes from the newest valid manifest (metrics
+  carry the dangling mass, so resume is exact).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from citation_graph_spark.operators.prepared import PreparedGraph, superstep_contribs
-from citation_graph_spark.operators.superstep import SuperstepContext
+from citation_graph_spark.operators.superstep import SuperstepContext, exact_sum
 from citation_graph_spark.sources.checkpoint import CheckpointManager
 
 
@@ -117,12 +118,18 @@ def pagerank(
                 **({"weight_col": weight_col} if weight_col else {}),
             },
         )
-    ctx = SuperstepContext(checkpoint=ckpt, durable_every=durable_every)
+
+    def setup() -> tuple[DataFrame, Callable[[float], Column]]:
+        n = prepared.n_vertices()
+        init = prepared.dangling_flagged().select(
+            "id", F.lit(1.0 / n).alias("rank"), "is_dangling"
+        )
+        return init, lambda dm: F.lit((1.0 - alpha) / n + alpha * dm / n)
 
     try:
-        return _pagerank_loop(
-            prepared, ctx, ckpt, alpha, tol, max_iter, salt_factor, resume,
-            checkpoint_dir,
+        return _power_iteration(
+            prepared, ckpt, durable_every, resume, setup, alpha, tol, max_iter,
+            salt_factor,
         )
     finally:
         if owns_prepared:
@@ -156,7 +163,7 @@ def personalized_pagerank(
     L1-delta stopping rule as :func:`pagerank`. The superstep is the
     IDENTICAL plan shape (shared ``superstep_contribs``: merge-hinted SMJ
     vs the persisted src-sorted edge cache, map-side partial aggregation,
-    one scalar action per iteration); only the per-vertex restart term
+    one Spark job per superstep); only the per-vertex restart term
     differs, a branchless CASE over a broadcast-joined source flag.
 
     ``sources``: DataFrame with an ``id`` column (kept declarative —
@@ -196,142 +203,42 @@ def personalized_pagerank(
                 "sources_fp": src_fp,
             },
         )
-    ctx = SuperstepContext(checkpoint=ckpt, durable_every=durable_every)
-    try:
-        return _ppr_loop(
-            prepared, ctx, ckpt, sources, alpha, tol, max_iter, salt_factor,
-            resume, checkpoint_dir,
+
+    def setup() -> tuple[DataFrame, Callable[[float], Column]]:
+        # source flag joined once into the static vertex table (broadcast:
+        # the seed set is small by construction), then carried through the
+        # state
+        src_flagged = prepared.dangling_flagged().join(
+            F.broadcast(sources.select(F.col("id")).distinct().withColumn(
+                "is_source", F.lit(True)
+            )),
+            "id",
+            "left",
+        ).select(
+            "id", "is_dangling", F.coalesce("is_source", F.lit(False)).alias("is_source")
         )
-    finally:
-        if owns_prepared:
-            prepared.unpersist()
-
-
-def _ppr_loop(
-    prepared: PreparedGraph,
-    ctx: SuperstepContext,
-    ckpt,
-    sources: DataFrame,
-    alpha: float,
-    tol: float,
-    max_iter: int,
-    salt_factor: int,
-    resume: bool,
-    checkpoint_dir,
-) -> PageRankResult:
-    import time as _time
-
-    start_iter = 0
-    dangling_mass = None
-    state = None
-    resumed_delta = None
-    if ckpt is not None and resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            it, state_df, manifest = latest
-            from citation_graph_spark.sources.checkpoint import resume_compatible
-
-            if resume_compatible(manifest.get("args"), ckpt.args):
-                state = state_df
-                start_iter = it + 1
-                dangling_mass = float(manifest["metrics"]["dangling_mass"])
-                prev_delta = manifest["metrics"].get("delta")
-                if prev_delta is not None:
-                    resumed_delta = float(prev_delta)
-                    if resumed_delta < tol:
-                        return PageRankResult(
-                            state.select("id", "rank"), it, resumed_delta, True, []
-                        )
-
-    w_edges = prepared.weighted_edges(salt_factor)
-    flagged = prepared.dangling_flagged()
-    if prepared.n_vertices() == 0:
-        empty = flagged.select(F.col("id"), F.lit(0.0).alias("rank"))
-        return PageRankResult(empty, 0, 0.0, True, [])
-
-    # source flag joined once into the static vertex table (broadcast: the
-    # seed set is small by construction), then carried through the state
-    src_flagged = flagged.join(
-        F.broadcast(sources.select(F.col("id")).distinct().withColumn(
-            "is_source", F.lit(True)
-        )),
-        "id",
-        "left",
-    ).select(
-        "id", "is_dangling", F.coalesce("is_source", F.lit(False)).alias("is_source")
-    )
-    ns = src_flagged.where("is_source").count()
-    if ns == 0:
-        raise ValueError("no source id matches a graph vertex")
-
-    if state is None:
-        state = src_flagged.select(
+        ns = src_flagged.where("is_source").count()
+        if ns == 0:
+            raise ValueError("no source id matches a graph vertex")
+        init = src_flagged.select(
             "id",
             F.when(F.col("is_source"), F.lit(1.0 / ns)).otherwise(0.0).alias("rank"),
             "is_dangling",
             "is_source",
         )
-        state = ctx.truncate(state, 0)
-        dangling_mass = (
-            state.where("is_dangling").agg(F.sum("rank")).first()[0] or 0.0
-        )
-        state = ctx.record(state, 0, {"dangling_mass": dangling_mass, "delta": None})
-        start_iter = 1
+        # the total mass restarting, (1-a) + a*dm, spread over the sources
+        return init, lambda dm: F.when(
+            F.col("is_source"), F.lit(((1.0 - alpha) + alpha * dm) / ns)
+        ).otherwise(0.0)
 
-    delta = float("inf") if resumed_delta is None else resumed_delta
-    ran = False
-    it = start_iter - 1
-    for it in range(start_iter, max_iter + 1):
-        ran = True
-        _t_iter = _time.time()
-        contribs = superstep_contribs(state, w_edges, salt_factor)
-        restart = (1.0 - alpha) + alpha * dangling_mass  # total mass restarting
-        new_state = (
-            state.join(contribs.hint("merge"), state.id == contribs.dst, "left")
-            .select(
-                state.id.alias("id"),
-                (
-                    F.when(state.is_source, F.lit(restart / ns)).otherwise(0.0)
-                    + F.lit(alpha) * F.coalesce("contrib", F.lit(0.0))
-                ).alias("new_rank"),
-                state.rank.alias("old_rank"),
-                state.is_dangling.alias("is_dangling"),
-                state.is_source.alias("is_source"),
-            )
-            .select(
-                "id",
-                F.col("new_rank").alias("rank"),
-                "is_dangling",
-                "is_source",
-                F.abs(F.col("new_rank") - F.col("old_rank")).alias("_delta"),
-            )
+    try:
+        return _power_iteration(
+            prepared, ckpt, durable_every, resume, setup, alpha, tol, max_iter,
+            salt_factor,
         )
-        new_state = ctx.truncate(new_state, it)
-        row = new_state.agg(
-            F.sum("_delta").alias("delta"),
-            F.sum(F.when(F.col("is_dangling"), F.col("rank"))).alias("dm"),
-        ).first()
-        delta = float(row["delta"] or 0.0)
-        dangling_mass = float(row["dm"] or 0.0)
-        state = new_state.drop("_delta")
-        state = ctx.record(
-            state,
-            it,
-            {
-                "dangling_mass": dangling_mass,
-                "delta": delta,
-                "seconds": round(_time.time() - _t_iter, 3),
-            },
-        )
-        if delta < tol:
-            break
-
-    converged = delta < tol
-    if ckpt is not None and ran:
-        state = ctx.finish(
-            state, it, {"dangling_mass": dangling_mass, "delta": delta, "final": converged}
-        )
-    return PageRankResult(state.select("id", "rank"), it, delta, converged, ctx.history)
+    finally:
+        if owns_prepared:
+            prepared.unpersist()
 
 
 def _resolve_auto_salt(
@@ -361,137 +268,109 @@ def _resolve_auto_salt(
     return prepared.resolve_salt_factor()
 
 
-def _pagerank_loop(
+def _power_iteration(
     prepared: PreparedGraph,
-    ctx: SuperstepContext,
-    ckpt,
+    ckpt: CheckpointManager | None,
+    durable_every: int,
+    resume: bool,
+    setup: Callable[[], tuple[DataFrame, Callable[[float], Column]]],
     alpha: float,
     tol: float,
     max_iter: int,
     salt_factor: int,
-    resume: bool,
-    checkpoint_dir,
 ) -> PageRankResult:
+    """The superstep loop of :func:`pagerank` and
+    :func:`personalized_pagerank`. ``setup()`` (called only for a non-empty
+    graph) returns the iteration-0 state ``(id, rank, is_dangling, ...)``
+    and ``teleport``: dangling mass -> the per-vertex restart Column of the
+    next superstep. Columns after ``rank`` are carried through unchanged."""
+    ctx = SuperstepContext(
+        checkpoint=ckpt, durable_every=durable_every,
+        num_partitions=prepared.num_partitions,
+    )
     # --- resume check first: a fully-converged checkpoint returns before
-    # any static table is built -----------------------------------------------
-    start_iter = 0
-    dangling_mass = None
-    state = None
-    resumed_delta = None
-    if ckpt is not None and resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            it, state_df, manifest = latest
-            # Validate ALL recorded hyperparameters (alpha, salt_factor, …),
-            # not just the algorithm name — resuming a checkpoint written
-            # under different parameters would blend two different fixpoints.
-            # max_iter/tol are continuation knobs and may differ.
-            from citation_graph_spark.sources.checkpoint import resume_compatible
-
-            if resume_compatible(manifest.get("args"), ckpt.args):
-                state = state_df
-                start_iter = it + 1
-                dangling_mass = float(manifest["metrics"]["dangling_mass"])
-                prev_delta = manifest["metrics"].get("delta")
-                if prev_delta is not None:
-                    # seed the residual: if the loop below runs zero
-                    # iterations (start_iter > max_iter), the true recorded
-                    # delta is reported instead of inf, and the manifest is
-                    # not rewritten (see the `ran` guard at the bottom)
-                    resumed_delta = float(prev_delta)
-                    if resumed_delta < tol:
-                        # Already converged — nothing to recompute.
-                        return PageRankResult(
-                            state.select("id", "rank"), it, resumed_delta, True, []
-                        )
-            else:
-                import warnings
-
-                warnings.warn(
-                    f"checkpoint at {checkpoint_dir} was written with different "
-                    f"args ({manifest.get('args')}) than this call ({ckpt.args}); "
-                    "ignoring it and starting fresh",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
+    # any static table is built -------------------------------------------
+    latest = ctx.resume() if resume else None
+    delta = float("inf")
+    if latest is not None:
+        done, state, metrics = latest
+        dangling_mass = float(metrics["dangling_mass"])
+        if metrics.get("delta") is not None:
+            # seed the residual: if the loop below runs zero iterations
+            # (done >= max_iter), the true recorded delta is reported
+            # instead of inf, and the manifest is not rewritten (see the
+            # `ran` guard at the bottom)
+            delta = float(metrics["delta"])
+            if delta < tol:
+                # Already converged — nothing to recompute.
+                return PageRankResult(state.select("id", "rank"), done, delta, True, [])
 
     # --- static per-run tables (PreparedGraph: built once, persisted,
-    # shared across algorithm calls when the caller passed one) --------------
+    # shared across algorithm calls when the caller passed one) ------------
     w_edges = prepared.weighted_edges(salt_factor)
-    n = prepared.n_vertices()
-    if n == 0:
+    if prepared.n_vertices() == 0:
         empty = prepared.dangling_flagged().select(F.col("id"), F.lit(0.0).alias("rank"))
         return PageRankResult(empty, 0, 0.0, True, [])
-    flagged = prepared.dangling_flagged()
+    init, teleport = setup()
 
-    if state is None:
-        state = flagged.select(
-            "id", F.lit(1.0 / n).alias("rank"), "is_dangling"
-        )
-        state = ctx.truncate(state, 0)
-        dangling_mass = (
-            state.where("is_dangling").agg(F.sum("rank")).first()[0] or 0.0
-        )
-        state = ctx.record(state, 0, {"dangling_mass": dangling_mass, "delta": None})
-        start_iter = 1
+    if latest is None:
+        state, seen = ctx.truncate(init, 0, dangling_mass=_dangling_mass())
+        dangling_mass = float(seen["dangling_mass"] or 0.0)
+        ctx.record(state, 0, {"dangling_mass": dangling_mass, "delta": None})
+        done = 0
+    else:
+        state, _ = ctx.truncate(state, done)
 
-    import time as _time
-
-    delta = float("inf") if resumed_delta is None else resumed_delta
     ran = False
-    it = start_iter - 1
-    for it in range(start_iter, max_iter + 1):
+    it = done
+    for it in range(done + 1, max_iter + 1):
         ran = True
-        _t_iter = _time.time()
-        # the join-agg superstep body lives in prepared.superstep_contribs —
-        # shared with the measured salt A/B so the probe times this exact plan
-        contribs = superstep_contribs(state, w_edges, salt_factor)
-
-        base = (1.0 - alpha) / n + alpha * dangling_mass / n
-        new_state = (
-            state.join(contribs.hint("merge"), state.id == contribs.dst, "left")
-            .select(
-                state.id.alias("id"),
-                (F.lit(base) + F.lit(alpha) * F.coalesce("contrib", F.lit(0.0))).alias(
-                    "new_rank"
-                ),
-                state.rank.alias("old_rank"),
-                state.is_dangling.alias("is_dangling"),
-            )
-            .select(
-                "id",
-                F.col("new_rank").alias("rank"),
-                "is_dangling",
-                F.abs(F.col("new_rank") - F.col("old_rank")).alias("_delta"),
-            )
+        step = superstep_ranks(state, w_edges, salt_factor, teleport(dangling_mass), alpha)
+        state, seen = ctx.truncate(
+            step, it, delta=exact_sum(F.col("_delta")), dangling_mass=_dangling_mass()
         )
-        new_state = ctx.truncate(new_state, it)
-        row = new_state.agg(
-            F.sum("_delta").alias("delta"),
-            F.sum(F.when(F.col("is_dangling"), F.col("rank"))).alias("dm"),
-        ).first()
-        delta = float(row["delta"] or 0.0)
-        dangling_mass = float(row["dm"] or 0.0)
-        state = new_state.drop("_delta")
-        state = ctx.record(
-            state,
-            it,
-            {
-                "dangling_mass": dangling_mass,
-                "delta": delta,
-                "seconds": round(_time.time() - _t_iter, 3),
-            },
-        )
+        delta = float(seen["delta"] or 0.0)
+        dangling_mass = float(seen["dangling_mass"] or 0.0)
+        ctx.record(state, it, {"dangling_mass": dangling_mass, "delta": delta})
         if delta < tol:
             break
 
     converged = delta < tol
-    if ckpt is not None and ran:
+    if ran:
         # Durably record the last state (full schema, so resume still works)
         # even when it fell between durable_every boundaries. Skipped when
         # zero iterations ran — rewriting the manifest would clobber the
         # recorded true residual (and delta=inf is not valid JSON).
-        state = ctx.finish(
+        ctx.finish(
             state, it, {"dangling_mass": dangling_mass, "delta": delta, "final": converged}
         )
     return PageRankResult(state.select("id", "rank"), it, delta, converged, ctx.history)
+
+
+def superstep_ranks(
+    state: DataFrame, w_edges: DataFrame, salt_factor: int, teleport: Column, alpha: float
+) -> DataFrame:
+    """One PageRank superstep: ``(id, rank, <carried>..., _delta)`` with
+    rank' = teleport + alpha * contrib and ``_delta`` = |rank' - rank|.
+
+    The join-agg body lives in ``prepared.superstep_contribs`` — shared with
+    the measured salt A/B so the probe times this exact plan. Every state
+    column after ``id`` and ``rank`` is carried through unchanged."""
+    contribs = superstep_contribs(state, w_edges, salt_factor)
+    new_rank = teleport + F.lit(alpha) * F.coalesce("contrib", F.lit(0.0))
+    carried = [state[c] for c in state.columns if c not in ("id", "rank")]
+    # ``state.id`` un-aliased: the checkpointed state reports its partitioning
+    # on the attribute the optimized plan carries, and ``Alias(id, "id")`` is
+    # optimized away, so an alias would leave the partitioning pointing at
+    # an attribute the new state does not output (and cost an Exchange)
+    return state.join(contribs.hint("merge"), state.id == contribs.dst, "left").select(
+        state.id,
+        new_rank.alias("rank"),
+        *carried,
+        F.abs(new_rank - state.rank).alias("_delta"),
+    )
+
+
+def _dangling_mass() -> Column:
+    """Sum of rank over dangling vertices (restarted uniformly next step)."""
+    return exact_sum(F.when(F.col("is_dangling"), F.col("rank")))

@@ -93,7 +93,20 @@ class PreparedGraph:
         ``PreparedGraph(edges)`` path pays one repartition+sort per
         session; the bucketed table pays it once at write time). At 100 TB
         this is the Iceberg ``bucket(N, src)`` layout through Spark's
-        catalog (tests/test_bucketed.py proves the no-Exchange property)."""
+        catalog (tests/test_bucketed.py proves the no-Exchange property).
+
+        ``num_partitions`` defaults to the table's bucket count: the
+        superstep state is co-partitioned with the edge cache only when
+        both have the same partition count."""
+        if num_partitions is None:
+            buckets = [
+                int(row["data_type"])
+                for row in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+                if row["col_name"] == "Num Buckets"
+            ]
+            if not buckets:
+                raise ValueError(f"{table} is not a bucketed table")
+            num_partitions = buckets[0]
         return cls(spark.table(table), num_partitions, pre_partitioned=True)
 
     # --- pagerank statics ---------------------------------------------------

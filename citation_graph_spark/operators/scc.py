@@ -162,7 +162,7 @@ def strongly_connected_components(
                 .select("id", F.col("id").alias("color"))
             )
             step += 1
-            state = ctx.truncate(state, step)
+            state, _ = ctx.truncate(state, step)
             n_active = state.count()
             ctx.record(state, step)
             round_metrics["active_vertices"] = n_active
@@ -184,7 +184,7 @@ def strongly_connected_components(
                     ),
                 )
                 step += 1
-                new_state = ctx.truncate(new_state, step)
+                new_state, _ = ctx.truncate(new_state, step)
                 changed = new_state.where("_changed").count()
                 state = new_state.drop("_changed")
                 ctx.record(state, step)
@@ -195,7 +195,7 @@ def strongly_connected_components(
             # --- 3. backward mark within color class, seeded at the roots
             state = state.withColumn("marked", F.col("color") == F.col("id"))
             step += 1
-            state = ctx.truncate(state, step)
+            state, _ = ctx.truncate(state, step)
             state.count()
             ctx.record(state, step)
 
@@ -227,7 +227,7 @@ def strongly_connected_components(
                     (~F.col("marked") & msgs.mcolor.isNotNull()).alias("_changed"),
                 )
                 step += 1
-                new_state = ctx.truncate(new_state, step)
+                new_state, _ = ctx.truncate(new_state, step)
                 changed = new_state.where("_changed").count()
                 state = new_state.drop("_changed")
                 ctx.record(state, step)

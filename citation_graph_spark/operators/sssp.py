@@ -186,7 +186,7 @@ def sssp(
                 )
                 .select("root", "id", F.col("cand_dist").alias("dist"))
             )
-            imp = ctx.truncate(imp, r)
+            imp, _ = ctx.truncate(imp, r)
             n_improved = imp.count()  # one driver action per round
             rounds = r
             _secs = lambda: round(_time.time() - _t_round, 3)  # noqa: E731

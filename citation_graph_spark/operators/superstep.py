@@ -6,23 +6,103 @@ _collect_papers_for_next_level(depth)`` (``src/citation_graph/traverser.py:
 Catalyst-planned join-aggregate over the edge table; the loop lives on the
 driver and owns exactly the things Catalyst cannot:
 
+- **resume** — ``resume`` returns the newest durable state whose recorded
+  args match this run's; a checkpoint written under other args is ignored
+  with a ``RuntimeWarning`` and the run starts fresh,
+- **ending a superstep in one Spark job** — ``truncate`` attaches the
+  caller's convergence aggregates (L1 delta, dangling mass, changed count)
+  as a ``pyspark.sql.Observation``, so they ride the job that materializes
+  the state instead of costing a scalar action of their own; for loops
+  whose state is keyed on ``id`` it also hash-partitions the state on
+  ``id`` into the edge caches' partition count (see
+  ``copartitioned_planning``), so the next superstep's joins against the
+  src-partitioned caches shuffle nothing on the state side,
 - **plan-lineage truncation** — iterative self-joins grow the logical plan
-  without bound; each iteration's state is cut via ``localCheckpoint`` (fast,
-  cluster-memory) and, every ``durable_every`` iterations, via a durable
-  Parquet checkpoint + manifest (resumable, see ``sources.checkpoint``),
-- **convergence-driven control** — fixpoint tests (L1 delta, changed-label
-  count) are driver-side scalars; no Catalyst concept exists for them,
-- **per-iteration metrics** collection.
+  without bound; each superstep's state is cut by an eager
+  ``localCheckpoint`` and, every ``durable_every`` supersteps, also written
+  as a durable Parquet checkpoint + manifest (resumable, see
+  ``sources.checkpoint``) while the loop keeps the in-memory state,
+- **per-superstep history** — the convergence scalars only, so results are
+  deterministic; wall-clock timing does not belong in a result.
+
+``copartitioned_planning`` toggles session-global SQL conf for the length of
+one ``truncate``: a co-partitioned loop is not thread-safe against other
+queries planned on the same session meanwhile.
 """
 
 from __future__ import annotations
 
+import logging
+import warnings
+from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Iterator
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JError
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
-from citation_graph_spark.sources.checkpoint import CheckpointManager
+from citation_graph_spark.sources.checkpoint import CheckpointManager, resume_compatible
+
+log = logging.getLogger(__name__)
+
+
+@contextmanager
+def copartitioned_planning(spark: SparkSession, num_partitions: int) -> Iterator[None]:
+    """Plan the enclosed queries without AQE and with ``num_partitions``
+    shuffle partitions.
+
+    Under AQE a ``localCheckpoint`` reports ``UnknownPartitioning(0)``, so
+    both superstep joins would shuffle the state again. Planned without
+    AQE, the checkpointed frame keeps ``hashpartitioning(id, P)``, and with
+    ``P`` shuffle partitions the superstep's one remaining Exchange (the
+    ``dst`` aggregate) lands co-partitioned with the state. AQE has nothing
+    left to do in such a plan: the only join with a shuffled side has unique
+    keys on both sides.
+
+    Both settings are session-global: queries planned on the same session
+    from another thread meanwhile see them too, so this is not thread-safe.
+    """
+    conf = spark.conf
+    wanted = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(num_partitions),
+    }
+    saved = {key: conf.get(key) for key in wanted}
+    try:
+        for key, value in wanted.items():
+            conf.set(key, value)
+        yield
+    finally:
+        for key, value in saved.items():
+            conf.set(key, value)
+
+
+def count_true(col: str) -> Column:
+    """Rows where the boolean ``col`` is true (0 on an empty frame) — the
+    changed-label count of a fixpoint test, as an observable aggregate."""
+    return F.count(F.when(F.col(col), 1))
+
+
+def exact_sum(col: Column) -> Column:
+    """Sum of a double column as an observable aggregate that does not
+    depend on task scheduling: an observation merges its task results in
+    task completion order, so a plain double sum could change in its last
+    bits from run to run (and move the ranks that depend on it). The sum is
+    taken in exact ``decimal(38,30)`` arithmetic and rounded to double once;
+    values must stay below 1e8 (PageRank masses and L1 deltas are <= 2)."""
+    return F.sum(col.cast("decimal(38,30)")).cast("double")
+
+
+def _unpersist(df: DataFrame) -> None:
+    """Release ``df``'s blocks; a stopped session has nothing left to
+    release, anything else is logged."""
+    try:
+        df.unpersist()
+    except Py4JError:
+        # the JVM gateway is gone or the SparkContext was stopped
+        log.debug("unpersist skipped: session stopped", exc_info=True)
+    except Exception:
+        log.warning("unpersist failed", exc_info=True)
 
 
 @dataclass
@@ -30,28 +110,67 @@ class SuperstepContext:
     """Per-run iteration-state handler.
 
     ``truncate`` must be called on the new state once per superstep; it
-    returns a frame whose lineage no longer references previous iterations.
+    returns a frame whose lineage no longer references previous iterations,
+    together with the scalars it observed on the way.
+
+    ``num_partitions``: when set, states are keyed on ``id`` and are kept
+    hash-partitioned on it into this many partitions (the ``PreparedGraph``
+    edge caches' count); when ``None`` a state is checkpointed as planned.
     """
 
     checkpoint: CheckpointManager | None = None
     durable_every: int = 5
+    num_partitions: int | None = None
     history: list[dict[str, Any]] = field(default_factory=list)
     _last: DataFrame | None = None
     _pending_unpersist: DataFrame | None = None
 
-    def truncate(self, state: DataFrame, iteration: int) -> DataFrame:
-        """Cut plan lineage via EAGER localCheckpoint.
+    def resume(self) -> tuple[int, DataFrame, dict[str, Any]] | None:
+        """``(iteration, state, metrics)`` of the newest valid durable
+        state, or None when there is none or it was written under other
+        args (``resume_compatible``: every recorded hyperparameter must
+        match — resuming a checkpoint written under different parameters
+        would blend two different fixpoints; ``max_iter``/``tol`` are
+        continuation knobs and may differ). A mismatch warns; the fresh run
+        then prunes the dead timeline on its first durable save.
 
-        Round 6 measured A/B (scripts/r06_superstep_ab.py, 5-superstep
-        PageRank loops, interleaved trials, 8M edges, local[32]): eager
-        materialization beat the previous lazy variant in every round
-        (min 3.32 s vs 5.88 s; earlier rounds 6.6 vs 11.7, 6.8 vs 17.2).
-        Under AQE the "lazy" variant was never actually lazy anyway —
-        ``localCheckpoint`` calls ``queryExecution.toRdd``, which
-        materializes every shuffle stage of the AdaptiveSparkPlan at
-        truncate() time regardless of the eager flag — so eager only
-        moves the (cheap) result-stage materialization out of the
-        convergence-aggregate job, and measures consistently faster.
+        The returned state is the raw Parquet scan: a caller that goes on
+        iterating sends it through ``truncate`` once."""
+        if self.checkpoint is None:
+            return None
+        latest = self.checkpoint.latest()
+        if latest is None:
+            return None
+        iteration, state, manifest = latest
+        if not resume_compatible(manifest.get("args"), self.checkpoint.args):
+            warnings.warn(
+                f"checkpoint at {self.checkpoint.path} was written with different "
+                f"args ({manifest.get('args')}) than this call "
+                f"({self.checkpoint.args}); ignoring it and starting fresh",
+                RuntimeWarning,
+                stacklevel=3,
+            )
+            return None
+        return iteration, state, manifest["metrics"]
+
+    def truncate(
+        self, state: DataFrame, iteration: int, **observe: Column
+    ) -> tuple[DataFrame, dict[str, Any]]:
+        """End a superstep: materialize ``state`` in ONE Spark job and cut
+        its lineage; return it with the values of the ``observe``
+        aggregates (name → aggregate Column) computed over ``state`` by
+        that same job.
+
+        Columns whose names start with ``_`` exist only to feed the
+        observed aggregates and are dropped before the checkpoint. With
+        ``num_partitions`` set, the state is repartitioned on ``id`` and
+        checkpointed under ``copartitioned_planning``; the repartition is
+        elided by the planner when the superstep already produced that
+        partitioning (the usual case: the last join is on ``id``).
+
+        Eager materialization (round 6 A/B, 5-superstep PageRank loops, 8M
+        edges, local[32]: min 3.32 s eager vs 5.88 s lazy) keeps the state
+        build and the observed scalars in one job.
 
         The previous iteration's blocks are released in ``record`` (i.e.
         only after the new state is materialized): a localCheckpoint plan
@@ -59,25 +178,37 @@ class SuperstepContext:
         materializes would lose data. Leaving superseded blocks cached is
         not an option either — block churn degrades iteration time
         severalfold within ~10 supersteps (measured)."""
-        new_state = state.localCheckpoint(eager=True)
+        observation = None
+        if observe:
+            observation = Observation()
+            state = state.observe(
+                observation, *[agg.alias(name) for name, agg in observe.items()]
+            )
+            state = state.select(*[c for c in state.columns if not c.startswith("_")])
+        if self.num_partitions is None:
+            new_state = state.localCheckpoint(eager=True)
+        else:
+            with copartitioned_planning(state.sparkSession, self.num_partitions):
+                new_state = state.repartition(self.num_partitions, "id").localCheckpoint(
+                    eager=True
+                )
         self._pending_unpersist = self._last
         self._last = new_state
-        return new_state
+        return new_state, (observation.get if observation is not None else {})
 
     def record(
         self,
         state: DataFrame,
         iteration: int,
         metrics: dict[str, Any] | None = None,
-    ) -> DataFrame:
+    ) -> None:
         """Log this iteration's metrics; release the superseded iteration's
-        blocks (the caller has materialized ``state`` by now); durably
-        checkpoint every ``durable_every`` iterations."""
+        blocks (``truncate`` has materialized ``state`` by now); durably
+        checkpoint every ``durable_every`` iterations. The loop keeps
+        iterating on the in-memory ``state``, which keeps its partitioning;
+        a re-read of the Parquet copy would not."""
         if self._pending_unpersist is not None:
-            try:
-                self._pending_unpersist.unpersist()
-            except Exception:
-                pass
+            _unpersist(self._pending_unpersist)
             self._pending_unpersist = None
         self.history.append({"iteration": iteration, **(metrics or {})})
         if (
@@ -85,19 +216,16 @@ class SuperstepContext:
             and self.durable_every > 0
             and iteration % self.durable_every == 0
         ):
-            return self.checkpoint.save(state, iteration, metrics)
-        return state
+            self.checkpoint.save(state, iteration, metrics)
 
-    def finish(self, state: DataFrame, iteration: int, metrics: dict[str, Any] | None = None):
+    def finish(
+        self, state: DataFrame, iteration: int, metrics: dict[str, Any] | None = None
+    ) -> None:
         """Durably record the converged state (if checkpointing is on)."""
         if self.checkpoint is not None:
-            return self.checkpoint.save(state, iteration, metrics)
-        return state
+            self.checkpoint.save(state, iteration, metrics)
 
     def cleanup(self) -> None:
         if self._last is not None:
-            try:
-                self._last.unpersist()
-            except Exception:
-                pass
+            _unpersist(self._last)
             self._last = None

@@ -87,9 +87,8 @@ class CheckpointManager:
         state: DataFrame,
         iteration: int,
         metrics: dict[str, Any] | None = None,
-    ) -> DataFrame:
-        """Write state + manifest for ``iteration``; return the re-read frame
-        (fresh lineage rooted at the Parquet scan)."""
+    ) -> None:
+        """Write state + manifest for ``iteration``."""
         from citation_graph_spark import __version__
 
         target = self._iter_dir(iteration)
@@ -144,7 +143,6 @@ class CheckpointManager:
         for it in self.iterations():
             if it > iteration:
                 shutil.rmtree(self._iter_dir(it), ignore_errors=True)
-        return reloaded
 
     def iterations(self) -> list[int]:
         if not os.path.isdir(self.path):

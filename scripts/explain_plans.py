@@ -3,8 +3,9 @@ the plan properties the scale design depends on:
 
 - parquet scans show PushedFilters + pruned ReadSchema (html never read
   when not needed),
-- the PageRank superstep join is a SortMergeJoin whose edge side is an
-  InMemoryTableScan with NO re-sort (cache-preserved ordering),
+- the PageRank superstep joins are SortMergeJoins that shuffle neither the
+  co-partitioned rank state nor the cached edge side (no re-sort either):
+  the dst aggregate is the superstep's only Exchange,
 - the per-src top-k is a single WindowExec, the degree agg is a partial +
   final HashAggregate pair.
 
@@ -69,7 +70,42 @@ def main() -> int:
     assert "Window" in plan
     sections.append(("Per-src top-k: Window row_number", plan))
 
-    # 4. pagerank superstep join: SMJ, cached edge side not re-sorted
+    # 4. pagerank superstep: the truncated rank state is co-partitioned with
+    # the src-partitioned edge cache, so neither join shuffles the state —
+    # the dst aggregate is the only Exchange outside the cache build — and
+    # the cached edge side is merge-joined without a re-sort
+    from citation_graph_spark.operators.pagerank import superstep_ranks
+    from citation_graph_spark.operators.prepared import PreparedGraph
+    from citation_graph_spark.operators.superstep import (
+        SuperstepContext,
+        copartitioned_planning,
+    )
+
+    pg = PreparedGraph(edges)
+    ctx = SuperstepContext(num_partitions=pg.num_partitions)
+    state, _ = ctx.truncate(
+        pg.dangling_flagged().select("id", F.lit(1e-4).alias("rank"), "is_dangling"), 0
+    )
+    # plan the second superstep: its state is the output of a superstep
+    state, _ = ctx.truncate(
+        superstep_ranks(state, pg.weighted_edges(0), 0, F.lit(0.0), 0.85),
+        1,
+        delta=F.sum("_delta"),
+    )
+    step = superstep_ranks(state, pg.weighted_edges(0), 0, F.lit(0.0), 0.85)
+    with copartitioned_planning(spark, pg.num_partitions):
+        plan = grab(step, "simple")
+    assert "SortMergeJoin" in plan, "superstep join is not SMJ"
+    tree = plan[: plan.index("InMemoryRelation")]
+    assert tree.count("Exchange") == 1 and "Exchange hashpartitioning(dst" in tree, (
+        "state side of the superstep is shuffled"
+    )
+    sections.append(
+        ("PageRank superstep: co-partitioned state, SMJ + partial agg, one Exchange", plan)
+    )
+    ctx.cleanup()
+    pg.unpersist()
+
     w_edges = (
         edges.select("src", "dst", F.lit(0.5).alias("w"))
         .repartition(8, "src")
@@ -78,17 +114,6 @@ def main() -> int:
     )
     w_edges.count()
     ranks = spark.range(10_000).select(F.col("id"), F.lit(1e-4).alias("rank"))
-    step = (
-        ranks.join(w_edges.hint("merge"), ranks.id == w_edges.src)
-        .groupBy("dst")
-        .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
-    )
-    plan = grab(step)
-    assert "SortMergeJoin" in plan, "superstep join is not SMJ"
-    in_mem = plan.index("InMemoryTableScan")
-    smj = plan.index("SortMergeJoin")
-    sections.append(("PageRank superstep: SMJ + partial agg (edge side cached+sorted)", plan))
-    assert smj < in_mem, "unexpected plan shape"
 
     # 5. bucketed warehouse layout: superstep join reads buckets in place
     from citation_graph_spark.edges import write_bucketed

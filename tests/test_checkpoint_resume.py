@@ -10,7 +10,8 @@ import pytest
 from citation_graph_spark import datagen
 from citation_graph_spark.operators.bfs import bfs_expand
 from citation_graph_spark.operators.components import connected_components
-from citation_graph_spark.operators.pagerank import pagerank
+from citation_graph_spark.operators.label_propagation import label_propagation
+from citation_graph_spark.operators.pagerank import pagerank, personalized_pagerank
 from citation_graph_spark.sources.checkpoint import CheckpointManager
 from tests.oracles import connected_components_oracle
 
@@ -66,6 +67,66 @@ def test_pagerank_resume_rejects_mismatched_args(spark, tmp_path):
     # the new run's final durable state
     mgr = CheckpointManager(spark, ck)
     assert max(mgr.iterations()) <= resumed.iterations
+
+
+def _with_sinks(spark, seed):
+    """A power-law graph plus edges into out-degree-0 sinks, so PageRank
+    has dangling mass to carry between supersteps and across a resume."""
+    from pyspark.sql import functions as F
+
+    base = datagen.zipf_edges(spark, 150, 900, seed=seed).select("src", "dst")
+    sinks = spark.range(40).select(
+        (F.col("id") * 3).alias("src"), (F.col("id") + 1000).alias("dst")
+    )
+    return base.unionByName(sinks).distinct().cache()
+
+
+def test_pagerank_durable_every_superstep_is_exact(spark, tmp_path):
+    """Durable saves keep the loop on the in-memory co-partitioned state:
+    saving every superstep gives the same ranks and history, bit for bit,
+    as an uncheckpointed run, and a run stopped after 3 supersteps resumes
+    to those same ranks."""
+    edges = _with_sinks(spark, seed=29)
+    plain = pagerank(edges, tol=1e-7)
+    assert plain.history[1]["dangling_mass"] > 0
+    durable = pagerank(edges, tol=1e-7, checkpoint_dir=str(tmp_path / "a"), durable_every=1)
+    assert _ranks(durable) == _ranks(plain)
+    assert durable.history == plain.history
+
+    ck = str(tmp_path / "b")
+    stopped = pagerank(edges, tol=1e-7, max_iter=3, checkpoint_dir=ck, durable_every=1)
+    assert stopped.iterations == 3 and not stopped.converged
+    resumed = pagerank(edges, tol=1e-7, checkpoint_dir=ck, durable_every=1)
+    assert resumed.history[0]["iteration"] == 4
+    assert resumed.history == plain.history[4:]
+    assert _ranks(resumed) == _ranks(plain)
+    edges.unpersist()
+
+
+_PORTED = {
+    "pagerank": lambda e, ck, s: pagerank(e, tol=1e-6, checkpoint_dir=ck),
+    "personalized_pagerank": lambda e, ck, s: personalized_pagerank(
+        e, sources=s, tol=1e-6, checkpoint_dir=ck
+    ),
+    "connected_components": lambda e, ck, s: connected_components(e, checkpoint_dir=ck),
+    "label_propagation": lambda e, ck, s: label_propagation(e, max_iter=4, checkpoint_dir=ck),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PORTED))
+def test_mismatched_checkpoint_warns_and_starts_fresh(spark, tmp_path, name):
+    """Every superstep-kernel operator warns on a checkpoint written under
+    other args (here: by another algorithm) and starts fresh instead of
+    silently discarding it or blending it into its own run."""
+    edges = datagen.zipf_edges(spark, 60, 300, seed=3).cache()
+    sources = spark.createDataFrame([(0,), (1,)], "id bigint")
+    ck = str(tmp_path / "ck")
+    other = "connected_components" if name == "label_propagation" else "label_propagation"
+    _PORTED[other](edges, ck, sources)
+    with pytest.warns(RuntimeWarning, match="different .*args"):
+        res = _PORTED[name](edges, ck, sources)
+    assert res.history[0]["iteration"] == 0  # fresh run, not a resume
+    edges.unpersist()
 
 
 def test_bfs_resume_continues_deeper(spark, tmp_path):

@@ -99,12 +99,15 @@ def test_prepared_graph_reuse_and_release(spark):
     }
 
     pg = PreparedGraph(edges)
-    shared_pr = _spark_ranks(pagerank(prepared=pg, tol=1e-8))
-    shared_pr2 = _spark_ranks(pagerank(prepared=pg, tol=1e-8))  # statics reused
-    shared_cc = {
-        r["id"]: r["label"]
-        for r in connected_components(prepared=pg).labels.collect()
-    }
+    first, second = (pagerank(prepared=pg, tol=1e-8) for _ in range(2))  # statics reused
+    # history is deterministic: convergence scalars only, no wall-clock
+    assert first.history == second.history
+    assert all(set(h) == {"iteration", "dangling_mass", "delta"} for h in first.history)
+    shared_pr, shared_pr2 = _spark_ranks(first), _spark_ranks(second)
+    cc_first, cc_second = (connected_components(prepared=pg) for _ in range(2))
+    assert cc_first.history == cc_second.history
+    assert all(set(h) == {"iteration", "changed"} for h in cc_first.history)
+    shared_cc = {r["id"]: r["label"] for r in cc_first.labels.collect()}
     assert set(shared_pr) == set(baseline)
     for v in baseline:
         assert math.isclose(shared_pr[v], baseline[v], abs_tol=1e-12), v

@@ -176,3 +176,90 @@ def test_assortativity_single_pass_exact_moments(spark):
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
     assert "Window" not in plan
     assert plan.count("HashAggregate") >= 2
+
+
+def _superstep_plan(spark, pg):
+    """Plan of one PageRank superstep over ``pg``, with the rank state
+    truncated (co-partitioned on id) by the loop's own calls."""
+    from citation_graph_spark.operators.pagerank import superstep_ranks
+    from citation_graph_spark.operators.superstep import (
+        SuperstepContext,
+        copartitioned_planning,
+    )
+
+    ctx = SuperstepContext(num_partitions=pg.num_partitions)
+    state, _ = ctx.truncate(
+        pg.dangling_flagged().select("id", F.lit(1.0).alias("rank"), "is_dangling"), 0
+    )
+    # plan the SECOND superstep: its state is the output of a superstep
+    state, _ = ctx.truncate(
+        superstep_ranks(state, pg.weighted_edges(0), 0, F.lit(0.0), 0.85),
+        1,
+        delta=F.sum("_delta"),
+    )
+    step = superstep_ranks(state, pg.weighted_edges(0), 0, F.lit(0.0), 0.85)
+    with copartitioned_planning(spark, pg.num_partitions):
+        plan = _plan(step, "simple")
+    ctx.cleanup()
+    return plan
+
+
+def test_pagerank_superstep_state_side_has_no_exchange(spark):
+    """The truncated rank state keeps hashpartitioning(id, P) with P the
+    PreparedGraph's partition count — here NOT the session's shuffle
+    partition count — so neither superstep join shuffles the state: the
+    only Exchange outside the edge-cache build is the dst aggregate."""
+    from citation_graph_spark.operators.prepared import PreparedGraph
+
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) != 5
+    pg = PreparedGraph(datagen.zipf_edges(spark, 500, 4_000, seed=3), num_partitions=5)
+    try:
+        plan = _superstep_plan(spark, pg)
+        outside_cache = plan[: plan.index("InMemoryRelation")]
+        assert outside_cache.count("Exchange") == 1, plan
+        assert "Exchange hashpartitioning(dst" in outside_cache, plan
+    finally:
+        pg.unpersist()
+
+
+def test_bucketed_prepared_graph_partitions_match_buckets(spark):
+    """A PreparedGraph over a bucketed edge table takes the bucket count as
+    its partition count, so the state co-partitions with the bucketed
+    edge cache and the superstep still has one Exchange."""
+    from citation_graph_spark.edges import write_bucketed
+    from citation_graph_spark.operators.prepared import PreparedGraph
+
+    spark.sql("DROP TABLE IF EXISTS plans_state_bkt")
+    write_bucketed(datagen.zipf_edges(spark, 500, 4_000, seed=3), "plans_state_bkt", buckets=4)
+    pg = PreparedGraph.from_bucketed_table(spark, "plans_state_bkt")
+    try:
+        assert pg.num_partitions == 4
+        plan = _superstep_plan(spark, pg)
+        outside_cache = plan[: plan.index("InMemoryRelation")]
+        assert outside_cache.count("Exchange") == 1, plan
+    finally:
+        pg.unpersist()
+        spark.sql("DROP TABLE plans_state_bkt")
+
+
+def test_pagerank_runs_one_job_per_superstep(spark):
+    """Convergence scalars ride the job that checkpoints the state (an
+    Observation), so a pagerank call over prebuilt statics runs about one
+    Spark job per superstep, not one per shuffle stage plus scalar reads."""
+    from citation_graph_spark.operators.pagerank import pagerank
+    from citation_graph_spark.operators.prepared import PreparedGraph
+
+    pg = PreparedGraph(datagen.zipf_edges(spark, 300, 3_000, seed=5))
+    pg.weighted_edges(0)
+    pg.dangling_flagged()
+    sc = spark.sparkContext
+    sc.setJobGroup("pagerank-job-count", "pagerank job count")
+    try:
+        res = pagerank(prepared=pg, tol=1e-6)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        pg.unpersist()
+    jobs = sc.statusTracker().getJobIdsForGroup("pagerank-job-count")
+    assert res.converged and res.iterations > 3
+    assert len(jobs) <= res.iterations + 4, (len(jobs), res.iterations)
