@@ -43,6 +43,7 @@ from typing import Any, Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from citation_graph_spark.operators.metrics import _simple_edges
+from citation_graph_spark.operators.superstep import release
 
 _DEC = "decimal(38,0)"
 
@@ -208,10 +209,7 @@ def betweenness(
     )
 
     for fr in levels + [x for x in deltas if x is not None] + old_seen + [seen]:
-        try:
-            fr.unpersist()
-        except Exception:
-            pass
+        release(fr)
     e.unpersist()
     return BetweennessResult(
         scores=scores,

@@ -78,6 +78,15 @@ def bfs_expand(
             },
         )
     ctx = SuperstepContext(checkpoint=ckpt, durable_every=durable_every)
+    latest = ctx.resume(ignore=("max_depth",)) if resume else None
+    if latest is not None:
+        done, visited, metrics = latest
+        if metrics.get("new_vertices") == 0 or done >= max_depth:
+            # Nothing left to expand (frontier died, or the resumed state
+            # already covers the requested depth).
+            visited = visited.where(F.col("depth") <= max_depth)
+            reached = visited.agg(F.max("depth")).first()[0] or 0
+            return BFSResult(visited, int(reached), [])
 
     adj = edges
     if max_per_src is not None:
@@ -87,49 +96,21 @@ def bfs_expand(
     adj = adj.select("src", "dst").repartition(num_partitions, "src").persist()
     adj.count()
 
-    start_level = 0
-    visited = None
-    if ckpt is not None and resume:
-        from citation_graph_spark.sources.checkpoint import resume_compatible
-
-        latest = ckpt.latest()
-        if latest is not None:
-            it, state_df, manifest = latest
-            if resume_compatible(
-                manifest.get("args"), ckpt.args, ignore=("max_depth",)
-            ):
-                visited = state_df
-                start_level = it
-                exhausted = manifest["metrics"].get("new_vertices") == 0
-                if exhausted or it >= max_depth:
-                    # Nothing left to expand (frontier died, or the resumed
-                    # state already covers the requested depth).
-                    adj.unpersist()
-                    visited = visited.where(F.col("depth") <= max_depth)
-                    reached = visited.agg(F.max("depth")).first()[0] or 0
-                    return BFSResult(visited, int(reached), [])
-            else:
-                import warnings
-
-                warnings.warn(
-                    f"checkpoint at {checkpoint_dir} was written with different "
-                    f"args ({manifest.get('args')}) than this call ({ckpt.args}); "
-                    "ignoring it and starting fresh",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-
-    if visited is None:
+    if latest is None:
         id_type = dict(edges.dtypes)["src"]
         visited = spark.createDataFrame(
             [(root, 0, None)], f"id {id_type}, depth int, parent {id_type}"
         )
         visited, _ = ctx.truncate(visited, 0)
-    frontier = visited.where(F.col("depth") == start_level).select("id")
+        ctx.record(visited, 0, {"level": 0, "new_vertices": 1})
+        done = 0
+    else:
+        visited, _ = ctx.truncate(visited, done)
+    frontier = visited.where(F.col("depth") == done).select("id")
 
-    depth_reached = start_level
+    depth_reached = done
     n_new = None
-    for depth in range(start_level, max_depth):
+    for depth in range(done, max_depth):
         candidates = frontier.join(adj, frontier.id == adj.src).select(
             adj.dst.alias("id"), adj.src.alias("parent")
         )
@@ -141,22 +122,23 @@ def bfs_expand(
             .agg(F.min("parent").alias("parent"))
             .select("id", F.lit(depth + 1).alias("depth"), "parent")
         )
-        visited, _ = ctx.truncate(visited.unionByName(new), depth + 1)
-        n_new = visited.where(F.col("depth") == depth + 1).count()
+        visited, seen = ctx.truncate(
+            visited.unionByName(new),
+            depth + 1,
+            new_vertices=F.count(F.when(F.col("depth") == depth + 1, 1)),
+        )
+        n_new = seen["new_vertices"]
         ctx.record(visited, depth + 1, {"level": depth + 1, "new_vertices": n_new})
         if n_new == 0:
             break
         depth_reached = depth + 1
         frontier = visited.where(F.col("depth") == depth + 1).select("id")
 
-    if ckpt is not None:
-        # carry new_vertices into the final manifest: save()'s prune deletes
-        # the level that recorded new_vertices=0, so without this a resume
-        # of an exhausted run could not detect the dead frontier and would
-        # re-execute one wasted empty superstep
-        ctx.finish(
-            visited, depth_reached, {"final": True, "new_vertices": n_new}
-        )
+    # carry new_vertices into the final manifest: save()'s prune deletes the
+    # level that recorded new_vertices=0, so without this a resume of an
+    # exhausted run could not detect the dead frontier and would re-execute
+    # one wasted empty superstep
+    ctx.finish(visited, depth_reached, {"final": True, "new_vertices": n_new})
     adj.unpersist()
     return BFSResult(visited, depth_reached, ctx.history)
 

@@ -197,17 +197,17 @@ def _two_star(
     stars rooted at component minima). Each phase is one groupBy + one
     join — O(log n) rounds total regardless of diameter.
 
-    Checkpoint/resume mirrors ``_hash_min`` (reference analog:
-    ``src/citation_graph/cache_manager.py:221-237``): the durable state is
-    the pointer set; the manifest carries the pointer count + the
-    order-independent xxhash64 checksum, so a resumed run re-enters the
+    Each round is one truncate whose job also observes the fixpoint test's
+    inputs: the pointer count and an order-independent xxhash64 checksum
+    of the pointer set. Resume goes through ``SuperstepContext.resume``
+    (reference analog: ``src/citation_graph/cache_manager.py:221-237``):
+    the durable state is the pointer set, and the resumed state's first
+    truncate observes its checksum, so a resumed run re-enters the
     fixpoint test exactly where the killed run left it. Star rounds are
     deterministic set transforms, so kill/resume is byte-identical to an
     uninterrupted run. This matters precisely here: two-star is the
     long-diameter O(log n) path — the variant an hour-long 100× run uses.
     """
-    import decimal
-
     spark = edges.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -236,34 +236,41 @@ def _two_star(
         verts.unpersist()
         return ComponentsResult(result, it, converged, ctx.history)
 
-    start_iter = 1
-    state = None
-    prev_sum = None
-    if ckpt is not None and resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            it, state_df, manifest = latest
-            from citation_graph_spark.sources.checkpoint import resume_compatible
+    latest = ctx.resume() if resume else None
+    if latest is not None and latest[2].get("converged"):
+        return finish_labels(latest[1], latest[0], True)
 
-            if resume_compatible(manifest.get("args"), ckpt.args):
-                metrics = manifest["metrics"]
-                if metrics.get("converged"):
-                    return finish_labels(state_df, it, True)
-                state = state_df
-                if metrics.get("checksum") is not None:
-                    prev_sum = (
-                        metrics["pointers"],
-                        decimal.Decimal(metrics["checksum"]),
-                    )
-                start_iter = it + 1
+    # pointer count + order-independent checksum, observed by each round's
+    # truncate. Decimal sum: long would overflow under ANSI mode; coalesce
+    # so an empty pointer set checksums to 0, not NULL (manifest JSON)
+    fixpoint = {
+        "pointers": F.count(F.lit(1)),
+        "checksum": F.coalesce(
+            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
+            F.lit(0).cast("decimal(38,0)"),
+        ),
+    }
 
-    # initial pointers: undirected neighbour pairs, both directions —
-    # reuse the PreparedGraph's persisted symmetrized view when available
-    fresh_start = state is None
-    if state is None:
+    def metrics(seen: dict[str, Any], converged: bool) -> dict[str, Any]:
+        return {
+            "pointers": seen["pointers"],
+            "checksum": str(seen["checksum"]),
+            "converged": converged,
+        }
+
+    if latest is None:
+        # initial pointers: undirected neighbour pairs, both directions —
+        # reuse the PreparedGraph's persisted symmetrized view when available
         sym0 = prepared.symmetrized() if prepared is not None else symmetrize(edges)
         pairs = sym0.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        state, _ = ctx.truncate(pairs.repartition(num_partitions, "u"), 0)
+        state, prev = ctx.truncate(pairs.repartition(num_partitions, "u"), 0, **fixpoint)
+        # the iteration-0 manifest lets a run killed before its first
+        # durable round resume too
+        ctx.record(state, 0, metrics(prev, False))
+        done = 0
+    else:
+        done, state, _ = latest
+        state, prev = ctx.truncate(state, done, **fixpoint)
 
     def large_star(p: DataFrame) -> DataFrame:
         # Γ(u) is the SYMMETRIC neighbourhood (each edge contributes both
@@ -295,69 +302,14 @@ def _two_star(
         hang_self = m.select(F.col("u"), F.col("m").alias("v"))
         return hang_nbrs.unionByName(hang_self).distinct()
 
-    def checksum(p: DataFrame):
-        row = p.agg(
-            F.count("*").alias("n"),
-            # decimal sum: long would overflow under ANSI mode; coalesce so
-            # an empty pointer set checksums to 0, not NULL (manifest JSON)
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    if prev_sum is None:
-        # fresh run, or a compatible resume whose manifest predates the
-        # checksum metric: recompute the fixpoint baseline from the state.
-        prev_sum = checksum(state)
-        if fresh_start:
-            # iteration-0 manifest carries the initial checksum so a run
-            # killed before its first durable round still resumes with a
-            # fixpoint test. Recorded ONLY on a genuine fresh start: on a
-            # checksum-less resume this would durably relabel iteration-k
-            # state as iteration 0 and CheckpointManager.save would then
-            # prune every iteration > 0 — deleting the checkpoint just
-            # loaded (ADVICE r04; _hash_min guards with `state is None`).
-            ctx.record(
-                state,
-                0,
-                {
-                    "pointers": prev_sum[0],
-                    "checksum": str(prev_sum[1]),
-                    "converged": False,
-                },
-            )
-    last_sum = prev_sum
-    it = start_iter - 1
-    converged = False
-    for it in range(start_iter, max_iter + 1):
-        state, _ = ctx.truncate(small_star(large_star(state)), it)
-        cur_sum = checksum(state)
-        converged = cur_sum == prev_sum
-        ctx.record(
-            state,
-            it,
-            {
-                "pointers": cur_sum[0],
-                "checksum": str(cur_sum[1]),
-                "converged": converged,
-            },
-        )
-        last_sum = cur_sum
+    seen, it, converged = prev, done, False
+    for it in range(done + 1, max_iter + 1):
+        state, seen = ctx.truncate(small_star(large_star(state)), it, **fixpoint)
+        converged = seen == prev
+        ctx.record(state, it, metrics(seen, converged))
         if converged:
             break
-        prev_sum = cur_sum
+        prev = seen
 
-    if ckpt is not None:
-        ctx.finish(
-            state,
-            it,
-            {
-                "pointers": last_sum[0],
-                "checksum": str(last_sum[1]),
-                "converged": converged,
-                "final": converged,
-            },
-        )
+    ctx.finish(state, it, {**metrics(seen, converged), "final": converged})
     return finish_labels(state, it, converged)

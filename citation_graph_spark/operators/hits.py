@@ -24,19 +24,21 @@ Scale shape per superstep (what runs on 1000 executors):
   ``groupBy(src).sum()``) — each join is a merge-hinted SMJ where ONLY
   the small score frame shuffles, mirroring the PageRank superstep
   (operators/pagerank.py); both aggregations get map-side partials.
-- two driver scalar actions per superstep: the first materializes the
-  truncated raw state and reads both normalization sums (needed before
-  the normalized vectors exist), the second reads the combined L1 delta
-  off the already-cached blocks — a cheap re-aggregation, not a
-  recompute of the joins.
-- lineage truncated per superstep; durable Parquet checkpoints + manifest
-  via the shared CheckpointManager, resume exact (normalization sums are
-  recomputable from the state itself, so no extra metrics are needed).
+- the raw state is checkpointed by ``SuperstepContext.truncate``; two
+  driver scalar actions follow it: the first reads both normalization sums off the checkpointed
+  blocks (needed before the normalized vectors exist), the second reads
+  the combined L1 delta — cheap re-aggregations, not recomputes of the
+  joins. The sums stay plain double actions: an observed sum would merge
+  task results in completion order, and ``exact_sum``'s decimal range
+  does not cover ``hsum`` (up to max in-degree × max out-degree).
+- resume, the args check and durable checkpoints go through
+  ``SuperstepContext`` like every superstep loop; resume is exact (the
+  normalization sums are recomputable from the state itself, so the
+  manifest needs only the L1 delta).
 """
 
 from __future__ import annotations
 
-import time as _time
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -83,30 +85,14 @@ def hits(
             args={"algorithm": "hits", "tol": tol, "max_iter": max_iter},
         )
     ctx = SuperstepContext(checkpoint=ckpt, durable_every=durable_every)
-
-    start_iter = 1
-    state = None
-    resumed_delta = None
-    if ckpt is not None and resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            it, state_df, manifest = latest
-            from citation_graph_spark.sources.checkpoint import resume_compatible
-
-            if resume_compatible(manifest.get("args"), ckpt.args):
-                prev_delta = manifest["metrics"].get("delta")
-                if prev_delta is not None and float(prev_delta) < tol:
-                    return HITSResult(
-                        state_df.select("id", "auth", "hub"),
-                        it,
-                        float(prev_delta),
-                        True,
-                        [],
-                    )
-                state = state_df
-                start_iter = it + 1
-                if prev_delta is not None:
-                    resumed_delta = float(prev_delta)
+    latest = ctx.resume() if resume else None
+    delta = float("inf")
+    if latest is not None:
+        done, state, metrics = latest
+        if metrics.get("delta") is not None:
+            delta = float(metrics["delta"])
+            if delta < tol:
+                return HITSResult(state.select("id", "auth", "hub"), done, delta, True, [])
 
     # --- static per-run tables: the same edge rows cached in BOTH join
     # layouts (src-sorted for the authority step, dst-sorted for the hub
@@ -134,7 +120,7 @@ def hits(
             )
             return HITSResult(empty, 0, 0.0, True, [])
 
-        if state is None:
+        if latest is None:
             state = vertices_of(edges).select(
                 "id",
                 F.lit(0.0).alias("auth"),
@@ -142,22 +128,20 @@ def hits(
             )
             state, _ = ctx.truncate(state, 0)
             ctx.record(state, 0, {"delta": None})
+            done = 0
+        else:
+            state, _ = ctx.truncate(state, done)
 
-        delta = float("inf") if resumed_delta is None else resumed_delta
-        it = start_iter - 1
-        for it in range(start_iter, max_iter + 1):
-            _t_iter = _time.time()
+        it = done
+        for it in range(done + 1, max_iter + 1):
             # authority step: push hub scores along out-edges
             a_raw = (
                 state.join(by_src.hint("merge"), state.id == F.col("a_src"))
                 .groupBy(F.col("a_dst").alias("id"))
                 .agg(F.sum("hub").alias("a_raw"))
             )
-            # hub step folded into the same plan: normalize a_raw lazily via
-            # a scalar subquery-free two-phase — materialize a_raw's sum and
-            # the new state in ONE action at the end of the superstep. To
-            # keep a single action per superstep, normalize with window-free
-            # algebra: carry raw sums and divide after reading the totals.
+            # hub step folded into the same plan: carry the raw sums and
+            # divide after reading the totals off the truncated state
             a_state = (
                 state.join(a_raw.hint("merge"), "id", "left")
                 .select(
@@ -186,7 +170,7 @@ def hits(
                 )
             )
             raw, _ = ctx.truncate(raw, it)
-            # ONE driver action: both normalization sums
+            # first driver action: both normalization sums
             row = raw.agg(
                 F.sum("a_raw").alias("asum"), F.sum("h_raw").alias("hsum")
             ).first()
@@ -207,17 +191,12 @@ def hits(
                 new_state.agg(F.sum("_delta")).first()[0] or 0.0
             )
             state = new_state.drop("_delta")
-            ctx.record(
-                state,
-                it,
-                {"delta": delta, "seconds": round(_time.time() - _t_iter, 3)},
-            )
+            ctx.record(state, it, {"delta": delta})
             if delta < tol:
                 break
 
         converged = delta < tol
-        if ckpt is not None:
-            ctx.finish(state, it, {"delta": delta, "final": converged})
+        ctx.finish(state, it, {"delta": delta, "final": converged})
         return HITSResult(
             state.select("id", "auth", "hub"), it, delta, converged, ctx.history
         )

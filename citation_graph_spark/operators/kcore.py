@@ -12,8 +12,7 @@ set; each round compute every vertex's degree within the current edge
 set, drop vertices with degree < k, and restrict the edge set to
 surviving endpoints. Any vertex the filter drops has 1 ≤ degree < k, so
 its edges leave the set — the edge count strictly decreases until the
-fixpoint, which makes the (already materialized) per-round edge count
-the convergence test for free. Round count is bounded by the peel depth,
+fixpoint, which makes the per-round edge count the convergence test. Round count is bounded by the peel depth,
 small in practice (web/citation graphs: a handful of rounds).
 
 Scale shape per superstep (what runs on 1000 executors):
@@ -22,10 +21,9 @@ Scale shape per superstep (what runs on 1000 executors):
   aggregation yields undirected degrees.
 - two semi-joins (src ∈ survivors, dst ∈ survivors) restrict the edge
   set; survivors shrinks every round and never carries payload columns.
-- one driver scalar action per superstep (edge count — which also
-  materializes the lazily localCheckpoint-ed new state, same one-job
-  discipline as the pagerank loop) drives the fixpoint test; lineage
-  truncated per superstep via the shared ``SuperstepContext``.
+- no scalar action: ``SuperstepContext.truncate`` checkpoints the new
+  edge set and observes its edge count in the same job (under AQE, one
+  job per shuffle stage of the superstep plus the checkpoint job).
 
 Durable checkpointing is deliberately omitted: peel states are derived
 data recomputable from the edge table, and rounds are seconds even at
@@ -35,7 +33,6 @@ machinery for the states that need it (sources/checkpoint.py).
 
 from __future__ import annotations
 
-import time as _time
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -76,14 +73,13 @@ def k_core(
     # both directions present, deduped, self-loops dropped → one
     # groupBy(src) == undirected degree
     state = symmetrize(edges).repartition(num_partitions, "src")
-    state, _ = ctx.truncate(state, 0)
-    prev_ne = state.count()
+    state, seen = ctx.truncate(state, 0, edges=F.count(F.lit(1)))
+    prev_ne = seen["edges"]
     ctx.record(state, 0, {"edges": prev_ne})
 
     it = 0
     converged = prev_ne == 0
     for it in range(1, (max_iter if not converged else 0) + 1):
-        _t_iter = _time.time()
         deg = state.groupBy("src").agg(F.count("*").alias("degree"))
         survivors = deg.where(F.col("degree") >= k).select(
             F.col("src").alias("id")
@@ -91,17 +87,9 @@ def k_core(
         new_state = state.join(
             survivors, state.src == survivors.id, "left_semi"
         ).join(survivors, F.col("dst") == survivors.id, "left_semi")
-        state, _ = ctx.truncate(new_state, it)
-        ne = state.count()  # materializes the truncated state
-        ctx.record(
-            state,
-            it,
-            {
-                "edges": ne,
-                "dropped_edges": prev_ne - ne,
-                "seconds": round(_time.time() - _t_iter, 3),
-            },
-        )
+        state, seen = ctx.truncate(new_state, it, edges=F.count(F.lit(1)))
+        ne = seen["edges"]
+        ctx.record(state, it, {"edges": ne, "dropped_edges": prev_ne - ne})
         done = ne == prev_ne or ne == 0
         prev_ne = ne
         if done:

@@ -47,7 +47,7 @@ from typing import Any
 from pyspark.sql import DataFrame, functions as F
 
 from citation_graph_spark.edges import vertices_of
-from citation_graph_spark.operators.superstep import SuperstepContext
+from citation_graph_spark.operators.superstep import SuperstepContext, release
 
 # P(register bit b set) = 2^-(b+1); 32 bits bounds counts ~2^30 — beyond
 # that use more registers, not deeper bits (HyperANF §2)
@@ -127,7 +127,6 @@ def hyperanf(
         state.write.mode("overwrite").parquet(registers_out)
         state = spark.read.parquet(registers_out)
     state, _ = ctx.truncate(state, 0)
-    state.count()
     ctx.record(state, 0)
 
     import time as _time
@@ -189,16 +188,10 @@ def hyperanf(
                     break
         per_vertex = union.localCheckpoint(eager=True)
         for s in per_d:
-            try:
-                s.unpersist()
-            except Exception:
-                pass
+            release(s)
         return HyperAnfResult(per_vertex, nf, eff, history)
     finally:
-        try:
-            e.unpersist()
-        except Exception:
-            pass
+        release(e)
         ctx.cleanup()
 
 
@@ -272,14 +265,8 @@ def neighborhood_function_exact(edges: DataFrame, max_d: int = 4) -> DataFrame:
         reach = grown.localCheckpoint(eager=False)
         rows.append((d, reach.count()))
         if prev is not None:
-            try:
-                prev.unpersist()
-            except Exception:
-                pass
+            release(prev)
         prev = reach
     if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
+        release(prev)
     return spark.createDataFrame(rows, "d int, pairs long")

@@ -26,10 +26,12 @@ repeat until no active vertices:
   4. Marked vertices are assigned ``scc = color``; they and their edges
      leave the active subgraph.
 
-Every phase's fixpoint is a driver-side changed-count scalar; state
-lineage is truncated per superstep via :class:`SuperstepContext` exactly
-like PageRank/CC. The final labels are canonicalized to ``min(id in
-SCC)`` (one groupBy) so the convention matches ``connected_components``.
+No superstep runs a scalar action: ``SuperstepContext.truncate``
+checkpoints the state and observes the phase's changed count (and the
+active / marked vertex counts) in that same job, like PageRank/CC; the
+trim pass counts its singletons the same way (``local_checkpoint``). The
+final labels are canonicalized to ``min(id in SCC)`` (one groupBy) so the
+convention matches ``connected_components``.
 
 Scale shape: the active edge set shrinks monotonically and is
 re-persisted sorted by src AND by dst once per round (coloring joins on
@@ -52,7 +54,12 @@ from typing import Any
 from pyspark.sql import DataFrame, functions as F
 
 from citation_graph_spark.edges import vertices_of
-from citation_graph_spark.operators.superstep import SuperstepContext
+from citation_graph_spark.operators.superstep import (
+    SuperstepContext,
+    count_true,
+    local_checkpoint,
+    release,
+)
 
 
 @dataclass
@@ -125,10 +132,10 @@ def strongly_connected_components(
                 # unpersists superseded supersteps, and an unpersisted
                 # localCheckpoint is not recomputable — eager-checkpoint
                 # what outlives the loop (released after the final union)
-                dead = dead.localCheckpoint(eager=True)
-                n_dead = dead.count()
+                dead, seen = local_checkpoint(dead, n=F.count(F.lit(1)))
+                n_dead = seen["n"]
                 if n_dead == 0:
-                    dead.unpersist()
+                    release(dead)
                     break
                 trimmed_total += n_dead
                 assigned_parts.append(dead)
@@ -162,8 +169,8 @@ def strongly_connected_components(
                 .select("id", F.col("id").alias("color"))
             )
             step += 1
-            state, _ = ctx.truncate(state, step)
-            n_active = state.count()
+            state, seen = ctx.truncate(state, step, n=F.count(F.lit(1)))
+            n_active = seen["n"]
             ctx.record(state, step)
             round_metrics["active_vertices"] = n_active
 
@@ -184,19 +191,18 @@ def strongly_connected_components(
                     ),
                 )
                 step += 1
-                new_state, _ = ctx.truncate(new_state, step)
-                changed = new_state.where("_changed").count()
-                state = new_state.drop("_changed")
+                state, seen = ctx.truncate(
+                    new_state, step, changed=count_true("_changed")
+                )
                 ctx.record(state, step)
-                if changed == 0:
+                if seen["changed"] == 0:
                     break
             round_metrics["color_iters"] = color_iters
 
             # --- 3. backward mark within color class, seeded at the roots
             state = state.withColumn("marked", F.col("color") == F.col("id"))
             step += 1
-            state, _ = ctx.truncate(state, step)
-            state.count()
+            state, seen = ctx.truncate(state, step, marked=count_true("marked"))
             ctx.record(state, step)
 
             mark_iters = 0
@@ -227,17 +233,20 @@ def strongly_connected_components(
                     (~F.col("marked") & msgs.mcolor.isNotNull()).alias("_changed"),
                 )
                 step += 1
-                new_state, _ = ctx.truncate(new_state, step)
-                changed = new_state.where("_changed").count()
-                state = new_state.drop("_changed")
+                state, seen = ctx.truncate(
+                    new_state,
+                    step,
+                    changed=count_true("_changed"),
+                    marked=count_true("marked"),
+                )
                 ctx.record(state, step)
-                if changed == 0:
+                if seen["changed"] == 0:
                     break
             round_metrics["mark_iters"] = mark_iters
 
             done = state.where("marked").select("id", F.col("color").alias("scc"))
             done = done.localCheckpoint(eager=True)  # outlives the ctx chain
-            n_done = done.count()
+            n_done = seen["marked"]
             round_metrics["assigned"] = n_done
             assigned_parts.append(done)
             history.append(round_metrics)
@@ -291,14 +300,8 @@ def strongly_connected_components(
         # materialize before unpersisting the lineage the join depends on
         labels = labels.localCheckpoint(eager=True)
         for part in assigned_parts:
-            try:
-                part.unpersist()
-            except Exception:
-                pass
+            release(part)
         return SccResult(labels, rounds, converged, history)
     finally:
-        try:
-            active_e.unpersist()
-        except Exception:
-            pass
+        release(active_e)
         ctx.cleanup()

@@ -11,15 +11,15 @@ Non-negative weights assumed (documented; negative-cycle detection is a
 Like every iterative operator in this engine (see
 ``operators/superstep.py``): the relax join is a plain equi-join of the
 frontier against the edge table (SMJ/shuffle-hash, AQE skew-split for hub
-vertices), the min-merge is a map-side-partial groupBy, convergence is
-ONE driver scalar per superstep (the improved-row count — read off the
-frame that must materialize anyway), and state lineage is truncated per
-round via ``localCheckpoint``. State is split settled/active (r06): only
-the IMPROVED rows materialize each round; the full |roots|x|V| merge
-runs only when an update is state-sized (early flood-fill rounds) or at
-compaction. Integer weights stay integer-exact
-end to end (``long`` distances — no float accumulation), which is what
-lets the driver cell hash-match a SQL replay bit for bit.
+vertices), the min-merge is a map-side-partial groupBy, and the improved
+rows of a round are checkpointed by the job that also observes
+their count (the convergence test) — no scalar action of its own. State
+is split settled/active (r06): only the IMPROVED rows materialize each
+round; the full |roots|x|V| merge runs only when an update is
+state-sized (early flood-fill rounds) or at compaction. Integer weights
+stay integer-exact end to end (``long`` distances — no float
+accumulation), which is what lets the driver cell hash-match a SQL
+replay bit for bit.
 
 The reference engine has no weighted-path analog (its traversal is
 unweighted depth expansion, ``src/citation_graph/traverser.py:132-145``);
@@ -33,7 +33,11 @@ from typing import Any, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from citation_graph_spark.operators.superstep import SuperstepContext
+from citation_graph_spark.operators.superstep import (
+    SuperstepContext,
+    local_checkpoint,
+    release,
+)
 
 
 @dataclass
@@ -121,7 +125,6 @@ def sssp(
     base: DataFrame | None = None
     base_rows = 0
     delta: DataFrame | None = None
-    delta_rows = 0
     old_delta: DataFrame | None = None
 
     def set_base(df: DataFrame) -> DataFrame:
@@ -134,29 +137,20 @@ def sssp(
         )
         base_rows = base.count()
         if prev is not None:
-            try:
-                prev.unpersist()
-            except Exception:
-                pass
+            release(prev)
         return base
 
     def swap_delta(df: DataFrame | None) -> None:
         nonlocal delta, old_delta
         if old_delta is not None:
-            try:
-                old_delta.unpersist()
-            except Exception:
-                pass
+            release(old_delta)
         old_delta = delta
         delta = df
 
     try:
         set_base(state0)
         frontier = state0.localCheckpoint(eager=True)
-        import time as _time
-
         for r in range(1, max_rounds + 1):
-            _t_round = _time.time()
             cand = (
                 frontier.join(e.hint("merge"), frontier["id"] == e["src"])
                 .groupBy("root", F.col("dst").alias("vid"))
@@ -186,57 +180,41 @@ def sssp(
                 )
                 .select("root", "id", F.col("cand_dist").alias("dist"))
             )
-            imp, _ = ctx.truncate(imp, r)
-            n_improved = imp.count()  # one driver action per round
+            imp, seen = ctx.truncate(imp, r, improved=F.count(F.lit(1)))
+            n_improved = seen["improved"]
             rounds = r
-            _secs = lambda: round(_time.time() - _t_round, 3)  # noqa: E731
+            metrics: dict[str, Any] = {"improved": n_improved}
             if n_improved == 0:
-                ctx.record(imp, r, {"improved": 0, "seconds": _secs()})
+                ctx.record(imp, r, metrics)
                 converged = True
                 break
             frontier = imp
             if delta is None and n_improved * 2 > base_rows:
                 # state-sized update: fold straight into a fresh base
                 set_base(full_merge(base, imp))
-                ctx.record(
-                    imp,
-                    r,
-                    {"improved": n_improved, "compacted": True, "seconds": _secs()},
-                )
+                metrics["compacted"] = True
             else:
                 # delta is its own checkpoint copy, never an alias of the
                 # ctx-chain frame: ctx unpersists the previous round's imp
                 # blocks one round later, while delta may be read for many
-                # rounds (and by the final merge)
-                merged_delta = (
+                # rounds (and by the final merge). Its exact row count
+                # (re-improved (root, id) rows collapse) rides that job.
+                merged_delta, seen = local_checkpoint(
                     imp.select("root", "id", "dist")
                     if delta is None
                     else delta.unionByName(imp)
                     .groupBy("root", "id")
-                    .agg(F.min("dist").alias("dist"))
-                ).localCheckpoint(eager=True)
+                    .agg(F.min("dist").alias("dist")),
+                    rows=F.count(F.lit(1)),
+                )
                 swap_delta(merged_delta)
-                delta_rows += n_improved  # upper bound (overlaps collapse)
-                if delta_rows * 2 > base_rows:
+                if seen["rows"] * 2 > base_rows:
                     set_base(full_merge(base, delta))
                     swap_delta(None)
-                    delta_rows = 0
-                    ctx.record(
-                        imp,
-                        r,
-                        {
-                            "improved": n_improved,
-                            "compacted": True,
-                            "seconds": _secs(),
-                        },
-                    )
-                else:
-                    ctx.record(
-                        imp, r, {"improved": n_improved, "seconds": _secs()}
-                    )
+                    metrics["compacted"] = True
+            ctx.record(imp, r, metrics)
         state = base if delta is None else full_merge(base, delta)
         dist_out = state.localCheckpoint(eager=True)
-        dist_out.count()
         return SsspResult(
             distances=dist_out,
             rounds=rounds,
@@ -247,8 +225,5 @@ def sssp(
         ctx.cleanup()
         for df in (old_delta, delta, base):
             if df is not None:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
+                release(df)
         e.unpersist()

@@ -10,9 +10,11 @@ driver and owns exactly the things Catalyst cannot:
   args match this run's; a checkpoint written under other args is ignored
   with a ``RuntimeWarning`` and the run starts fresh,
 - **ending a superstep in one Spark job** — ``truncate`` attaches the
-  caller's convergence aggregates (L1 delta, dangling mass, changed count)
-  as a ``pyspark.sql.Observation``, so they ride the job that materializes
-  the state instead of costing a scalar action of their own; for loops
+  caller's convergence aggregates (L1 delta, dangling mass, changed or row
+  count, checksum) as a ``pyspark.sql.Observation``, so they ride the job
+  that materializes the state instead of costing a scalar action of their
+  own (``local_checkpoint`` does the same for frames outside the loop's
+  state chain); for loops
   whose state is keyed on ``id`` it also hash-partitions the state on
   ``id`` into the edge caches' partition count (see
   ``copartitioned_planning``), so the next superstep's joins against the
@@ -93,9 +95,35 @@ def exact_sum(col: Column) -> Column:
     return F.sum(col.cast("decimal(38,30)")).cast("double")
 
 
-def _unpersist(df: DataFrame) -> None:
-    """Release ``df``'s blocks; a stopped session has nothing left to
-    release, anything else is logged."""
+def local_checkpoint(
+    df: DataFrame, num_partitions: int | None = None, **observe: Column
+) -> tuple[DataFrame, dict[str, Any]]:
+    """Materialize ``df`` in ONE Spark job as an eager ``localCheckpoint``;
+    return it with the values of the ``observe`` aggregates (name →
+    aggregate Column) computed over ``df`` by that same job.
+
+    Columns whose names start with ``_`` exist only to feed the observed
+    aggregates and are dropped before the checkpoint. With
+    ``num_partitions`` set, ``df`` is keyed on ``id``: it is repartitioned
+    on ``id`` and checkpointed under ``copartitioned_planning`` (the
+    repartition is elided by the planner when ``df`` already has that
+    partitioning)."""
+    observation = None
+    if observe:
+        observation = Observation()
+        df = df.observe(observation, *[agg.alias(name) for name, agg in observe.items()])
+        df = df.select(*[c for c in df.columns if not c.startswith("_")])
+    if num_partitions is None:
+        out = df.localCheckpoint(eager=True)
+    else:
+        with copartitioned_planning(df.sparkSession, num_partitions):
+            out = df.repartition(num_partitions, "id").localCheckpoint(eager=True)
+    return out, (observation.get if observation is not None else {})
+
+
+def release(df: DataFrame) -> None:
+    """Release ``df``'s cached or checkpointed blocks; a stopped session has
+    nothing left to release, anything else is logged."""
     try:
         df.unpersist()
     except Py4JError:
@@ -125,14 +153,17 @@ class SuperstepContext:
     _last: DataFrame | None = None
     _pending_unpersist: DataFrame | None = None
 
-    def resume(self) -> tuple[int, DataFrame, dict[str, Any]] | None:
+    def resume(
+        self, ignore: tuple[str, ...] = ("max_iter", "tol")
+    ) -> tuple[int, DataFrame, dict[str, Any]] | None:
         """``(iteration, state, metrics)`` of the newest valid durable
         state, or None when there is none or it was written under other
         args (``resume_compatible``: every recorded hyperparameter must
         match — resuming a checkpoint written under different parameters
-        would blend two different fixpoints; ``max_iter``/``tol`` are
-        continuation knobs and may differ). A mismatch warns; the fresh run
-        then prunes the dead timeline on its first durable save.
+        would blend two different fixpoints; the ``ignore`` args are
+        continuation knobs and may differ, by default ``max_iter``/``tol``).
+        A mismatch warns; the fresh run then prunes the dead timeline on its
+        first durable save.
 
         The returned state is the raw Parquet scan: a caller that goes on
         iterating sends it through ``truncate`` once."""
@@ -142,7 +173,7 @@ class SuperstepContext:
         if latest is None:
             return None
         iteration, state, manifest = latest
-        if not resume_compatible(manifest.get("args"), self.checkpoint.args):
+        if not resume_compatible(manifest.get("args"), self.checkpoint.args, ignore):
             warnings.warn(
                 f"checkpoint at {self.checkpoint.path} was written with different "
                 f"args ({manifest.get('args')}) than this call "
@@ -156,17 +187,10 @@ class SuperstepContext:
     def truncate(
         self, state: DataFrame, iteration: int, **observe: Column
     ) -> tuple[DataFrame, dict[str, Any]]:
-        """End a superstep: materialize ``state`` in ONE Spark job and cut
-        its lineage; return it with the values of the ``observe``
-        aggregates (name → aggregate Column) computed over ``state`` by
-        that same job.
-
-        Columns whose names start with ``_`` exist only to feed the
-        observed aggregates and are dropped before the checkpoint. With
-        ``num_partitions`` set, the state is repartitioned on ``id`` and
-        checkpointed under ``copartitioned_planning``; the repartition is
-        elided by the planner when the superstep already produced that
-        partitioning (the usual case: the last join is on ``id``).
+        """End a superstep: ``local_checkpoint`` the state (one Spark job
+        that also computes the ``observe`` aggregates; partitioned on
+        ``id`` when ``num_partitions`` is set — usually already true, the
+        last join being on ``id``) and return it with the observed values.
 
         Eager materialization (round 6 A/B, 5-superstep PageRank loops, 8M
         edges, local[32]: min 3.32 s eager vs 5.88 s lazy) keeps the state
@@ -178,23 +202,10 @@ class SuperstepContext:
         materializes would lose data. Leaving superseded blocks cached is
         not an option either — block churn degrades iteration time
         severalfold within ~10 supersteps (measured)."""
-        observation = None
-        if observe:
-            observation = Observation()
-            state = state.observe(
-                observation, *[agg.alias(name) for name, agg in observe.items()]
-            )
-            state = state.select(*[c for c in state.columns if not c.startswith("_")])
-        if self.num_partitions is None:
-            new_state = state.localCheckpoint(eager=True)
-        else:
-            with copartitioned_planning(state.sparkSession, self.num_partitions):
-                new_state = state.repartition(self.num_partitions, "id").localCheckpoint(
-                    eager=True
-                )
+        new_state, seen = local_checkpoint(state, self.num_partitions, **observe)
         self._pending_unpersist = self._last
         self._last = new_state
-        return new_state, (observation.get if observation is not None else {})
+        return new_state, seen
 
     def record(
         self,
@@ -208,7 +219,7 @@ class SuperstepContext:
         iterating on the in-memory ``state``, which keeps its partitioning;
         a re-read of the Parquet copy would not."""
         if self._pending_unpersist is not None:
-            _unpersist(self._pending_unpersist)
+            release(self._pending_unpersist)
             self._pending_unpersist = None
         self.history.append({"iteration": iteration, **(metrics or {})})
         if (
@@ -227,5 +238,5 @@ class SuperstepContext:
 
     def cleanup(self) -> None:
         if self._last is not None:
-            _unpersist(self._last)
+            release(self._last)
             self._last = None

@@ -31,6 +31,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
 
+from citation_graph_spark.operators.superstep import release
+
 _P = 2_147_483_647  # 2^31 - 1 (prime)
 _K1 = 1_103_515_245
 _K2 = 12_345
@@ -141,8 +143,5 @@ def random_walks(
         )
     finally:
         for fr in steps:
-            try:
-                fr.unpersist()
-            except Exception:
-                pass
+            release(fr)
         e.unpersist()

@@ -10,6 +10,7 @@ import pytest
 from citation_graph_spark import datagen
 from citation_graph_spark.operators.bfs import bfs_expand
 from citation_graph_spark.operators.components import connected_components
+from citation_graph_spark.operators.hits import hits
 from citation_graph_spark.operators.label_propagation import label_propagation
 from citation_graph_spark.operators.pagerank import pagerank, personalized_pagerank
 from citation_graph_spark.sources.checkpoint import CheckpointManager
@@ -110,6 +111,11 @@ _PORTED = {
     ),
     "connected_components": lambda e, ck, s: connected_components(e, checkpoint_dir=ck),
     "label_propagation": lambda e, ck, s: label_propagation(e, max_iter=4, checkpoint_dir=ck),
+    "hits": lambda e, ck, s: hits(e, max_iter=3, checkpoint_dir=ck),
+    "bfs_expand": lambda e, ck, s: bfs_expand(e, root=0, max_depth=3, checkpoint_dir=ck),
+    "cc_two_star": lambda e, ck, s: connected_components(
+        e, algorithm="two_star", checkpoint_dir=ck
+    ),
 }
 
 

@@ -36,6 +36,7 @@ def test_zipf_matches_oracle_fixed_iters(spark):
     elist = _edge_list(edges)
     res = hits(edges, tol=0.0, max_iter=5)
     assert res.iterations == 5 and not res.converged
+    assert hits(edges, tol=0.0, max_iter=5).history == res.history  # no wall-clock fields
     got = _scores(res)
     exp, _ = hits_oracle(elist, tol=0.0, max_iter=5)
     assert set(got) == set(exp)

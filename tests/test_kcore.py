@@ -26,6 +26,7 @@ def test_triangle_with_pendant_chain(spark):
     res = k_core(edges, k=2)
     assert res.converged
     assert _core(res) == {0: 2, 1: 2, 2: 2}
+    assert k_core(edges, k=2).history == res.history  # no wall-clock fields
     # the one-shot filter would have kept vertex 3 (degree 2 initially):
     # two rounds of peeling were required
     assert res.iterations >= 2

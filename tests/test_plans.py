@@ -14,9 +14,15 @@ import io
 from contextlib import redirect_stdout
 
 import pyspark.sql.functions as F
+import pytest
 
 from citation_graph_spark import datagen
 from citation_graph_spark.edges import dedup_edges, out_degrees
+from citation_graph_spark.operators.bfs import bfs_expand
+from citation_graph_spark.operators.components import connected_components
+from citation_graph_spark.operators.kcore import k_core
+from citation_graph_spark.operators.scc import strongly_connected_components
+from citation_graph_spark.operators.sssp import sssp
 
 
 def _plan(df, mode="formatted") -> str:
@@ -263,3 +269,42 @@ def test_pagerank_runs_one_job_per_superstep(spark):
     jobs = sc.statusTracker().getJobIdsForGroup("pagerank-job-count")
     assert res.converged and res.iterations > 3
     assert len(jobs) <= res.iterations + 4, (len(jobs), res.iterations)
+
+
+def _weighted_zipf(spark):
+    edges = datagen.zipf_edges(spark, 300, 3_000, seed=5)
+    return edges.withColumn("weight", F.abs(F.xxhash64("src", "dst")) % 9 + 1)
+
+
+# operator -> (call, job bound). The bounds hold for this fixed graph with
+# every convergence scalar observed by the job that checkpoints its
+# superstep; a scalar action after each checkpoint costs 1-2 more jobs a
+# superstep and breaks them.
+_JOB_BOUNDS = {
+    "bfs": (lambda e: bfs_expand(e, root=0, max_depth=8), 40),
+    "cc_two_star": (lambda e: connected_components(e, algorithm="two_star"), 26),
+    "kcore": (lambda e: k_core(e, k=5), 8),
+    "scc": (strongly_connected_components, 69),
+    "sssp": (lambda e: sssp(e, roots=[0, 1, 2, 3]), 83),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_JOB_BOUNDS))
+def test_superstep_scalars_ride_the_checkpoint_job(spark, name):
+    """Convergence scalars (new vertices, pointer checksum, edge count,
+    changed counts, improved rows) are observed by the job that
+    checkpoints the superstep, not read back by a scalar action."""
+    call, bound = _JOB_BOUNDS[name]
+    edges = _weighted_zipf(spark).cache()
+    edges.count()
+    sc = spark.sparkContext
+    group = f"{name}-job-count"
+    sc.setJobGroup(group, group)
+    try:
+        call(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        edges.unpersist()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= bound, (len(jobs), bound)

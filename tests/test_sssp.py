@@ -44,6 +44,7 @@ def test_sssp_closed_form_path(spark):
     got = {(r["root"], r["id"]): r["dist"] for r in res.distances.collect()}
     assert got == {(1, 1): 0, (1, 2): 2, (1, 3): 5}
     assert res.converged
+    assert sssp(edges, roots=[1]).history == res.history  # no wall-clock fields
 
 
 def test_sssp_parallel_edges_keep_cheapest(spark):
@@ -87,3 +88,28 @@ def test_sssp_unit_weights_match_bfs_depth(spark):
     )
     got = {r["id"]: r["dist"] for r in sssp(edges, roots=[1]).distances.collect()}
     assert got == {1: 0, 2: 1, 3: 1, 4: 2}
+
+
+def test_sssp_compacts_on_exact_delta_rows(spark):
+    """The settled base absorbs the delta only once the delta's exact row
+    count exceeds half the base. Here one target is re-improved every
+    round, so summing the per-round improved counts would overstate the
+    delta by one row a round and compact early.
+
+    Root 0 reaches 8 sinks and a chain 1..8 at distance 1, and target 50
+    at 100. Chain vertex i (distance i) offers 50 at i + 100 - 10i, so 50
+    improves every round. Round 1 improves 10 rows and folds them into a
+    base of 11. Rounds 2..6 each add the next chain vertex and re-improve
+    50: the exact delta is 2, 3, 4, 5, 6 rows (the improved counts sum to
+    2, 4, 6, ...), so it first exceeds 11/2 in round 6 (the sum would in
+    round 4). The base then has 16 rows, and rounds 7..9 leave 3 delta
+    rows."""
+    rows = [(0, 100 + j, 1) for j in range(8)] + [(0, 1, 1), (0, 50, 100)]
+    rows += [(i, i + 1, 1) for i in range(1, 8)]
+    rows += [(i, 50, 100 - 10 * i) for i in range(1, 9)]
+    edges = spark.createDataFrame(rows, "src long, dst long, weight long")
+    res = sssp(edges, roots=[0])
+    assert res.converged
+    assert [h["iteration"] for h in res.history if h.get("compacted")] == [1, 6]
+    got = {r["id"]: r["dist"] for r in res.distances.collect()}
+    assert got == dijkstra_oracle(rows, 0)
