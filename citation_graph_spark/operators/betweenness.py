@@ -43,7 +43,7 @@ from typing import Any, Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from citation_graph_spark.operators.metrics import _simple_edges
-from citation_graph_spark.operators.superstep import release
+from citation_graph_spark.operators.superstep import local_checkpoint, release
 
 _DEC = "decimal(38,0)"
 
@@ -97,11 +97,9 @@ def betweenness(
             [(int(r),) for r in sorted(set(int(r) for r in roots))], "root long"
         )
 
-    level0 = root_df.select(
-        "root",
-        F.col("root").alias("id"),
-        F.lit(1).cast(_DEC).alias("sigma"),
-    ).localCheckpoint(eager=True)
+    origin = root_df.select("root", F.col("root").alias("id"), F.lit(1).cast(_DEC).alias("sigma"))
+    level0, observed = local_checkpoint(origin, n=F.count(F.lit(1)))
+    n_roots = observed["n"]
 
     levels: list[DataFrame] = [level0]
     seen = level0.select("root", "id").localCheckpoint(eager=True)
@@ -116,10 +114,10 @@ def betweenness(
             .agg(F.sum("sigma").alias("sigma"))
             .withColumnRenamed("vid", "id")
         )
-        nxt = cand.join(seen, ["root", "id"], "left_anti").localCheckpoint(
-            eager=True
+        nxt, observed = local_checkpoint(
+            cand.join(seen, ["root", "id"], "left_anti"), n=F.count(F.lit(1))
         )
-        n = nxt.count()
+        n = observed["n"]
         history.append({"superstep": f"forward_{d}", "frontier_rows": n})
         if n == 0:
             nxt.unpersist()
@@ -214,6 +212,6 @@ def betweenness(
     return BetweennessResult(
         scores=scores,
         per_vertex=per_vertex,
-        n_roots=level0.count(),
+        n_roots=n_roots,
         history=history,
     )

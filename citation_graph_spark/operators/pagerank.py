@@ -39,7 +39,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from citation_graph_spark.operators.prepared import PreparedGraph, superstep_contribs
 from citation_graph_spark.operators.superstep import SuperstepContext, exact_sum
-from citation_graph_spark.sources.checkpoint import CheckpointManager
+from citation_graph_spark.sources.checkpoint import CheckpointManager, resume_compatible
 
 
 @dataclass
@@ -253,14 +253,9 @@ def _resolve_auto_salt(
     silently discard the checkpoint. Only a fresh run (no compatible
     manifest) probes + measures."""
     if checkpoint_dir is not None:
-        from citation_graph_spark.sources.checkpoint import (
-            CheckpointManager,
-            resume_compatible,
-        )
-
-        manifest = CheckpointManager(spark, checkpoint_dir).peek_latest_manifest()
-        if manifest is not None:
-            margs = dict(manifest.get("args") or {})
+        latest = CheckpointManager(spark, checkpoint_dir).latest()
+        if latest is not None:
+            margs = dict(latest[2].get("args") or {})
             recorded = margs.get("salt_factor")
             want = {"algorithm": "pagerank", **call_args, "salt_factor": recorded}
             if isinstance(recorded, int) and resume_compatible(margs, want):

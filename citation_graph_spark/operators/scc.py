@@ -70,13 +70,13 @@ class SccResult:
     history: list[dict[str, Any]] = field(default_factory=list)
 
 
-def _persist_sorted(df: DataFrame, key: str, num_partitions: int) -> DataFrame:
+def _persist_sorted(df: DataFrame, key: str, num_partitions: int) -> tuple[DataFrame, int]:
     """Repartition+sort a round's active edge set on the join key so every
     fixpoint superstep inside the round runs a merge join that re-sorts
-    only the (small) state frame — the CSR-style layout of pagerank.py."""
+    only the (small) state frame — the CSR-style layout of pagerank.py.
+    Returns the persisted frame with its row count."""
     out = df.repartition(num_partitions, key).sortWithinPartitions(key).persist()
-    out.count()
-    return out
+    return out, out.count()
 
 
 def strongly_connected_components(
@@ -104,7 +104,7 @@ def strongly_connected_components(
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    active_e = _persist_sorted(active_e, "src", num_partitions)
+    active_e, n_edges = _persist_sorted(active_e, "src", num_partitions)
 
     assigned_parts: list[DataFrame] = []  # (id, scc_root) frames
     history: list[dict[str, Any]] = []
@@ -143,13 +143,11 @@ def strongly_connected_components(
                     dead.select(F.col("id").alias("src")), "src", "anti"
                 ).join(dead.select(F.col("id").alias("dst")), "dst", "anti")
                 old_e = active_e
-                active_e = _persist_sorted(
+                active_e, n_edges = _persist_sorted(
                     new_e.select("src", "dst"), "src", num_partitions
                 )
                 old_e.unpersist()
             round_metrics["trimmed"] = trimmed_total
-
-            n_edges = active_e.count()
             round_metrics["active_edges"] = n_edges
             if n_edges == 0:
                 history.append(round_metrics)
@@ -157,7 +155,7 @@ def strongly_connected_components(
                 break
 
             # dst-sorted twin for the backward phase (HITS-style dual cache)
-            active_e_bydst = _persist_sorted(
+            active_e_bydst, _ = _persist_sorted(
                 active_e.select("src", "dst"), "dst", num_partitions
             )
 
@@ -262,7 +260,7 @@ def strongly_connected_components(
                 done.select(F.col("id").alias("src")), "src", "anti"
             ).join(done.select(F.col("id").alias("dst")), "dst", "anti")
             old_e = active_e
-            active_e = _persist_sorted(
+            active_e, n_edges = _persist_sorted(
                 new_e.select("src", "dst"), "src", num_partitions
             )
             old_e.unpersist()

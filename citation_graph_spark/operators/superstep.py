@@ -232,8 +232,16 @@ class SuperstepContext:
     def finish(
         self, state: DataFrame, iteration: int, metrics: dict[str, Any] | None = None
     ) -> None:
-        """Durably record the converged state (if checkpointing is on)."""
-        if self.checkpoint is not None:
+        """Durably record the final state (if checkpointing is on). When
+        ``record`` just saved this very state as ``iteration``, only that
+        manifest's metrics are rewritten: each state is written once."""
+        if self.checkpoint is None:
+            return
+        last = self.history[-1]["iteration"] if self.history else None
+        on_boundary = self.durable_every > 0 and iteration % self.durable_every == 0
+        if state is self._last and last == iteration and on_boundary:
+            self.checkpoint.set_metrics(iteration, metrics or {})
+        else:
             self.checkpoint.save(state, iteration, metrics)
 
     def cleanup(self) -> None:

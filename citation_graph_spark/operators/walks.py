@@ -31,7 +31,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
 
-from citation_graph_spark.operators.superstep import release
+from citation_graph_spark.operators.superstep import local_checkpoint, release
 
 _P = 2_147_483_647  # 2^31 - 1 (prime)
 _K1 = 1_103_515_245
@@ -92,9 +92,9 @@ def random_walks(
     if starts is None:
         starts = e.select(F.col("src").alias("start")).distinct()
     start_col = starts.columns[0]
-    state = starts.select(
-        F.col(start_col).alias("walk"), F.col(start_col).alias("id")
-    ).localCheckpoint(eager=True)
+    walkers = starts.select(F.col(start_col).alias("walk"), F.col(start_col).alias("id"))
+    state, seen = local_checkpoint(walkers, n=F.count(F.lit(1)))
+    n_walks = seen["n"]
 
     # every step frame must stay alive until the final union materializes
     # (a localCheckpoint is not recomputable), so this manages its own
@@ -113,13 +113,13 @@ def random_walks(
                     F.col("dst").alias("v"),
                 ).alias("hv"),
             )
-            nxt = (
+            nxt, seen = local_checkpoint(
                 cand.groupBy("walk")
                 .agg(F.min("hv").alias("hv"))
-                .select("walk", F.col("hv.v").alias("id"))
-                .localCheckpoint(eager=True)
+                .select("walk", F.col("hv.v").alias("id")),
+                n=F.count(F.lit(1)),
             )
-            n = nxt.count()
+            n = seen["n"]
             history.append(
                 {"step": t, "walkers": n, "seconds": round(_time.time() - t0, 3)}
             )
@@ -134,7 +134,6 @@ def random_walks(
                 fr.select("walk", F.lit(t).alias("step"), "id")
             )
         corpus = corpus.localCheckpoint(eager=True)
-        n_walks = steps[0].count()
         return WalkResult(
             corpus=corpus,
             n_walks=n_walks,

@@ -9,8 +9,8 @@ program version, wall time, args — ``src/citation_graph/cache_manager.py:
 The Spark analog: per-iteration Parquet state under ``<dir>/iter=<k>/`` plus
 a JSON manifest carrying the same lineage fields — spec version, engine
 version, args, iteration, convergence metrics, and *per-file lineage*
-(row count per parquet file — stable across re-reads, unlike partition
-ids) so a resumed run can verify the state it loads. Old manifest specs
+(row count per parquet file, from its footer — stable across re-reads, unlike
+partition ids) so a resumed run can verify its state. Old manifest specs
 are migrated on load, mirroring the reference's v2→v3 cache shim
 (``cache_manager.py:37-69``). Writing Parquet (not ``df.checkpoint()``)
 both truncates the logical plan — iterative joins otherwise re-plan k
@@ -22,15 +22,40 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 SPEC_VERSION = 2
 # Underscore prefix: Spark's file index skips it when scanning the parquet dir.
 _MANIFEST = "_manifest.json"
+
+
+def _file_rows(directory: str) -> dict[str, int]:
+    """Row count per data file of a Parquet dir, from the footers (no Spark job).
+    As in Spark's file index, names starting with ``_`` or ``.`` are not data;
+    0-row files are left out, as a grouped count over ``input_file_name`` never
+    saw them. A truncated file raises ``ValueError``."""
+    names = sorted(n for n in os.listdir(directory) if not n.startswith(("_", ".")))
+    rows = {n: pq.read_metadata(os.path.join(directory, n)).num_rows for n in names}
+    return {n: r for n, r in rows.items() if r}
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` as a Parquet re-read reports it: every field, element and value nullable."""
+    if isinstance(dt, StructType):
+        fields = [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt]
+        return StructType(fields)
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType))
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType))
+    return dt
 
 
 def _migrate_1_to_2(manifest: dict[str, Any]) -> dict[str, Any]:
@@ -82,13 +107,20 @@ class CheckpointManager:
     def _iter_dir(self, iteration: int) -> str:
         return os.path.join(self.path, f"iter={iteration}")
 
+    def _write_manifest(self, iteration: int, manifest: dict[str, Any]) -> None:
+        """Write-to-temp + rename: a kill mid-write leaves the old manifest or the new one."""
+        path = os.path.join(self._iter_dir(iteration), _MANIFEST)
+        with open(path + ".tmp", "w", encoding="utf-8") as fh:
+            json.dump(manifest, fh, indent=1, sort_keys=True)
+        os.replace(path + ".tmp", path)
+
     def save(
         self,
         state: DataFrame,
         iteration: int,
         metrics: dict[str, Any] | None = None,
     ) -> None:
-        """Write state + manifest for ``iteration``."""
+        """Write state + manifest for ``iteration`` (one Spark job: the write)."""
         from citation_graph_spark import __version__
 
         target = self._iter_dir(iteration)
@@ -99,27 +131,12 @@ class CheckpointManager:
         # so any interruption in this sequence leaves a resumable store.
         tmp = target + ".tmp"
         if os.path.isdir(tmp):
-            import shutil
-
             shutil.rmtree(tmp)
         state.write.mode("overwrite").parquet(tmp)
         if os.path.isdir(target):
-            import shutil
-
             shutil.rmtree(target)
         os.rename(tmp, target)
-        reloaded = self.spark.read.parquet(target)
-        lineage = sorted(
-            (
-                {"file": os.path.basename(r["f"]), "rows": int(r["rows"])}
-                for r in (
-                    reloaded.groupBy(F.input_file_name().alias("f"))
-                    .agg(F.count("*").alias("rows"))
-                    .collect()
-                )
-            ),
-            key=lambda p: p["file"],
-        )
+        lineage = [{"file": f, "rows": n} for f, n in _file_rows(target).items()]
         manifest = {
             "creator": self.creator,
             "file-spec-version": SPEC_VERSION,
@@ -130,19 +147,22 @@ class CheckpointManager:
             "metrics": metrics or {},
             "files": lineage,
             "rows": sum(p["rows"] for p in lineage),
-            "schema": reloaded.schema.jsonValue(),
+            "schema": _nullable(state.schema).jsonValue(),
         }
-        with open(os.path.join(target, _MANIFEST), "w", encoding="utf-8") as fh:
-            json.dump(manifest, fh, indent=1, sort_keys=True)
+        self._write_manifest(iteration, manifest)
         # Iterations above this one belong to a superseded timeline (a fresh
         # restart after an args mismatch, or a shorter re-run): once
         # iteration k is durably written, anything newer is stale — prune it
         # so a later resume can never pick a dead timeline's state.
-        import shutil
-
         for it in self.iterations():
             if it > iteration:
                 shutil.rmtree(self._iter_dir(it), ignore_errors=True)
+
+    def set_metrics(self, iteration: int, metrics: dict[str, Any]) -> None:
+        """Replace a saved iteration's recorded metrics; its state stays as written."""
+        with open(os.path.join(self._iter_dir(iteration), _MANIFEST), encoding="utf-8") as fh:
+            manifest = json.load(fh)
+        self._write_manifest(iteration, {**manifest, "metrics": metrics})
 
     def iterations(self) -> list[int]:
         if not os.path.isdir(self.path):
@@ -161,9 +181,11 @@ class CheckpointManager:
 
         Older manifest specs are migrated in place via ``MIGRATIONS`` (and
         the upgraded manifest is written back). Raises on an unknown/newer
-        spec, or on per-file row-count drift vs the recorded lineage (one
-        grouped count over ``input_file_name`` — stable across reads; a v1
-        manifest has unknown file lineage, so only the total is checked)."""
+        spec, an unreadable footer, or per-file row-count drift vs the
+        recorded lineage (the row counts in the Parquet footers — stable
+        across reads; a v1 manifest has unknown file lineage, so only the
+        total is checked). Runs no Spark job: the state is read with the
+        manifest's schema (inferred only for a manifest without one)."""
         target = self._iter_dir(iteration)
         with open(os.path.join(target, _MANIFEST), encoding="utf-8") as fh:
             manifest = json.load(fh)
@@ -177,13 +199,7 @@ class CheckpointManager:
             raise ValueError(
                 f"checkpoint spec {spec} not readable by engine spec {SPEC_VERSION}"
             )
-        df = self.spark.read.parquet(target)
-        actual = {
-            os.path.basename(r["f"]): int(r["rows"])
-            for r in df.groupBy(F.input_file_name().alias("f"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        }
+        actual = _file_rows(target)
         if manifest.get("files") is not None:
             expected = {p["file"]: p["rows"] for p in manifest["files"]}
             if actual != expected:
@@ -196,30 +212,16 @@ class CheckpointManager:
                 f"checkpoint corrupt: {rows} rows on disk, manifest says {manifest['rows']}"
             )
         if migrated:
-            with open(os.path.join(target, _MANIFEST), "w", encoding="utf-8") as fh:
-                json.dump(manifest, fh, indent=1, sort_keys=True)
-        return df, manifest
-
-    def peek_latest_manifest(self) -> dict[str, Any] | None:
-        """Newest readable manifest WITHOUT loading or validating the state
-        parquet — for callers that only need the recorded args/metrics
-        (e.g. adopting a checkpointed run's resolved salt factor before
-        deciding whether to measure a fresh one)."""
-        for iteration in reversed(self.iterations()):
-            try:
-                with open(
-                    os.path.join(self._iter_dir(iteration), _MANIFEST),
-                    encoding="utf-8",
-                ) as fh:
-                    return json.load(fh)
-            except (OSError, json.JSONDecodeError):
-                continue
-        return None
+            self._write_manifest(iteration, manifest)
+        schema = manifest.get("schema")
+        reader = self.spark.read.schema(StructType.fromJson(schema)) if schema else self.spark.read
+        return reader.parquet(target), manifest
 
     def latest(self) -> tuple[int, DataFrame, dict[str, Any]] | None:
         """Newest valid iteration, or None — resume entry point. Falls back
         to earlier iterations if the newest fails validation (a kill mid-write
-        leaves no manifest, so partially written iterations are skipped)."""
+        leaves no manifest, so partially written iterations are skipped; a
+        truncated part file fails its footer read)."""
         for iteration in reversed(self.iterations()):
             try:
                 df, manifest = self.load(iteration)

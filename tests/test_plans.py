@@ -11,6 +11,8 @@ scripts/explain_plans.py audit):
 """
 
 import io
+import json
+import os
 from contextlib import redirect_stdout
 
 import pyspark.sql.functions as F
@@ -18,11 +20,14 @@ import pytest
 
 from citation_graph_spark import datagen
 from citation_graph_spark.edges import dedup_edges, out_degrees
+from citation_graph_spark.operators.betweenness import betweenness
 from citation_graph_spark.operators.bfs import bfs_expand
 from citation_graph_spark.operators.components import connected_components
 from citation_graph_spark.operators.kcore import k_core
 from citation_graph_spark.operators.scc import strongly_connected_components
 from citation_graph_spark.operators.sssp import sssp
+from citation_graph_spark.operators.walks import random_walks
+from citation_graph_spark.sources.checkpoint import CheckpointManager
 
 
 def _plan(df, mode="formatted") -> str:
@@ -30,6 +35,18 @@ def _plan(df, mode="formatted") -> str:
     with redirect_stdout(buf):
         df.explain(mode)
     return buf.getvalue()
+
+
+def _jobs(spark, group, call):
+    """``call()``'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_point_lookup_pushdown_and_pruning(spark, tmp_path):
@@ -258,17 +275,53 @@ def test_pagerank_runs_one_job_per_superstep(spark):
     pg = PreparedGraph(datagen.zipf_edges(spark, 300, 3_000, seed=5))
     pg.weighted_edges(0)
     pg.dangling_flagged()
-    sc = spark.sparkContext
-    sc.setJobGroup("pagerank-job-count", "pagerank job count")
     try:
-        res = pagerank(prepared=pg, tol=1e-6)
+        res, jobs = _jobs(spark, "pagerank-job-count", lambda: pagerank(prepared=pg, tol=1e-6))
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
         pg.unpersist()
-    jobs = sc.statusTracker().getJobIdsForGroup("pagerank-job-count")
     assert res.converged and res.iterations > 3
-    assert len(jobs) <= res.iterations + 4, (len(jobs), res.iterations)
+    assert jobs <= res.iterations + 4, (jobs, res.iterations)
+
+
+def test_checkpoint_save_runs_one_job_and_resume_none(spark, tmp_path):
+    """A durable save runs only the state's Parquet write: its lineage comes
+    from the Parquet footers and its schema from the frame. Finding and
+    validating the newest state (``latest``) runs no Spark job at all."""
+    ck = CheckpointManager(spark, str(tmp_path / "ck"), args={"algorithm": "t"})
+    state = spark.range(200).select("id", (F.col("id") / 200).alias("rank"))
+    state = state.repartition(4).localCheckpoint(eager=True)
+    for it in range(3):
+        _, jobs = _jobs(spark, f"ckpt-save-{it}", lambda: ck.save(state, it, {"delta": 0.5}))
+        assert jobs == 1, (it, jobs)
+        latest, jobs = _jobs(spark, f"ckpt-latest-{it}", ck.latest)
+        assert latest[0] == it and jobs == 0, (it, jobs)
+
+
+def test_checkpointed_pagerank_writes_each_state_once(spark, tmp_path):
+    """With a durable save every superstep, a pagerank call runs one job per
+    superstep plus one Parquet write per save: saves re-read nothing, and
+    the final state (saved by its superstep) is not written again."""
+    from citation_graph_spark.operators.pagerank import pagerank
+    from citation_graph_spark.operators.prepared import PreparedGraph
+
+    pg = PreparedGraph(datagen.zipf_edges(spark, 300, 3_000, seed=5))
+    pg.weighted_edges(0)
+    pg.dangling_flagged()
+    ck = str(tmp_path / "ck")
+    try:
+        res, jobs = _jobs(
+            spark, "pagerank-ckpt-job-count",
+            lambda: pagerank(prepared=pg, tol=1e-6, checkpoint_dir=ck, durable_every=1),
+        )
+    finally:
+        pg.unpersist()
+    saves = sum(1 for name in os.listdir(ck) if name.startswith("iter="))
+    assert res.converged and saves == res.iterations + 1
+    assert jobs <= res.iterations + saves + 4, (jobs, res.iterations, saves)
+    # the final superstep's manifest still records the run as final
+    manifest = os.path.join(ck, f"iter={res.iterations}", "_manifest.json")
+    with open(manifest, encoding="utf-8") as fh:
+        assert json.load(fh)["metrics"]["final"] is True
 
 
 def _weighted_zipf(spark):
@@ -284,27 +337,24 @@ _JOB_BOUNDS = {
     "bfs": (lambda e: bfs_expand(e, root=0, max_depth=8), 40),
     "cc_two_star": (lambda e: connected_components(e, algorithm="two_star"), 26),
     "kcore": (lambda e: k_core(e, k=5), 8),
-    "scc": (strongly_connected_components, 69),
+    "scc": (strongly_connected_components, 64),
     "sssp": (lambda e: sssp(e, roots=[0, 1, 2, 3]), 83),
+    "walks": (random_walks, 35),
+    "betweenness": (betweenness, 48),
 }
 
 
 @pytest.mark.parametrize("name", sorted(_JOB_BOUNDS))
 def test_superstep_scalars_ride_the_checkpoint_job(spark, name):
     """Convergence scalars (new vertices, pointer checksum, edge count,
-    changed counts, improved rows) are observed by the job that
-    checkpoints the superstep, not read back by a scalar action."""
+    changed counts, improved rows, walker and frontier counts) are observed
+    by the job that checkpoints the superstep, not read back by a scalar
+    action."""
     call, bound = _JOB_BOUNDS[name]
     edges = _weighted_zipf(spark).cache()
     edges.count()
-    sc = spark.sparkContext
-    group = f"{name}-job-count"
-    sc.setJobGroup(group, group)
     try:
-        call(edges)
+        _, jobs = _jobs(spark, f"{name}-job-count", lambda: call(edges))
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
         edges.unpersist()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= bound, (len(jobs), bound)
+    assert jobs <= bound, (jobs, bound)
