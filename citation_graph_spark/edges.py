@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from citation_graph_spark.session import partition_count
 
 def dedup_edges(raw: DataFrame) -> DataFrame:
     """(src, dst, pos)* → one row per (src, dst), keeping min pos.
@@ -76,8 +77,7 @@ def vertex_dictionary(edges: DataFrame, num_partitions: int | None = None) -> Da
     offset table. Opt-in (one range shuffle + sort); used where exact
     dense ids matter (e.g., array-indexed post-processing)."""
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    num_partitions = partition_count(spark, num_partitions)
     verts = (
         edges.select(F.col("src").alias("url"))
         .unionByName(edges.select(F.col("dst").alias("url")))

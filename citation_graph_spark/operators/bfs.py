@@ -28,8 +28,8 @@ from typing import Any
 from pyspark.sql import DataFrame, functions as F
 
 from citation_graph_spark.edges import cap_out_degree
-from citation_graph_spark.operators.superstep import SuperstepContext
-from citation_graph_spark.sources.checkpoint import CheckpointManager
+from citation_graph_spark.operators.superstep import SuperstepContext, count_true
+from citation_graph_spark.session import partition_count
 
 
 @dataclass
@@ -47,7 +47,6 @@ def bfs_expand(
     exclude: DataFrame | None = None,
     checkpoint_dir: str | None = None,
     durable_every: int = 5,
-    resume: bool = True,
     num_partitions: int | None = None,
 ) -> BFSResult:
     """Expand from ``root`` over directed ``(src, dst[, pos])`` edges.
@@ -60,25 +59,25 @@ def bfs_expand(
     is a continuation knob: resuming with a larger depth keeps expanding).
     ``exclude`` is a DataFrame and is NOT validated against the manifest —
     callers resuming with a different exclude list must start fresh.
+
+    Iteration ``k`` of the superstep loop is depth ``k``; a level that adds
+    no vertex ends the run (it is recorded, and its state equals the
+    previous level's).
     """
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    ckpt = None
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(
-            spark,
-            checkpoint_dir,
-            args={
-                "algorithm": "bfs_expand",
-                "root": str(root),
-                "max_depth": max_depth,
-                "max_per_src": max_per_src,
-            },
-        )
-    ctx = SuperstepContext(checkpoint=ckpt, durable_every=durable_every)
-    latest = ctx.resume(ignore=("max_depth",)) if resume else None
+    num_partitions = partition_count(spark, num_partitions)
+    ctx = SuperstepContext(
+        spark,
+        checkpoint_dir,
+        args={
+            "algorithm": "bfs_expand",
+            "root": str(root),
+            "max_depth": max_depth,
+            "max_per_src": max_per_src,
+        },
+        durable_every=durable_every,
+    )
+    latest = ctx.resume(ignore=("max_depth",))
     if latest is not None:
         done, visited, metrics = latest
         if metrics.get("new_vertices") == 0 or done >= max_depth:
@@ -96,21 +95,14 @@ def bfs_expand(
     adj = adj.select("src", "dst").repartition(num_partitions, "src").persist()
     adj.count()
 
-    if latest is None:
+    def init() -> DataFrame:
         id_type = dict(edges.dtypes)["src"]
-        visited = spark.createDataFrame(
+        return spark.createDataFrame(
             [(root, 0, None)], f"id {id_type}, depth int, parent {id_type}"
         )
-        visited, _ = ctx.truncate(visited, 0)
-        ctx.record(visited, 0, {"level": 0, "new_vertices": 1})
-        done = 0
-    else:
-        visited, _ = ctx.truncate(visited, done)
-    frontier = visited.where(F.col("depth") == done).select("id")
 
-    depth_reached = done
-    n_new = None
-    for depth in range(done, max_depth):
+    def step(visited: DataFrame, depth: int, last: dict[str, Any]) -> DataFrame:
+        frontier = visited.where(F.col("depth") == depth - 1).select("id")
         candidates = frontier.join(adj, frontier.id == adj.src).select(
             adj.dst.alias("id"), adj.src.alias("parent")
         )
@@ -120,27 +112,27 @@ def bfs_expand(
             candidates.join(visited, "id", "left_anti")
             .groupBy("id")
             .agg(F.min("parent").alias("parent"))
-            .select("id", F.lit(depth + 1).alias("depth"), "parent")
+            .select("id", F.lit(depth).alias("depth"), "parent")
         )
-        visited, seen = ctx.truncate(
-            visited.unionByName(new),
-            depth + 1,
-            new_vertices=F.count(F.when(F.col("depth") == depth + 1, 1)),
-        )
-        n_new = seen["new_vertices"]
-        ctx.record(visited, depth + 1, {"level": depth + 1, "new_vertices": n_new})
-        if n_new == 0:
-            break
-        depth_reached = depth + 1
-        frontier = visited.where(F.col("depth") == depth + 1).select("id")
+        return visited.unionByName(new).withColumn("_new", F.col("depth") == depth)
 
-    # carry new_vertices into the final manifest: save()'s prune deletes the
-    # level that recorded new_vertices=0, so without this a resume of an
-    # exhausted run could not detect the dead frontier and would re-execute
-    # one wasted empty superstep
-    ctx.finish(visited, depth_reached, {"final": True, "new_vertices": n_new})
-    adj.unpersist()
-    return BFSResult(visited, depth_reached, ctx.history)
+    def metrics(depth: int, seen: dict[str, Any], last: dict[str, Any] | None) -> dict[str, Any]:
+        return {"level": depth, "new_vertices": 1 if last is None else seen["new_vertices"]}
+
+    try:
+        visited, depth, last = ctx.run(
+            latest,
+            init,
+            step,
+            max_depth,
+            metrics,
+            stop=lambda m: m["new_vertices"] == 0,
+            feed={"new_vertices": count_true("_new")},
+        )
+    finally:
+        adj.unpersist()
+    reached = depth - 1 if last["new_vertices"] == 0 else depth
+    return BFSResult(visited, reached, ctx.history)
 
 
 def spanning_tree_edges(visited: DataFrame) -> DataFrame:

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, functions as F
 from citation_graph_spark.edges import symmetrize, vertices_of
 from citation_graph_spark.operators.prepared import PreparedGraph
 from citation_graph_spark.operators.superstep import SuperstepContext, count_true
-from citation_graph_spark.sources.checkpoint import CheckpointManager
+from citation_graph_spark.session import partition_count
 
 
 @dataclass
@@ -43,7 +43,6 @@ def connected_components(
     max_iter: int = 50,
     checkpoint_dir: str | None = None,
     durable_every: int = 5,
-    resume: bool = True,
     num_partitions: int | None = None,
     algorithm: str = "hash_min",
     prepared: PreparedGraph | None = None,
@@ -72,11 +71,10 @@ def connected_components(
                 None if owns_prepared else prepared,
                 checkpoint_dir,
                 durable_every,
-                resume,
             )
         if algorithm != "hash_min":
             raise ValueError(f"unknown algorithm {algorithm!r}")
-        return _hash_min(prepared, max_iter, checkpoint_dir, durable_every, resume)
+        return _hash_min(prepared, max_iter, checkpoint_dir, durable_every)
     finally:
         if owns_prepared:
             prepared.unpersist()
@@ -87,7 +85,6 @@ def _hash_min(
     max_iter: int,
     checkpoint_dir: str | None,
     durable_every: int,
-    resume: bool,
 ) -> ComponentsResult:
     # CSR-style layout (see pagerank.py): the symmetrized view is cache-sorted
     # on src and the label state co-partitioned with it on id, so each
@@ -105,8 +102,7 @@ def _hash_min(
         )
 
     return label_fixpoint(
-        prepared, "connected_components", step, max_iter, checkpoint_dir,
-        durable_every, resume,
+        prepared, "connected_components", step, max_iter, checkpoint_dir, durable_every
     )
 
 
@@ -117,60 +113,42 @@ def label_fixpoint(
     max_iter: int,
     checkpoint_dir: str | None,
     durable_every: int,
-    resume: bool,
 ) -> ComponentsResult:
     """The superstep loop of hash-min CC and label propagation: every vertex
     starts labelled with its own id; ``step(state, sym)`` maps the
     ``(id, label)`` state and the PreparedGraph's symmetrized edge cache to
     the next ``(id, label, _changed)``. Stops when no label changed or after
     ``max_iter`` supersteps; checkpointed and resumable under ``algorithm``."""
-    ckpt = None
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(
-            prepared.edges.sparkSession,
-            checkpoint_dir,
-            args={"algorithm": algorithm, "max_iter": max_iter},
-        )
     ctx = SuperstepContext(
-        checkpoint=ckpt, durable_every=durable_every,
+        prepared.edges.sparkSession,
+        checkpoint_dir,
+        args={"algorithm": algorithm, "max_iter": max_iter},
+        durable_every=durable_every,
         num_partitions=prepared.num_partitions,
     )
 
-    latest = ctx.resume() if resume else None
-    if latest is not None and latest[2].get("changed") == 0:
+    def fixpoint(metrics: dict[str, Any]) -> bool:
+        return metrics.get("changed") == 0
+
+    latest = ctx.resume()
+    if latest is not None and fixpoint(latest[2]):
         return ComponentsResult(latest[1].select("id", "label"), latest[0], True, [])
 
     # shared by CC and LPA via PreparedGraph when the caller passed one
     sym = prepared.symmetrized()
-
-    if latest is None:
+    state, it, last = ctx.run(
+        latest,
         # vertex set from the PreparedGraph's cached flag table (one
         # aggregation, shared with pagerank and prebuilt by callers that
         # pass a prepared graph) instead of a private union-distinct over
         # the edge table (r06)
-        state, _ = ctx.truncate(
-            prepared.dangling_flagged().select("id", F.col("id").alias("label")), 0
-        )
-        ctx.record(state, 0, {"changed": None})
-        done = 0
-    else:
-        done, state, _ = latest
-        state, _ = ctx.truncate(state, done)
-
-    changed = -1
-    it = done
-    for it in range(done + 1, max_iter + 1):
-        state, seen = ctx.truncate(
-            step(state, sym), it, changed=count_true("_changed")
-        )
-        changed = seen["changed"]
-        ctx.record(state, it, {"changed": changed})
-        if changed == 0:
-            break
-
-    converged = changed == 0
-    ctx.finish(state, it, {"changed": changed, "final": converged})
-    return ComponentsResult(state.select("id", "label"), it, converged, ctx.history)
+        lambda: prepared.dangling_flagged().select("id", F.col("id").alias("label")),
+        lambda state, it, last: step(state, sym),
+        max_iter,
+        stop=fixpoint,
+        feed={"changed": count_true("_changed")},
+    )
+    return ComponentsResult(state.select("id", "label"), it, fixpoint(last), ctx.history)
 
 
 # ---------------------------------------------------------------------------
@@ -186,7 +164,6 @@ def _two_star(
     prepared: PreparedGraph | None = None,
     checkpoint_dir: str | None = None,
     durable_every: int = 5,
-    resume: bool = True,
 ) -> ComponentsResult:
     """Alternating star rounds over parent pointers.
 
@@ -199,7 +176,7 @@ def _two_star(
 
     Each round is one truncate whose job also observes the fixpoint test's
     inputs: the pointer count and an order-independent xxhash64 checksum
-    of the pointer set. Resume goes through ``SuperstepContext.resume``
+    of the pointer set. Resume goes through ``SuperstepContext.run``
     (reference analog: ``src/citation_graph/cache_manager.py:221-237``):
     the durable state is the pointer set, and the resumed state's first
     truncate observes its checksum, so a resumed run re-enters the
@@ -209,17 +186,13 @@ def _two_star(
     long-diameter O(log n) path — the variant an hour-long 100× run uses.
     """
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    ckpt = None
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(
-            spark,
-            checkpoint_dir,
-            args={"algorithm": "cc_two_star", "max_iter": max_iter},
-        )
-    ctx = SuperstepContext(checkpoint=ckpt, durable_every=durable_every)
+    num_partitions = partition_count(spark, num_partitions)
+    ctx = SuperstepContext(
+        spark,
+        checkpoint_dir,
+        args={"algorithm": "cc_two_star", "max_iter": max_iter},
+        durable_every=durable_every,
+    )
 
     verts = vertices_of(edges).persist()
 
@@ -236,41 +209,23 @@ def _two_star(
         verts.unpersist()
         return ComponentsResult(result, it, converged, ctx.history)
 
-    latest = ctx.resume() if resume else None
-    if latest is not None and latest[2].get("converged"):
+    def converged(metrics: dict[str, Any]) -> bool:
+        return bool(metrics.get("converged"))
+
+    latest = ctx.resume()
+    if latest is not None and converged(latest[2]):
         return finish_labels(latest[1], latest[0], True)
 
-    # pointer count + order-independent checksum, observed by each round's
-    # truncate. Decimal sum: long would overflow under ANSI mode; coalesce
-    # so an empty pointer set checksums to 0, not NULL (manifest JSON)
-    fixpoint = {
-        "pointers": F.count(F.lit(1)),
-        "checksum": F.coalesce(
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-            F.lit(0).cast("decimal(38,0)"),
-        ),
-    }
-
-    def metrics(seen: dict[str, Any], converged: bool) -> dict[str, Any]:
-        return {
-            "pointers": seen["pointers"],
-            "checksum": str(seen["checksum"]),
-            "converged": converged,
-        }
-
-    if latest is None:
+    def init() -> DataFrame:
         # initial pointers: undirected neighbour pairs, both directions —
         # reuse the PreparedGraph's persisted symmetrized view when available
         sym0 = prepared.symmetrized() if prepared is not None else symmetrize(edges)
         pairs = sym0.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        state, prev = ctx.truncate(pairs.repartition(num_partitions, "u"), 0, **fixpoint)
-        # the iteration-0 manifest lets a run killed before its first
-        # durable round resume too
-        ctx.record(state, 0, metrics(prev, False))
-        done = 0
-    else:
-        done, state, _ = latest
-        state, prev = ctx.truncate(state, done, **fixpoint)
+        return pairs.repartition(num_partitions, "u")
+
+    def metrics(it: int, seen: dict[str, Any], last: dict[str, Any] | None) -> dict[str, Any]:
+        same = last is not None and all(seen[k] == last[k] for k in seen)
+        return {**seen, "converged": same}
 
     def large_star(p: DataFrame) -> DataFrame:
         # Γ(u) is the SYMMETRIC neighbourhood (each edge contributes both
@@ -302,14 +257,24 @@ def _two_star(
         hang_self = m.select(F.col("u"), F.col("m").alias("v"))
         return hang_nbrs.unionByName(hang_self).distinct()
 
-    seen, it, converged = prev, done, False
-    for it in range(done + 1, max_iter + 1):
-        state, seen = ctx.truncate(small_star(large_star(state)), it, **fixpoint)
-        converged = seen == prev
-        ctx.record(state, it, metrics(seen, converged))
-        if converged:
-            break
-        prev = seen
-
-    ctx.finish(state, it, {**metrics(seen, converged), "final": converged})
-    return finish_labels(state, it, converged)
+    # pointer count + order-independent checksum, observed on every state
+    # (a resumed one too, so the fixpoint test re-enters where the killed
+    # run left it). Decimal sum: long would overflow under ANSI mode;
+    # coalesce so an empty pointer set checksums to "0", not NULL; a string,
+    # as manifests record it
+    state, it, last = ctx.run(
+        latest,
+        init,
+        lambda state, it, last: small_star(large_star(state)),
+        max_iter,
+        metrics,
+        stop=converged,
+        observe={
+            "pointers": F.count(F.lit(1)),
+            "checksum": F.coalesce(
+                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
+                F.lit(0).cast("decimal(38,0)"),
+            ).cast("string"),
+        },
+    )
+    return finish_labels(state, it, converged(last))

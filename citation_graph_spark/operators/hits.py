@@ -24,15 +24,17 @@ Scale shape per superstep (what runs on 1000 executors):
   ``groupBy(src).sum()``) — each join is a merge-hinted SMJ where ONLY
   the small score frame shuffles, mirroring the PageRank superstep
   (operators/pagerank.py); both aggregations get map-side partials.
-- the raw state is checkpointed by ``SuperstepContext.truncate``; two
-  driver scalar actions follow it: the first reads both normalization sums off the checkpointed
-  blocks (needed before the normalized vectors exist), the second reads
-  the combined L1 delta — cheap re-aggregations, not recomputes of the
-  joins. The sums stay plain double actions: an observed sum would merge
-  task results in completion order, and ``exact_sum``'s decimal range
-  does not cover ``hsum`` (up to max in-degree × max out-degree).
+- the raw sums are checkpointed first (``local_checkpoint``), and one
+  driver scalar action reads both normalization sums off the checkpointed
+  blocks (needed before the normalized vectors exist) — a cheap
+  re-aggregation, not a recompute of the joins. The sums stay a plain
+  double action: an observed sum would merge task results in completion
+  order, and ``exact_sum``'s decimal range does not cover ``hsum`` (up to
+  max in-degree × max out-degree). The normalized state is then
+  checkpointed by ``SuperstepContext.run``, whose job also observes the
+  combined L1 delta as an exact sum.
 - resume, the args check and durable checkpoints go through
-  ``SuperstepContext`` like every superstep loop; resume is exact (the
+  ``SuperstepContext.run`` like every superstep loop; resume is exact (the
   normalization sums are recomputable from the state itself, so the
   manifest needs only the L1 delta).
 """
@@ -45,8 +47,13 @@ from typing import Any
 from pyspark.sql import DataFrame, functions as F
 
 from citation_graph_spark.edges import vertices_of
-from citation_graph_spark.operators.superstep import SuperstepContext
-from citation_graph_spark.sources.checkpoint import CheckpointManager
+from citation_graph_spark.operators.superstep import (
+    SuperstepContext,
+    exact_sum,
+    local_checkpoint,
+    release,
+)
+from citation_graph_spark.session import partition_count
 
 
 @dataclass
@@ -64,7 +71,6 @@ def hits(
     max_iter: int = 50,
     checkpoint_dir: str | None = None,
     durable_every: int = 5,
-    resume: bool = True,
     num_partitions: int | None = None,
 ) -> HITSResult:
     """Run HITS on an ``(src, dst, ...)`` edge DataFrame.
@@ -73,26 +79,21 @@ def hits(
     Vertices with no in-edges have auth 0; vertices with no out-edges
     have hub 0 (they still appear in the result)."""
     spark = edges.sparkSession
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
+    num_partitions = partition_count(spark, num_partitions)
+    ctx = SuperstepContext(
+        spark,
+        checkpoint_dir,
+        args={"algorithm": "hits", "tol": tol, "max_iter": max_iter},
+        durable_every=durable_every,
     )
 
-    ckpt = None
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(
-            spark,
-            checkpoint_dir,
-            args={"algorithm": "hits", "tol": tol, "max_iter": max_iter},
-        )
-    ctx = SuperstepContext(checkpoint=ckpt, durable_every=durable_every)
-    latest = ctx.resume() if resume else None
-    delta = float("inf")
-    if latest is not None:
+    def converged(metrics: dict[str, Any]) -> bool:
+        return metrics.get("delta") is not None and metrics["delta"] < tol
+
+    latest = ctx.resume()
+    if latest is not None and converged(latest[2]):
         done, state, metrics = latest
-        if metrics.get("delta") is not None:
-            delta = float(metrics["delta"])
-            if delta < tol:
-                return HITSResult(state.select("id", "auth", "hub"), done, delta, True, [])
+        return HITSResult(state.select("id", "auth", "hub"), done, metrics["delta"], True, [])
 
     # --- static per-run tables: the same edge rows cached in BOTH join
     # layouts (src-sorted for the authority step, dst-sorted for the hub
@@ -112,6 +113,57 @@ def hits(
         .sortWithinPartitions("h_dst", "h_src")
         .persist()
     )
+    # the checkpointed raw sums of the superstep in flight: released once
+    # the next state, which reads them, is materialized
+    raws: list[DataFrame] = []
+
+    def step(state: DataFrame, it: int, last: dict[str, Any]) -> DataFrame:
+        while raws:
+            release(raws.pop())
+        # authority step: push hub scores along out-edges
+        a_raw = (
+            state.join(by_src.hint("merge"), state.id == F.col("a_src"))
+            .groupBy(F.col("a_dst").alias("id"))
+            .agg(F.sum("hub").alias("a_raw"))
+        )
+        # hub step folded into the same plan: carry the raw sums and
+        # divide after reading the totals off the checkpointed frame
+        a_state = state.join(a_raw.hint("merge"), "id", "left").select(
+            "id", F.coalesce("a_raw", F.lit(0.0)).alias("a_raw"), "auth", "hub"
+        )
+        # hub step uses UNNORMALIZED a_raw (scale factor commutes through
+        # the sum and cancels under L1 normalization — documented in the
+        # oracle too): h_raw(v) = Σ_{v→u} a_raw(u)
+        h_raw = (
+            a_state.join(by_dst.hint("merge"), a_state.id == F.col("h_dst"))
+            .groupBy(F.col("h_src").alias("id"))
+            .agg(F.sum("a_raw").alias("h_raw"))
+        )
+        raw, _ = local_checkpoint(
+            a_state.join(h_raw.hint("merge"), "id", "left").select(
+                "id",
+                "a_raw",
+                F.coalesce("h_raw", F.lit(0.0)).alias("h_raw"),
+                "auth",
+                "hub",
+            )
+        )
+        raws.append(raw)
+        # the one scalar action: both normalization sums, re-aggregated off
+        # the checkpointed blocks (not a recompute of the joins)
+        row = raw.agg(F.sum("a_raw").alias("asum"), F.sum("h_raw").alias("hsum")).first()
+        asum = float(row["asum"] or 0.0) or 1.0
+        hsum = float(row["hsum"] or 0.0) or 1.0
+        return raw.select(
+            "id",
+            (F.col("a_raw") / asum).alias("auth"),
+            (F.col("h_raw") / hsum).alias("hub"),
+            (
+                F.abs(F.col("a_raw") / asum - F.col("auth"))
+                + F.abs(F.col("h_raw") / hsum - F.col("hub"))
+            ).alias("_delta"),
+        )
+
     try:
         n = vertices_of(edges).count()
         if n == 0:
@@ -119,87 +171,20 @@ def hits(
                 "id", F.lit(0.0).alias("auth"), F.lit(0.0).alias("hub")
             )
             return HITSResult(empty, 0, 0.0, True, [])
-
-        if latest is None:
-            state = vertices_of(edges).select(
-                "id",
-                F.lit(0.0).alias("auth"),
-                F.lit(1.0 / n).alias("hub"),
-            )
-            state, _ = ctx.truncate(state, 0)
-            ctx.record(state, 0, {"delta": None})
-            done = 0
-        else:
-            state, _ = ctx.truncate(state, done)
-
-        it = done
-        for it in range(done + 1, max_iter + 1):
-            # authority step: push hub scores along out-edges
-            a_raw = (
-                state.join(by_src.hint("merge"), state.id == F.col("a_src"))
-                .groupBy(F.col("a_dst").alias("id"))
-                .agg(F.sum("hub").alias("a_raw"))
-            )
-            # hub step folded into the same plan: carry the raw sums and
-            # divide after reading the totals off the truncated state
-            a_state = (
-                state.join(a_raw.hint("merge"), "id", "left")
-                .select(
-                    "id",
-                    F.coalesce("a_raw", F.lit(0.0)).alias("a_raw"),
-                    "auth",
-                    "hub",
-                )
-            )
-            # hub step uses UNNORMALIZED a_raw (scale factor commutes through
-            # the sum and cancels under L1 normalization — documented in the
-            # oracle too): h_raw(v) = Σ_{v→u} a_raw(u)
-            h_raw = (
-                a_state.join(by_dst.hint("merge"), a_state.id == F.col("h_dst"))
-                .groupBy(F.col("h_src").alias("id"))
-                .agg(F.sum("a_raw").alias("h_raw"))
-            )
-            raw = (
-                a_state.join(h_raw.hint("merge"), "id", "left")
-                .select(
-                    "id",
-                    "a_raw",
-                    F.coalesce("h_raw", F.lit(0.0)).alias("h_raw"),
-                    "auth",
-                    "hub",
-                )
-            )
-            raw, _ = ctx.truncate(raw, it)
-            # first driver action: both normalization sums
-            row = raw.agg(
-                F.sum("a_raw").alias("asum"), F.sum("h_raw").alias("hsum")
-            ).first()
-            asum = float(row["asum"] or 0.0) or 1.0
-            hsum = float(row["hsum"] or 0.0) or 1.0
-            new_state = raw.select(
-                "id",
-                (F.col("a_raw") / asum).alias("auth"),
-                (F.col("h_raw") / hsum).alias("hub"),
-                (
-                    F.abs(F.col("a_raw") / asum - F.col("auth"))
-                    + F.abs(F.col("h_raw") / hsum - F.col("hub"))
-                ).alias("_delta"),
-            )
-            # second scalar action reads the L1 delta off the truncated plan
-            # (state already materialized above; this is a cheap re-agg)
-            delta = float(
-                new_state.agg(F.sum("_delta")).first()[0] or 0.0
-            )
-            state = new_state.drop("_delta")
-            ctx.record(state, it, {"delta": delta})
-            if delta < tol:
-                break
-
-        converged = delta < tol
-        ctx.finish(state, it, {"delta": delta, "final": converged})
+        state, it, last = ctx.run(
+            latest,
+            lambda: vertices_of(edges).select(
+                "id", F.lit(0.0).alias("auth"), F.lit(1.0 / n).alias("hub")
+            ),
+            step,
+            max_iter,
+            stop=converged,
+            feed={"delta": exact_sum(F.col("_delta"))},
+        )
+        delta = float("inf") if last["delta"] is None else last["delta"]
         return HITSResult(
-            state.select("id", "auth", "hub"), it, delta, converged, ctx.history
+            state.select("id", "auth", "hub"), it, delta, converged(last), ctx.history
         )
     finally:
-        by_src.unpersist()
-        by_dst.unpersist()
+        for df in (*raws, by_src, by_dst):
+            release(df)

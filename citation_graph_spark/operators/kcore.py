@@ -21,8 +21,8 @@ Scale shape per superstep (what runs on 1000 executors):
   aggregation yields undirected degrees.
 - two semi-joins (src ∈ survivors, dst ∈ survivors) restrict the edge
   set; survivors shrinks every round and never carries payload columns.
-- no scalar action: ``SuperstepContext.truncate`` checkpoints the new
-  edge set and observes its edge count in the same job (under AQE, one
+- no scalar action: ``SuperstepContext.run`` checkpoints the new edge
+  set and observes its edge count in the same job (under AQE, one
   job per shuffle stage of the superstep plus the checkpoint job).
 
 Durable checkpointing is deliberately omitted: peel states are derived
@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from citation_graph_spark.edges import symmetrize
 from citation_graph_spark.operators.superstep import SuperstepContext
+from citation_graph_spark.session import partition_count
 
 
 @dataclass
@@ -64,41 +65,38 @@ def k_core(
     vertices (pathological chain graphs; raise ``max_iter``)."""
     if k < 1:
         raise ValueError("k must be ≥ 1")
-    spark = edges.sparkSession
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    ctx = SuperstepContext(checkpoint=None)
+    num_partitions = partition_count(edges.sparkSession, num_partitions)
+    ctx = SuperstepContext()
+
+    def step(state: DataFrame, it: int, last: dict[str, Any]) -> DataFrame:
+        deg = state.groupBy("src").agg(F.count("*").alias("degree"))
+        survivors = deg.where(F.col("degree") >= k).select(F.col("src").alias("id"))
+        return state.join(survivors, state.src == survivors.id, "left_semi").join(
+            survivors, F.col("dst") == survivors.id, "left_semi"
+        )
+
+    def metrics(it: int, seen: dict[str, Any], last: dict[str, Any] | None) -> dict[str, Any]:
+        if last is None:
+            return seen
+        return {"edges": seen["edges"], "dropped_edges": last["edges"] - seen["edges"]}
+
+    def peeled(metrics: dict[str, Any]) -> bool:
+        return metrics["edges"] == 0 or metrics.get("dropped_edges") == 0
 
     # both directions present, deduped, self-loops dropped → one
     # groupBy(src) == undirected degree
-    state = symmetrize(edges).repartition(num_partitions, "src")
-    state, seen = ctx.truncate(state, 0, edges=F.count(F.lit(1)))
-    prev_ne = seen["edges"]
-    ctx.record(state, 0, {"edges": prev_ne})
-
-    it = 0
-    converged = prev_ne == 0
-    for it in range(1, (max_iter if not converged else 0) + 1):
-        deg = state.groupBy("src").agg(F.count("*").alias("degree"))
-        survivors = deg.where(F.col("degree") >= k).select(
-            F.col("src").alias("id")
-        )
-        new_state = state.join(
-            survivors, state.src == survivors.id, "left_semi"
-        ).join(survivors, F.col("dst") == survivors.id, "left_semi")
-        state, seen = ctx.truncate(new_state, it, edges=F.count(F.lit(1)))
-        ne = seen["edges"]
-        ctx.record(state, it, {"edges": ne, "dropped_edges": prev_ne - ne})
-        done = ne == prev_ne or ne == 0
-        prev_ne = ne
-        if done:
-            converged = True
-            break
-
+    state, it, last = ctx.run(
+        None,
+        lambda: symmetrize(edges).repartition(num_partitions, "src"),
+        step,
+        max_iter,
+        metrics,
+        stop=peeled,
+        observe={"edges": F.count(F.lit(1))},
+    )
     # within-core degrees off the fixpoint edge set (every vertex left in
     # it has degree ≥ k by construction; empty set → empty core)
     result = state.groupBy("src").agg(F.count("*").alias("degree")).select(
         F.col("src").alias("id"), "degree"
     )
-    return KCoreResult(result, it, converged, ctx.history)
+    return KCoreResult(result, it, peeled(last), ctx.history)

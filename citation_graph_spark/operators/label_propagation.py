@@ -37,7 +37,6 @@ def label_propagation(
     max_iter: int = 20,
     checkpoint_dir: str | None = None,
     durable_every: int = 5,
-    resume: bool = True,
     num_partitions: int | None = None,
     prepared: PreparedGraph | None = None,
 ) -> LPAResult:
@@ -71,8 +70,7 @@ def label_propagation(
 
     try:
         res = label_fixpoint(
-            prepared, "label_propagation", step, max_iter, checkpoint_dir,
-            durable_every, resume,
+            prepared, "label_propagation", step, max_iter, checkpoint_dir, durable_every
         )
     finally:
         if owns_prepared:

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from citation_graph_spark.caching import release_on_gc
 from citation_graph_spark.edges import symmetrize
+from citation_graph_spark.session import partition_count
 
 
 @dataclass
@@ -69,9 +70,7 @@ def link_prediction_scores(
     100 TB deployment needs; ``None`` means uncapped (small graphs /
     exactness baseline)."""
     spark = edges.sparkSession
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    num_partitions = partition_count(spark, num_partitions)
     sym = symmetrize(edges).repartition(num_partitions, "src").persist()
     deg = sym.groupBy("src").agg(F.count("*").alias("deg"))
 

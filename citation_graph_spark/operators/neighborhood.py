@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from citation_graph_spark.edges import vertices_of
 from citation_graph_spark.operators.superstep import SuperstepContext, release
+from citation_graph_spark.session import partition_count
 
 # P(register bit b set) = 2^-(b+1); 32 bits bounds counts ~2^30 — beyond
 # that use more registers, not deeper bits (HyperANF §2)
@@ -104,9 +105,7 @@ def hyperanf(
     registers are written there (the sidecar the SQL oracle replays from).
     """
     spark = edges.sparkSession
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    num_partitions = partition_count(spark, num_partitions)
     ctx = SuperstepContext()
     mcols = [f"m{i}" for i in range(k)]
 

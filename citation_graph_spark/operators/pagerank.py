@@ -59,7 +59,6 @@ def pagerank(
     checkpoint_dir: str | None = None,
     durable_every: int = 5,
     salt_factor: int | str = 0,
-    resume: bool = True,
     num_partitions: int | None = None,
     prepared: PreparedGraph | None = None,
     weight_col: str | None = None,
@@ -100,24 +99,22 @@ def pagerank(
     spark = edges.sparkSession
     if salt_factor == "auto":
         salt_factor = _resolve_auto_salt(
-            spark, prepared, checkpoint_dir if resume else None,
-            alpha=alpha, tol=tol, max_iter=max_iter,
+            spark, prepared, checkpoint_dir, alpha=alpha, tol=tol, max_iter=max_iter
         )
-
-    ckpt = None
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(
-            spark,
-            checkpoint_dir,
-            args={
-                "algorithm": "pagerank",
-                "alpha": alpha,
-                "tol": tol,
-                "max_iter": max_iter,
-                "salt_factor": salt_factor,
-                **({"weight_col": weight_col} if weight_col else {}),
-            },
-        )
+    ctx = SuperstepContext(
+        spark,
+        checkpoint_dir,
+        args={
+            "algorithm": "pagerank",
+            "alpha": alpha,
+            "tol": tol,
+            "max_iter": max_iter,
+            "salt_factor": salt_factor,
+            **({"weight_col": weight_col} if weight_col else {}),
+        },
+        durable_every=durable_every,
+        num_partitions=prepared.num_partitions,
+    )
 
     def setup() -> tuple[DataFrame, Callable[[float], Column]]:
         n = prepared.n_vertices()
@@ -127,10 +124,7 @@ def pagerank(
         return init, lambda dm: F.lit((1.0 - alpha) / n + alpha * dm / n)
 
     try:
-        return _power_iteration(
-            prepared, ckpt, durable_every, resume, setup, alpha, tol, max_iter,
-            salt_factor,
-        )
+        return _power_iteration(prepared, ctx, setup, alpha, tol, max_iter, salt_factor)
     finally:
         if owns_prepared:
             prepared.unpersist()
@@ -145,7 +139,6 @@ def personalized_pagerank(
     checkpoint_dir: str | None = None,
     durable_every: int = 5,
     salt_factor: int = 0,
-    resume: bool = True,
     num_partitions: int | None = None,
     prepared: PreparedGraph | None = None,
 ) -> PageRankResult:
@@ -183,26 +176,27 @@ def personalized_pagerank(
         edges = prepared.edges
     spark = edges.sparkSession
 
-    ckpt = None
+    args: dict[str, Any] = {}
     if checkpoint_dir is not None:
         # fingerprint the source set into the manifest args so a resume
         # against a checkpoint written for a DIFFERENT seed set is rejected
-        # by the args-compat check (order-independent sum of id hashes)
+        # by the args-compat check (order-independent sum of id hashes, in
+        # decimal: a long sum overflows under ANSI mode)
         src_fp = sources.select(
-            F.sum(F.xxhash64(F.col("id").cast("string"))).alias("fp")
-        ).first()["fp"]
-        ckpt = CheckpointManager(
-            spark,
-            checkpoint_dir,
-            args={
-                "algorithm": "personalized_pagerank",
-                "alpha": alpha,
-                "tol": tol,
-                "max_iter": max_iter,
-                "salt_factor": salt_factor,
-                "sources_fp": src_fp,
-            },
-        )
+            F.sum(F.xxhash64(F.col("id").cast("string")).cast("decimal(38,0)"))
+        ).first()[0]
+        args = {
+            "algorithm": "personalized_pagerank",
+            "alpha": alpha,
+            "tol": tol,
+            "max_iter": max_iter,
+            "salt_factor": salt_factor,
+            "sources_fp": None if src_fp is None else int(src_fp),
+        }
+    ctx = SuperstepContext(
+        spark, checkpoint_dir, args, durable_every=durable_every,
+        num_partitions=prepared.num_partitions,
+    )
 
     def setup() -> tuple[DataFrame, Callable[[float], Column]]:
         # source flag joined once into the static vertex table (broadcast:
@@ -232,10 +226,7 @@ def personalized_pagerank(
         ).otherwise(0.0)
 
     try:
-        return _power_iteration(
-            prepared, ckpt, durable_every, resume, setup, alpha, tol, max_iter,
-            salt_factor,
-        )
+        return _power_iteration(prepared, ctx, setup, alpha, tol, max_iter, salt_factor)
     finally:
         if owns_prepared:
             prepared.unpersist()
@@ -265,9 +256,7 @@ def _resolve_auto_salt(
 
 def _power_iteration(
     prepared: PreparedGraph,
-    ckpt: CheckpointManager | None,
-    durable_every: int,
-    resume: bool,
+    ctx: SuperstepContext,
     setup: Callable[[], tuple[DataFrame, Callable[[float], Column]]],
     alpha: float,
     tol: float,
@@ -278,27 +267,20 @@ def _power_iteration(
     :func:`personalized_pagerank`. ``setup()`` (called only for a non-empty
     graph) returns the iteration-0 state ``(id, rank, is_dangling, ...)``
     and ``teleport``: dangling mass -> the per-vertex restart Column of the
-    next superstep. Columns after ``rank`` are carried through unchanged."""
-    ctx = SuperstepContext(
-        checkpoint=ckpt, durable_every=durable_every,
-        num_partitions=prepared.num_partitions,
-    )
-    # --- resume check first: a fully-converged checkpoint returns before
-    # any static table is built -------------------------------------------
-    latest = ctx.resume() if resume else None
-    delta = float("inf")
-    if latest is not None:
+    next superstep. Columns after ``rank`` are carried through unchanged.
+
+    Each state's dangling mass is observed by its checkpoint job (a resumed
+    state's equals its manifest's: the sum is exact), each superstep's L1
+    delta by the superstep's."""
+
+    def converged(metrics: dict[str, Any]) -> bool:
+        return metrics.get("delta") is not None and metrics["delta"] < tol
+
+    # a fully-converged checkpoint returns before any static table is built
+    latest = ctx.resume()
+    if latest is not None and converged(latest[2]):
         done, state, metrics = latest
-        dangling_mass = float(metrics["dangling_mass"])
-        if metrics.get("delta") is not None:
-            # seed the residual: if the loop below runs zero iterations
-            # (done >= max_iter), the true recorded delta is reported
-            # instead of inf, and the manifest is not rewritten (see the
-            # `ran` guard at the bottom)
-            delta = float(metrics["delta"])
-            if delta < tol:
-                # Already converged — nothing to recompute.
-                return PageRankResult(state.select("id", "rank"), done, delta, True, [])
+        return PageRankResult(state.select("id", "rank"), done, metrics["delta"], True, [])
 
     # --- static per-run tables (PreparedGraph: built once, persisted,
     # shared across algorithm calls when the caller passed one) ------------
@@ -308,38 +290,20 @@ def _power_iteration(
         return PageRankResult(empty, 0, 0.0, True, [])
     init, teleport = setup()
 
-    if latest is None:
-        state, seen = ctx.truncate(init, 0, dangling_mass=_dangling_mass())
-        dangling_mass = float(seen["dangling_mass"] or 0.0)
-        ctx.record(state, 0, {"dangling_mass": dangling_mass, "delta": None})
-        done = 0
-    else:
-        state, _ = ctx.truncate(state, done)
-
-    ran = False
-    it = done
-    for it in range(done + 1, max_iter + 1):
-        ran = True
-        step = superstep_ranks(state, w_edges, salt_factor, teleport(dangling_mass), alpha)
-        state, seen = ctx.truncate(
-            step, it, delta=exact_sum(F.col("_delta")), dangling_mass=_dangling_mass()
-        )
-        delta = float(seen["delta"] or 0.0)
-        dangling_mass = float(seen["dangling_mass"] or 0.0)
-        ctx.record(state, it, {"dangling_mass": dangling_mass, "delta": delta})
-        if delta < tol:
-            break
-
-    converged = delta < tol
-    if ran:
-        # Durably record the last state (full schema, so resume still works)
-        # even when it fell between durable_every boundaries. Skipped when
-        # zero iterations ran — rewriting the manifest would clobber the
-        # recorded true residual (and delta=inf is not valid JSON).
-        ctx.finish(
-            state, it, {"dangling_mass": dangling_mass, "delta": delta, "final": converged}
-        )
-    return PageRankResult(state.select("id", "rank"), it, delta, converged, ctx.history)
+    state, it, last = ctx.run(
+        latest,
+        lambda: init,
+        lambda state, it, last: superstep_ranks(
+            state, w_edges, salt_factor, teleport(last["dangling_mass"]), alpha
+        ),
+        max_iter,
+        stop=converged,
+        observe={"dangling_mass": exact_sum(F.when(F.col("is_dangling"), F.col("rank")))},
+        feed={"delta": exact_sum(F.col("_delta"))},
+    )
+    # no superstep run from iteration 0 (max_iter=0) leaves no residual
+    delta = float("inf") if last["delta"] is None else last["delta"]
+    return PageRankResult(state.select("id", "rank"), it, delta, converged(last), ctx.history)
 
 
 def superstep_ranks(
@@ -364,8 +328,3 @@ def superstep_ranks(
         *carried,
         F.abs(new_rank - state.rank).alias("_delta"),
     )
-
-
-def _dangling_mass() -> Column:
-    """Sum of rank over dangling vertices (restarted uniformly next step)."""
-    return exact_sum(F.when(F.col("is_dangling"), F.col("rank")))

@@ -20,6 +20,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from citation_graph_spark.edges import out_degrees
+from citation_graph_spark.session import partition_count
+
+
+# Skew probe (``suggest_salt_factor``): the hottest src's edge share below
+# which salting is never proposed, the largest factor tried, and the cost of
+# one replicated (shuffled + sorted) rank row relative to one cache-resident
+# merge-joined edge row.
+_SALT_SHARE_THRESHOLD = 0.02
+_SALT_MAX_FACTOR = 32
+_SALT_REPLICATION_COST = 4.0
+# Timed supersteps per arm of the measured salt A/B (``measured_salt_choice``).
+_SALT_AB_SUPERSTEPS = 2
 
 
 def superstep_contribs(
@@ -71,10 +83,7 @@ class PreparedGraph:
         scan-side filter belongs to the caller's ingest contract)."""
         self.edges = edges
         self.weight_col = weight_col
-        spark = edges.sparkSession
-        self.num_partitions = num_partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
+        self.num_partitions = partition_count(edges.sparkSession, num_partitions)
         self.pre_partitioned = pre_partitioned
         self._weighted: dict[int, DataFrame] = {}
         self._sym: DataFrame | None = None
@@ -110,12 +119,7 @@ class PreparedGraph:
         return cls(spark.table(table), num_partitions, pre_partitioned=True)
 
     # --- pagerank statics ---------------------------------------------------
-    def suggest_salt_factor(
-        self,
-        threshold: float = 0.02,
-        max_factor: int = 32,
-        replication_cost: float = 4.0,
-    ) -> int:
+    def suggest_salt_factor(self) -> int:
         """Skew probe → candidate salt factor (the ``salt_factor="auto"``
         heuristic; the measured veto is ``resolve_salt_factor``).
 
@@ -125,15 +129,14 @@ class PreparedGraph:
         AQE cannot split it because the edge side is a persisted cache,
         not shuffle blocks (the measured salting study, BENCH.md). Salting
         by f cuts that to max(s/f, 1/P)·|E| but REPLICATES every rank row
-        f×, adding ≈ (f−1)·|V|·replication_cost/P work per partition
-        (replicated rank rows are shuffled and sorted each superstep —
-        the cost the round-4 heuristic ignored, VERDICT r04 #1). The
-        chosen factor maximizes the modeled net benefit over powers of
-        two ≤ ``max_factor``; no positive net (or share < ``threshold``)
-        → 1. ``replication_cost`` ≈ cost of one shuffled+sorted rank row
-        relative to one cache-resident merge-joined edge row —
-        deliberately conservative, and the measured A/B has the final
-        say. Deterministic for a given graph."""
+        f×, adding ≈ (f−1)·|V|·c/P work per partition, c =
+        ``_SALT_REPLICATION_COST`` (replicated rank rows are shuffled and
+        sorted each superstep — the cost the round-4 heuristic ignored,
+        VERDICT r04 #1; c is deliberately conservative, and the measured
+        A/B has the final say). The chosen factor maximizes the modeled
+        net benefit over powers of two ≤ ``_SALT_MAX_FACTOR``; no positive
+        net (or s < ``_SALT_SHARE_THRESHOLD``) → 1. Deterministic for a
+        given graph."""
         row = (
             out_degrees(self.edges)
             .agg(
@@ -146,7 +149,7 @@ class PreparedGraph:
         if not row or not row["tot"]:
             return 1
         share = row["mx"] / row["tot"]
-        if share < threshold:
+        if share < _SALT_SHARE_THRESHOLD:
             return 1
         p = self.num_partitions
         tot, n_src = row["tot"], row["n_src"]
@@ -156,16 +159,14 @@ class PreparedGraph:
 
         best, best_net = 1, 0.0
         f = 2
-        while f <= max_factor:
-            net = (straggler(1) - straggler(f)) - (f - 1) * n_src * replication_cost / p
+        while f <= _SALT_MAX_FACTOR:
+            net = (straggler(1) - straggler(f)) - (f - 1) * n_src * _SALT_REPLICATION_COST / p
             if net > best_net:
                 best, best_net = f, net
             f *= 2
         return best
 
-    def measured_salt_choice(
-        self, candidate: int, supersteps: int = 2
-    ) -> int:
+    def measured_salt_choice(self, candidate: int) -> int:
         """Timed A/B of the REAL superstep body (``superstep_contribs``) —
         unsalted vs ``candidate``, interleaved, min-of-trials per arm
         (host interference only ever slows a trial, so the min is the
@@ -176,7 +177,7 @@ class PreparedGraph:
         replication overhead and no salted-cache memory cost.
 
         Cost: both static layouts get built (the winner's build is needed
-        anyway) plus 2·``supersteps`` measured supersteps — seconds,
+        anyway) plus 2·``_SALT_AB_SUPERSTEPS`` measured supersteps — seconds,
         amortized over a convergence run of dozens."""
         import time
 
@@ -184,7 +185,7 @@ class PreparedGraph:
         walls: dict[int, list[float]] = {0: [], candidate: []}
         for f in (0, candidate):
             self.weighted_edges(f)  # build outside the timed region
-        for _ in range(max(1, supersteps)):
+        for _ in range(_SALT_AB_SUPERSTEPS):
             for f in (0, candidate):
                 w_edges = self.weighted_edges(f)
                 t0 = time.time()
@@ -200,7 +201,7 @@ class PreparedGraph:
             self._weighted.pop(loser_key).unpersist()
         return winner
 
-    def resolve_salt_factor(self, validate: bool = True) -> int:
+    def resolve_salt_factor(self) -> int:
         """Resolve ``salt_factor="auto"``: the deterministic skew probe
         proposes, and (when it proposes salting) a measured superstep A/B
         disposes — the probe's cost model can mis-rank layouts on a given
@@ -211,7 +212,7 @@ class PreparedGraph:
         resume never depends on re-measurement."""
         if self._resolved_salt is None:
             candidate = self.suggest_salt_factor()
-            if candidate > 1 and validate:
+            if candidate > 1:
                 candidate = self.measured_salt_choice(candidate)
             self._resolved_salt = candidate
         return self._resolved_salt

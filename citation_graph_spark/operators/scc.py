@@ -54,6 +54,7 @@ from typing import Any
 from pyspark.sql import DataFrame, functions as F
 
 from citation_graph_spark.edges import vertices_of
+from citation_graph_spark.session import partition_count
 from citation_graph_spark.operators.superstep import (
     SuperstepContext,
     count_true,
@@ -93,9 +94,7 @@ def strongly_connected_components(
     dropped from the traversal (the vertex itself is still labeled).
     """
     spark = edges.sparkSession
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    num_partitions = partition_count(spark, num_partitions)
     ctx = SuperstepContext()
 
     all_vertices = vertices_of(edges)

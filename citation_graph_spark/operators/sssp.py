@@ -38,6 +38,7 @@ from citation_graph_spark.operators.superstep import (
     local_checkpoint,
     release,
 )
+from citation_graph_spark.session import partition_count
 
 
 @dataclass
@@ -68,7 +69,7 @@ def sssp(
     # partitioned on the join key and sorted within partitions, persisted
     # once — every round's frontier SMJ re-sorts only the (small) frontier
     # side; the merge hint keeps AQE from flipping to a per-round broadcast
-    num_partitions = edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    num_partitions = partition_count(edges.sparkSession)
     e = (
         edges.select(
             "src", "dst", F.col(weight_col).cast("long").alias("w")
@@ -76,7 +77,7 @@ def sssp(
         .where(F.col("src") != F.col("dst"))
         .groupBy("src", "dst")
         .agg(F.min("w").alias("w"))
-        .repartition(int(num_partitions), "src")
+        .repartition(num_partitions, "src")
         .sortWithinPartitions("src")
         .persist()
     )
@@ -131,7 +132,7 @@ def sssp(
         nonlocal base, base_rows
         prev = base
         base = (
-            df.repartition(int(num_partitions), "root", "id")
+            df.repartition(num_partitions, "root", "id")
             .sortWithinPartitions("root", "id")
             .persist()
         )

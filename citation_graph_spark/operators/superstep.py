@@ -1,29 +1,36 @@
-"""Superstep loop machinery shared by every iterative algorithm.
+"""Superstep driver shared by every iterative algorithm.
 
 The reference's run loop is ``for depth in range(max_depth):
 _collect_papers_for_next_level(depth)`` (``src/citation_graph/traverser.py:
 132-145``) with a checkpoint after every request. Here each superstep is a
-Catalyst-planned join-aggregate over the edge table; the loop lives on the
-driver and owns exactly the things Catalyst cannot:
+Catalyst-planned join-aggregate over the edge table, and
+``SuperstepContext.run`` is the one loop on the driver around it. An
+operator hands it only what is its own: the iteration-0 state (``init``),
+the superstep (``step``), the convergence aggregates, the metrics it
+records and its stop rule. ``run`` owns the rest:
 
-- **resume** — ``resume`` returns the newest durable state whose recorded
-  args match this run's; a checkpoint written under other args is ignored
-  with a ``RuntimeWarning`` and the run starts fresh,
+- **start or resume** — ``resume`` returns the newest durable state whose
+  recorded args match this run's (a checkpoint written under other args is
+  ignored with a ``RuntimeWarning`` and the run starts fresh); the caller
+  returns early on an already-converged checkpoint, before building any
+  static table, and passes the rest to ``run``, which truncates either the
+  resumed state or ``init()`` and records a fresh iteration 0,
 - **ending a superstep in one Spark job** — ``truncate`` attaches the
-  caller's convergence aggregates (L1 delta, dangling mass, changed or row
-  count, checksum) as a ``pyspark.sql.Observation``, so they ride the job
-  that materializes the state instead of costing a scalar action of their
-  own (``local_checkpoint`` does the same for frames outside the loop's
-  state chain); for loops
-  whose state is keyed on ``id`` it also hash-partitions the state on
-  ``id`` into the edge caches' partition count (see
+  convergence aggregates (L1 delta, dangling mass, changed or row count,
+  checksum) as a ``pyspark.sql.Observation``, so they ride the job that
+  materializes the state instead of costing a scalar action of their own
+  (``local_checkpoint`` does the same for frames outside the loop's state
+  chain); for loops whose state is keyed on ``id`` it also hash-partitions
+  the state on ``id`` into the edge caches' partition count (see
   ``copartitioned_planning``), so the next superstep's joins against the
   src-partitioned caches shuffle nothing on the state side,
-- **plan-lineage truncation** — iterative self-joins grow the logical plan
-  without bound; each superstep's state is cut by an eager
-  ``localCheckpoint`` and, every ``durable_every`` supersteps, also written
+- **plan-lineage truncation and durable saves** — iterative self-joins grow
+  the logical plan without bound; each state is cut by an eager
+  ``localCheckpoint`` and, every ``durable_every`` iterations, also written
   as a durable Parquet checkpoint + manifest (resumable, see
-  ``sources.checkpoint``) while the loop keeps the in-memory state,
+  ``sources.checkpoint``) while the loop keeps the in-memory state; the
+  final state is saved once more only when a superstep ran and ``record``
+  did not just save it,
 - **per-superstep history** — the convergence scalars only, so results are
   deterministic; wall-clock timing does not belong in a result.
 
@@ -38,7 +45,7 @@ import logging
 import warnings
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Any, Iterator
+from typing import Any, Callable, Iterator
 
 from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
@@ -91,8 +98,9 @@ def exact_sum(col: Column) -> Column:
     task completion order, so a plain double sum could change in its last
     bits from run to run (and move the ranks that depend on it). The sum is
     taken in exact ``decimal(38,30)`` arithmetic and rounded to double once;
-    values must stay below 1e8 (PageRank masses and L1 deltas are <= 2)."""
-    return F.sum(col.cast("decimal(38,30)")).cast("double")
+    values must stay below 1e8 (PageRank masses and L1 deltas are <= 4).
+    0.0 when no row has a value, so a recorded metric is never null."""
+    return F.coalesce(F.sum(col.cast("decimal(38,30)")).cast("double"), F.lit(0.0))
 
 
 def local_checkpoint(
@@ -133,29 +141,40 @@ def release(df: DataFrame) -> None:
         log.warning("unpersist failed", exc_info=True)
 
 
+Metrics = dict[str, Any]
+
+
 @dataclass
 class SuperstepContext:
-    """Per-run iteration-state handler.
+    """Per-run iteration-state handler; ``run`` is the superstep loop.
 
-    ``truncate`` must be called on the new state once per superstep; it
-    returns a frame whose lineage no longer references previous iterations,
-    together with the scalars it observed on the way.
+    ``checkpoint_dir``: when set, states are saved there every
+    ``durable_every`` iterations under the manifest ``args`` (read with
+    ``spark``), and ``resume`` finds them again.
 
     ``num_partitions``: when set, states are keyed on ``id`` and are kept
     hash-partitioned on it into this many partitions (the ``PreparedGraph``
     edge caches' count); when ``None`` a state is checkpointed as planned.
     """
 
-    checkpoint: CheckpointManager | None = None
+    spark: SparkSession | None = None
+    checkpoint_dir: str | None = None
+    args: dict[str, Any] = field(default_factory=dict)
     durable_every: int = 5
     num_partitions: int | None = None
-    history: list[dict[str, Any]] = field(default_factory=list)
+    history: list[Metrics] = field(default_factory=list)
+    checkpoint: CheckpointManager | None = field(init=False, default=None)
     _last: DataFrame | None = None
     _pending_unpersist: DataFrame | None = None
+    _saved: tuple[int, DataFrame] | None = None
+
+    def __post_init__(self) -> None:
+        if self.checkpoint_dir is not None:
+            self.checkpoint = CheckpointManager(self.spark, self.checkpoint_dir, self.args)
 
     def resume(
         self, ignore: tuple[str, ...] = ("max_iter", "tol")
-    ) -> tuple[int, DataFrame, dict[str, Any]] | None:
+    ) -> tuple[int, DataFrame, Metrics] | None:
         """``(iteration, state, metrics)`` of the newest valid durable
         state, or None when there is none or it was written under other
         args (``resume_compatible``: every recorded hyperparameter must
@@ -165,8 +184,8 @@ class SuperstepContext:
         A mismatch warns; the fresh run then prunes the dead timeline on its
         first durable save.
 
-        The returned state is the raw Parquet scan: a caller that goes on
-        iterating sends it through ``truncate`` once."""
+        The returned state is the raw Parquet scan: ``run`` sends it through
+        ``truncate`` once."""
         if self.checkpoint is None:
             return None
         latest = self.checkpoint.latest()
@@ -183,6 +202,63 @@ class SuperstepContext:
             )
             return None
         return iteration, state, manifest["metrics"]
+
+    def run(
+        self,
+        latest: tuple[int, DataFrame, Metrics] | None,
+        init: Callable[[], DataFrame],
+        step: Callable[[DataFrame, int, Metrics], DataFrame],
+        max_iter: int,
+        metrics: Callable[[int, Metrics, Metrics | None], Metrics] | None = None,
+        *,
+        stop: Callable[[Metrics], bool],
+        observe: dict[str, Column] | None = None,
+        feed: dict[str, Column] | None = None,
+    ) -> tuple[DataFrame, int, Metrics]:
+        """Iterate to ``stop`` or ``max_iter``; return the last state, its
+        iteration and its metrics.
+
+        Starts from ``latest`` (what ``resume`` returned) or, when that is
+        None, from ``init()``, recorded as iteration 0. Iteration ``it``
+        truncates ``step(state, it, last)``, where ``last`` is the previous
+        iteration's metrics (for a resumed state: its manifest's, updated
+        with what was observed on it), records it and ends the loop when
+        ``stop(metrics)`` holds — tested on the starting state too.
+
+        ``observe`` aggregates ride every state's checkpoint job; ``feed``
+        aggregates ride only a superstep's job and read the ``_`` columns
+        ``step`` adds (they are None at a fresh iteration 0).
+        ``metrics(it, seen, last)`` turns the observed values into the
+        recorded metrics (default: as observed; ``last`` is None at a fresh
+        iteration 0).
+
+        When a superstep ran, the last state is durably saved as final.
+        Each state is written once: when ``record`` just saved that very
+        frame, only its manifest's metrics are rewritten."""
+        observe, feed = observe or {}, feed or {}
+        metrics = metrics or (lambda it, seen, last: seen)
+        if latest is None:
+            done = 0
+            state, seen = self.truncate(init(), 0, **observe)
+            last = metrics(0, {**dict.fromkeys(feed), **seen}, None)
+            self.record(state, 0, last)
+        else:
+            done, state, recorded = latest
+            state, seen = self.truncate(state, done, **observe)
+            last = {**recorded, **seen}
+        it = done
+        while it < max_iter and not stop(last):
+            it += 1
+            state, seen = self.truncate(step(state, it, last), it, **observe, **feed)
+            last = metrics(it, seen, last)
+            self.record(state, it, last)
+        if it > done and self.checkpoint is not None:
+            final = {**last, "final": stop(last)}
+            if self._saved is not None and self._saved[0] == it and self._saved[1] is state:
+                self.checkpoint.set_metrics(it, final)
+            else:
+                self.checkpoint.save(state, it, final)
+        return state, it, last
 
     def truncate(
         self, state: DataFrame, iteration: int, **observe: Column
@@ -211,7 +287,7 @@ class SuperstepContext:
         self,
         state: DataFrame,
         iteration: int,
-        metrics: dict[str, Any] | None = None,
+        metrics: Metrics | None = None,
     ) -> None:
         """Log this iteration's metrics; release the superseded iteration's
         blocks (``truncate`` has materialized ``state`` by now); durably
@@ -228,21 +304,7 @@ class SuperstepContext:
             and iteration % self.durable_every == 0
         ):
             self.checkpoint.save(state, iteration, metrics)
-
-    def finish(
-        self, state: DataFrame, iteration: int, metrics: dict[str, Any] | None = None
-    ) -> None:
-        """Durably record the final state (if checkpointing is on). When
-        ``record`` just saved this very state as ``iteration``, only that
-        manifest's metrics are rewritten: each state is written once."""
-        if self.checkpoint is None:
-            return
-        last = self.history[-1]["iteration"] if self.history else None
-        on_boundary = self.durable_every > 0 and iteration % self.durable_every == 0
-        if state is self._last and last == iteration and on_boundary:
-            self.checkpoint.set_metrics(iteration, metrics or {})
-        else:
-            self.checkpoint.save(state, iteration, metrics)
+            self._saved = (iteration, state)
 
     def cleanup(self) -> None:
         if self._last is not None:

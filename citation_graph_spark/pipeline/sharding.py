@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from citation_graph_spark.pipeline.text import token_count
+from citation_graph_spark.session import partition_count
 
 _HEX_SPACE = 16**8
 
@@ -122,8 +123,7 @@ def pack_token_bins_scalable(
     if budget_tokens <= 0:
         raise ValueError("budget_tokens must be positive")
     spark = docs.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    num_partitions = partition_count(spark, num_partitions)
     base = docs.select(
         F.col(id_col), token_count(F.col(text_col)).alias("n_tokens")
     )

@@ -131,3 +131,10 @@ def _parse_local_threads(master: str) -> int | None:
         return int(inner)
     except ValueError:
         return None
+
+
+def partition_count(spark: SparkSession, num_partitions: int | None = None) -> int:
+    """``num_partitions`` when given, else the session's
+    ``spark.sql.shuffle.partitions`` (32 when unset): the one default for
+    the partition count of an operator's shuffled caches and states."""
+    return num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))

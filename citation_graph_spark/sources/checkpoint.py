@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 SPEC_VERSION = 2
+# The manifest's ``creator`` field, as the reference's run-meta header has one.
+CREATOR = "citation_graph_spark"
 # Underscore prefix: Spark's file index skips it when scanning the parquet dir.
 _MANIFEST = "_manifest.json"
 
@@ -102,7 +104,6 @@ class CheckpointManager:
     spark: SparkSession
     path: str
     args: dict[str, Any] = field(default_factory=dict)
-    creator: str = "citation_graph_spark"
 
     def _iter_dir(self, iteration: int) -> str:
         return os.path.join(self.path, f"iter={iteration}")
@@ -138,7 +139,7 @@ class CheckpointManager:
         os.rename(tmp, target)
         lineage = [{"file": f, "rows": n} for f, n in _file_rows(target).items()]
         manifest = {
-            "creator": self.creator,
+            "creator": CREATOR,
             "file-spec-version": SPEC_VERSION,
             "version": __version__,
             "time": time.time(),

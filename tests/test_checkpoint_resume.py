@@ -157,6 +157,49 @@ def test_bfs_resume_continues_deeper(spark, tmp_path):
     assert again.history == []
 
 
+def test_bfs_resume_without_level_metric(spark, tmp_path):
+    """A bfs manifest need not record ``level`` (a final manifest has never
+    carried it): the resumed run takes its depth from the iteration, and
+    expanding deeper from it equals an uninterrupted run."""
+    import json
+
+    edges = spark.createDataFrame(
+        [(i, i + 1, 1) for i in range(10)] + [(0, 5, 2)], "src long, dst long, pos int"
+    )
+    ck = str(tmp_path / "ck_bfs_nolevel")
+    bfs_expand(edges, root=0, max_depth=2, checkpoint_dir=ck, durable_every=1)
+    for it in CheckpointManager(spark, ck).iterations():
+        mpath = os.path.join(ck, f"iter={it}", "_manifest.json")
+        with open(mpath, encoding="utf-8") as fh:
+            manifest = json.load(fh)
+        manifest["metrics"].pop("level", None)
+        with open(mpath, "w", encoding="utf-8") as fh:
+            json.dump(manifest, fh)
+
+    direct = bfs_expand(edges, root=0, max_depth=5)
+    resumed = bfs_expand(edges, root=0, max_depth=5, checkpoint_dir=ck, durable_every=1)
+    as_set = lambda r: {(x["id"], x["depth"], x["parent"]) for x in r.visited.collect()}  # noqa: E731
+    assert as_set(resumed) == as_set(direct)
+    assert resumed.depth_reached == direct.depth_reached
+    assert resumed.history == direct.history[3:]
+
+
+def test_ppr_checkpoint_fingerprints_any_source_set(spark, tmp_path):
+    """The source-set fingerprint in the manifest args is a sum of 64-bit
+    hashes: it must not overflow under ANSI mode, and a different source
+    set must still be told apart on resume."""
+    edges = datagen.zipf_edges(spark, 60, 300, seed=3).cache()
+    ck = str(tmp_path / "ck_ppr")
+    sources = spark.createDataFrame([(0,), (1,), (7,)], "id bigint")
+    first = personalized_pagerank(edges, sources=sources, tol=1e-6, checkpoint_dir=ck)
+    again = personalized_pagerank(edges, sources=sources, tol=1e-6, checkpoint_dir=ck)
+    assert again.history == [] and _ranks(again) == _ranks(first)
+    other = spark.createDataFrame([(0,), (1,)], "id bigint")
+    with pytest.warns(RuntimeWarning, match="different .*args"):
+        personalized_pagerank(edges, sources=other, tol=1e-6, checkpoint_dir=ck)
+    edges.unpersist()
+
+
 def test_bfs_resume_rejects_other_root(spark, tmp_path):
     edges = spark.createDataFrame(
         [(i, i + 1, 1) for i in range(6)], "src long, dst long, pos int"

@@ -75,3 +75,25 @@ def test_checkpoint_resume_parity(spark, tmp_path):
     for v in a:
         assert math.isclose(a[v][0], b[v][0], abs_tol=1e-12), v
         assert math.isclose(a[v][1], b[v][1], abs_tol=1e-12), v
+
+
+def test_checkpoint_writes_each_state_once(spark, tmp_path, monkeypatch):
+    """A run that stops on a ``durable_every`` boundary saves its final state
+    once: the final save only rewrites that manifest's metrics."""
+    from citation_graph_spark.sources.checkpoint import CheckpointManager
+
+    saved = []
+    save = CheckpointManager.save
+
+    def counting_save(self, state, iteration, metrics=None):
+        saved.append(iteration)
+        return save(self, state, iteration, metrics)
+
+    monkeypatch.setattr(CheckpointManager, "save", counting_save)
+    edges = datagen.zipf_edges(spark, n_vertices=80, n_edges=500, seed=3)
+    ck = str(tmp_path / "hits_ck")
+    res = hits(edges, tol=0.0, max_iter=4, checkpoint_dir=ck, durable_every=2)
+    assert res.iterations == 4
+    assert saved == [0, 2, 4]
+    final = CheckpointManager(spark, ck).latest()
+    assert final[0] == 4 and final[2]["metrics"]["final"] is False

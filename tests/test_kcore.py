@@ -40,6 +40,34 @@ def test_empty_core(spark):
     assert _core(res) == {}
 
 
+def test_peel_history(spark):
+    """Each round records the edge count left and the edges it dropped; the
+    round that drops none (or leaves none) ends the peel, and an edge set
+    that is empty from the start runs no round at all."""
+    edges = _df(spark, [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4)])
+    res = k_core(edges, k=2)
+    assert (res.iterations, res.converged) == (3, True)
+    assert res.history == [
+        {"iteration": 0, "edges": 10},
+        {"iteration": 1, "edges": 8, "dropped_edges": 2},
+        {"iteration": 2, "edges": 6, "dropped_edges": 2},
+        {"iteration": 3, "edges": 6, "dropped_edges": 0},
+    ]
+    path = k_core(_df(spark, [(0, 1), (1, 2), (2, 3)]), k=2)
+    assert (path.iterations, path.converged) == (2, True)
+    assert path.history == [
+        {"iteration": 0, "edges": 6},
+        {"iteration": 1, "edges": 2, "dropped_edges": 4},
+        {"iteration": 2, "edges": 0, "dropped_edges": 2},
+    ]
+    loop = k_core(_df(spark, [(0, 0)]), k=1)  # the self-loop is dropped
+    assert (loop.iterations, loop.converged) == (0, True)
+    assert loop.history == [{"iteration": 0, "edges": 0}]
+    assert _core(loop) == {}
+    capped = k_core(edges, k=2, max_iter=1)
+    assert (capped.iterations, capped.converged) == (1, False)
+
+
 def test_k1_keeps_every_connected_vertex(spark):
     edges = _df(spark, [(0, 1), (2, 3), (3, 3)])  # self-loop dropped
     res = k_core(edges, k=1)

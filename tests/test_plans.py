@@ -23,6 +23,7 @@ from citation_graph_spark.edges import dedup_edges, out_degrees
 from citation_graph_spark.operators.betweenness import betweenness
 from citation_graph_spark.operators.bfs import bfs_expand
 from citation_graph_spark.operators.components import connected_components
+from citation_graph_spark.operators.hits import hits
 from citation_graph_spark.operators.kcore import k_core
 from citation_graph_spark.operators.scc import strongly_connected_components
 from citation_graph_spark.operators.sssp import sssp
@@ -332,10 +333,12 @@ def _weighted_zipf(spark):
 # operator -> (call, job bound). The bounds hold for this fixed graph with
 # every convergence scalar observed by the job that checkpoints its
 # superstep; a scalar action after each checkpoint costs 1-2 more jobs a
-# superstep and breaks them.
+# superstep and breaks them. hits keeps one such action, its normalization
+# sums; its L1 delta rides the checkpoint job of the normalized state.
 _JOB_BOUNDS = {
     "bfs": (lambda e: bfs_expand(e, root=0, max_depth=8), 40),
     "cc_two_star": (lambda e: connected_components(e, algorithm="two_star"), 26),
+    "hits": (lambda e: hits(e, max_iter=6), 70),
     "kcore": (lambda e: k_core(e, k=5), 8),
     "scc": (strongly_connected_components, 64),
     "sssp": (lambda e: sssp(e, roots=[0, 1, 2, 3]), 83),
