@@ -120,7 +120,7 @@ def betweenness(
         n = observed["n"]
         history.append({"superstep": f"forward_{d}", "frontier_rows": n})
         if n == 0:
-            nxt.unpersist()
+            release(nxt)
             break
         levels.append(nxt)
         old_seen.append(seen)

@@ -174,12 +174,12 @@ def _two_star(
     stars rooted at component minima). Each phase is one groupBy + one
     join — O(log n) rounds total regardless of diameter.
 
-    Each round is one truncate whose job also observes the fixpoint test's
+    Each round is one checkpoint job that also observes the fixpoint test's
     inputs: the pointer count and an order-independent xxhash64 checksum
     of the pointer set. Resume goes through ``SuperstepContext.run``
     (reference analog: ``src/citation_graph/cache_manager.py:221-237``):
-    the durable state is the pointer set, and the resumed state's first
-    truncate observes its checksum, so a resumed run re-enters the
+    the durable state is the pointer set, and the resumed state's
+    checkpoint observes its checksum, so a resumed run re-enters the
     fixpoint test exactly where the killed run left it. Star rounds are
     deterministic set transforms, so kill/resume is byte-identical to an
     uninterrupted run. This matters precisely here: two-star is the

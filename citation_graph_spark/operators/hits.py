@@ -21,9 +21,12 @@ Scale shape per superstep (what runs on 1000 executors):
 - the edge table is cached TWICE, once hash-partitioned+sorted on ``src``
   (authority step: ``hub ⋈ edges`` on src, ``groupBy(dst).sum()``) and
   once on ``dst`` (hub step: ``auth ⋈ edges`` on dst,
-  ``groupBy(src).sum()``) — each join is a merge-hinted SMJ where ONLY
-  the small score frame shuffles, mirroring the PageRank superstep
-  (operators/pagerank.py); both aggregations get map-side partials.
+  ``groupBy(src).sum()``); both aggregations get map-side partials.
+- the score state and the raw sums are kept hash-partitioned on ``id``
+  into the caches' partition count (``num_partitions`` of
+  ``SuperstepContext`` and ``local_checkpoint``), so every merge-hinted
+  SMJ is co-partitioned and the two aggregates are the superstep's only
+  Exchanges, like the PageRank superstep (operators/pagerank.py).
 - the raw sums are checkpointed first (``local_checkpoint``), and one
   driver scalar action reads both normalization sums off the checkpointed
   blocks (needed before the normalized vectors exist) — a cheap
@@ -85,6 +88,7 @@ def hits(
         checkpoint_dir,
         args={"algorithm": "hits", "tol": tol, "max_iter": max_iter},
         durable_every=durable_every,
+        num_partitions=num_partitions,
     )
 
     def converged(metrics: dict[str, Any]) -> bool:
@@ -146,7 +150,8 @@ def hits(
                 F.coalesce("h_raw", F.lit(0.0)).alias("h_raw"),
                 "auth",
                 "hub",
-            )
+            ),
+            num_partitions,
         )
         raws.append(raw)
         # the one scalar action: both normalization sums, re-aggregated off

@@ -47,7 +47,7 @@ from typing import Any
 from pyspark.sql import DataFrame, functions as F
 
 from citation_graph_spark.edges import vertices_of
-from citation_graph_spark.operators.superstep import SuperstepContext, release
+from citation_graph_spark.operators.superstep import local_checkpoint, release
 from citation_graph_spark.session import partition_count
 
 # P(register bit b set) = 2^-(b+1); 32 bits bounds counts ~2^30 — beyond
@@ -106,7 +106,6 @@ def hyperanf(
     """
     spark = edges.sparkSession
     num_partitions = partition_count(spark, num_partitions)
-    ctx = SuperstepContext()
     mcols = [f"m{i}" for i in range(k)]
 
     e = (
@@ -125,46 +124,34 @@ def hyperanf(
     if registers_out is not None:
         state.write.mode("overwrite").parquet(registers_out)
         state = spark.read.parquet(registers_out)
-    state, _ = ctx.truncate(state, 0)
-    ctx.record(state, 0)
+    state, _ = local_checkpoint(state)
 
-    import time as _time
+    def snapshot(d: int) -> DataFrame:
+        # |B(v,d)| estimated with the SAME estimator at every radius,
+        # d=0 included, so downstream telescoping sums (harmonic
+        # centrality) difference like-with-like (HyperANF §3)
+        out, _ = local_checkpoint(state.select("id", F.lit(d).alias("d"), _rho_sum_expr(k)))
+        return out
 
-    # d=0 snapshot: |B(v,0)| estimated with the SAME estimator as every
-    # other radius, so downstream telescoping sums (harmonic centrality)
-    # difference like-with-like (HyperANF §3: centralities use the
-    # estimated ball sizes at every d, including 0)
-    snap0 = state.select(
-        "id", F.lit(0).alias("d"), _rho_sum_expr(k)
-    ).localCheckpoint(eager=True)
-
-    per_d: list[DataFrame] = [snap0]
+    per_d: list[DataFrame] = [snapshot(0)]
     history: list[dict[str, Any]] = []
     try:
         for d in range(1, max_d + 1):
-            _t_iter = _time.time()
             nbr = (
                 state.join(e.hint("merge"), state.id == e.dst)
                 .groupBy(e.src.alias("id"))
                 .agg(*[F.bit_or(c).alias(f"n_{c}") for c in mcols])
             )
-            state = state.join(nbr.hint("merge"), "id", "left").select(
-                "id",
-                *[
-                    F.expr(f"m{i} | COALESCE(n_m{i}, CAST(0 AS BIGINT))").alias(
-                        f"m{i}"
-                    )
-                    for i in range(k)
-                ],
+            grown, _ = local_checkpoint(
+                state.join(nbr.hint("merge"), "id", "left").select(
+                    "id",
+                    *[F.expr(f"{c} | COALESCE(n_{c}, CAST(0 AS BIGINT))").alias(c) for c in mcols],
+                )
             )
-            state, _ = ctx.truncate(state, d)
-            snapshot = state.select("id", F.lit(d).alias("d"), _rho_sum_expr(k))
-            snapshot = snapshot.localCheckpoint(eager=True)  # outlives ctx
-            per_d.append(snapshot)
-            ctx.record(state, d)
-            history.append(
-                {"d": d, "seconds": round(_time.time() - _t_iter, 3)}
-            )
+            release(state)
+            state = grown
+            per_d.append(snapshot(d))
+            history.append({"d": d})
 
         union = reduce(DataFrame.union, per_d)
         # driver-side estimate: one small agg per d (Σ 2^(rho/k) over v)
@@ -190,8 +177,8 @@ def hyperanf(
             release(s)
         return HyperAnfResult(per_vertex, nf, eff, history)
     finally:
+        release(state)
         release(e)
-        ctx.cleanup()
 
 
 def harmonic_centrality(per_vertex: DataFrame, k: int) -> DataFrame:
@@ -261,8 +248,8 @@ def neighborhood_function_exact(edges: DataFrame, max_d: int = 4) -> DataFrame:
             .union(reach)
             .distinct()
         )
-        reach = grown.localCheckpoint(eager=False)
-        rows.append((d, reach.count()))
+        reach, seen = local_checkpoint(grown, n=F.count(F.lit(1)))
+        rows.append((d, seen["n"]))
         if prev is not None:
             release(prev)
         prev = reach

@@ -15,7 +15,7 @@ Scale shape per superstep (what runs on 1000 executors):
 - ``ranks ⋈ edges`` on ``src`` — the big side (edges) is pre-weighted,
   pre-partitioned on ``src`` and persisted ONCE, and the rank state is
   kept hash-partitioned on ``id`` into the same partition count
-  (``SuperstepContext.truncate``), so neither side shuffles. An explicit
+  (``SuperstepContext.run``), so neither side shuffles. An explicit
   ``salt_factor`` replicates rank rows across salted edge splits for
   deterministic hub handling (that join does shuffle the rank side).
 - ``groupBy(dst).sum()`` — partial (map-side) aggregation bounds a hub

@@ -26,9 +26,9 @@ repeat until no active vertices:
   4. Marked vertices are assigned ``scc = color``; they and their edges
      leave the active subgraph.
 
-No superstep runs a scalar action: ``SuperstepContext.truncate``
-checkpoints the state and observes the phase's changed count (and the
-active / marked vertex counts) in that same job, like PageRank/CC; the
+No superstep runs a scalar action: each coloring and marking fixpoint is
+one ``SuperstepContext.run``, whose checkpoint job observes the phase's
+changed count (and the active / marked vertex counts), like PageRank/CC; the
 trim pass counts its singletons the same way (``local_checkpoint``). The
 final labels are canonicalized to ``min(id in SCC)`` (one groupBy) so the
 convention matches ``connected_components``.
@@ -95,7 +95,6 @@ def strongly_connected_components(
     """
     spark = edges.sparkSession
     num_partitions = partition_count(spark, num_partitions)
-    ctx = SuperstepContext()
 
     all_vertices = vertices_of(edges)
     active_e = (
@@ -109,7 +108,6 @@ def strongly_connected_components(
     history: list[dict[str, Any]] = []
     converged = False
     rounds = 0
-    step = 0  # global superstep counter for ctx lineage truncation
 
     try:
         for rounds in range(1, max_rounds + 1):
@@ -127,10 +125,8 @@ def strongly_connected_components(
                 dead = verts.where(
                     F.col("has_out").isNull() | F.col("has_in").isNull()
                 ).select("id", F.col("id").alias("scc"))
-                # kept frames live OUTSIDE the ctx truncate chain: ctx
-                # unpersists superseded supersteps, and an unpersisted
-                # localCheckpoint is not recomputable — eager-checkpoint
-                # what outlives the loop (released after the final union)
+                # the singletons outlive the round (released after the
+                # final union)
                 dead, seen = local_checkpoint(dead, n=F.count(F.lit(1)))
                 n_dead = seen["n"]
                 if n_dead == 0:
@@ -159,26 +155,21 @@ def strongly_connected_components(
             )
 
             # --- 2. forward max-coloring to fixpoint
-            state = (
-                active_e.select(F.col("src").alias("id"))
-                .union(active_e.select("dst"))
-                .distinct()
-                .select("id", F.col("id").alias("color"))
-            )
-            step += 1
-            state, seen = ctx.truncate(state, step, n=F.count(F.lit(1)))
-            n_active = seen["n"]
-            ctx.record(state, step)
-            round_metrics["active_vertices"] = n_active
+            def color_init() -> DataFrame:
+                return (
+                    active_e.select(F.col("src").alias("id"))
+                    .union(active_e.select("dst"))
+                    .distinct()
+                    .select("id", F.col("id").alias("color"))
+                )
 
-            color_iters = 0
-            for color_iters in range(1, max_iter + 1):
+            def color_step(state: DataFrame, it: int, last: dict[str, Any]) -> DataFrame:
                 nbr_max = (
                     state.join(active_e.hint("merge"), state.id == active_e.src)
                     .groupBy(active_e.dst.alias("id"))
                     .agg(F.max("color").alias("nbr_color"))
                 )
-                new_state = state.join(nbr_max.hint("merge"), "id", "left").select(
+                return state.join(nbr_max.hint("merge"), "id", "left").select(
                     "id",
                     F.greatest("color", F.coalesce("nbr_color", "color")).alias(
                         "color"
@@ -187,23 +178,22 @@ def strongly_connected_components(
                         "_changed"
                     ),
                 )
-                step += 1
-                state, seen = ctx.truncate(
-                    new_state, step, changed=count_true("_changed")
-                )
-                ctx.record(state, step)
-                if seen["changed"] == 0:
-                    break
+
+            colored, color_iters, seen = SuperstepContext().run(
+                None,
+                color_init,
+                color_step,
+                max_iter,
+                stop=lambda m: m["changed"] == 0,
+                observe={"n": F.count(F.lit(1))},
+                feed={"changed": count_true("_changed")},
+            )
+            n_active = seen["n"]
+            round_metrics["active_vertices"] = n_active
             round_metrics["color_iters"] = color_iters
 
             # --- 3. backward mark within color class, seeded at the roots
-            state = state.withColumn("marked", F.col("color") == F.col("id"))
-            step += 1
-            state, seen = ctx.truncate(state, step, marked=count_true("marked"))
-            ctx.record(state, step)
-
-            mark_iters = 0
-            for mark_iters in range(1, max_iter + 1):
+            def mark_step(state: DataFrame, it: int, last: dict[str, Any]) -> DataFrame:
                 # messages flow AGAINST edge direction: a marked u tells
                 # every predecessor v (edge v→u) in the same color class
                 msgs = (
@@ -219,7 +209,7 @@ def strongly_connected_components(
                     .agg(F.count(F.lit(1)).alias("_n"))
                     .drop("_n")
                 )
-                new_state = state.join(
+                return state.join(
                     msgs.hint("merge"),
                     (state.id == msgs.id) & (state.color == msgs.mcolor),
                     "left",
@@ -229,20 +219,23 @@ def strongly_connected_components(
                     (F.col("marked") | msgs.mcolor.isNotNull()).alias("marked"),
                     (~F.col("marked") & msgs.mcolor.isNotNull()).alias("_changed"),
                 )
-                step += 1
-                state, seen = ctx.truncate(
-                    new_state,
-                    step,
-                    changed=count_true("_changed"),
-                    marked=count_true("marked"),
-                )
-                ctx.record(state, step)
-                if seen["changed"] == 0:
-                    break
+
+            marked, mark_iters, seen = SuperstepContext().run(
+                None,
+                lambda: colored.withColumn("marked", F.col("color") == F.col("id")),
+                mark_step,
+                max_iter,
+                stop=lambda m: m["changed"] == 0,
+                observe={"marked": count_true("marked")},
+                feed={"changed": count_true("_changed")},
+            )
+            release(colored)
             round_metrics["mark_iters"] = mark_iters
 
-            done = state.where("marked").select("id", F.col("color").alias("scc"))
-            done = done.localCheckpoint(eager=True)  # outlives the ctx chain
+            done, _ = local_checkpoint(
+                marked.where("marked").select("id", F.col("color").alias("scc"))
+            )
+            release(marked)
             n_done = seen["marked"]
             round_metrics["assigned"] = n_done
             assigned_parts.append(done)
@@ -301,4 +294,3 @@ def strongly_connected_components(
         return SccResult(labels, rounds, converged, history)
     finally:
         release(active_e)
-        ctx.cleanup()

@@ -33,11 +33,7 @@ from typing import Any, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from citation_graph_spark.operators.superstep import (
-    SuperstepContext,
-    local_checkpoint,
-    release,
-)
+from citation_graph_spark.operators.superstep import local_checkpoint, release
 from citation_graph_spark.session import partition_count
 
 
@@ -107,7 +103,7 @@ def sssp(
     state0 = root_df.select(
         "root", F.col("root").alias("id"), F.lit(0).cast("long").alias("dist")
     )
-    ctx = SuperstepContext()
+    history: list[dict[str, Any]] = []
     rounds, converged = 0, False
 
     # Settled/active state split (r06; VERDICT r05 "What's wrong" #3).
@@ -127,6 +123,7 @@ def sssp(
     base_rows = 0
     delta: DataFrame | None = None
     old_delta: DataFrame | None = None
+    frontier: DataFrame | None = None
 
     def set_base(df: DataFrame) -> DataFrame:
         nonlocal base, base_rows
@@ -150,7 +147,7 @@ def sssp(
 
     try:
         set_base(state0)
-        frontier = state0.localCheckpoint(eager=True)
+        frontier, _ = local_checkpoint(state0)
         for r in range(1, max_rounds + 1):
             cand = (
                 frontier.join(e.hint("merge"), frontier["id"] == e["src"])
@@ -181,24 +178,25 @@ def sssp(
                 )
                 .select("root", "id", F.col("cand_dist").alias("dist"))
             )
-            imp, seen = ctx.truncate(imp, r, improved=F.count(F.lit(1)))
+            imp, seen = local_checkpoint(imp, improved=F.count(F.lit(1)))
+            release(frontier)
+            frontier = imp
             n_improved = seen["improved"]
             rounds = r
-            metrics: dict[str, Any] = {"improved": n_improved}
+            metrics: dict[str, Any] = {"iteration": r, "improved": n_improved}
+            history.append(metrics)
             if n_improved == 0:
-                ctx.record(imp, r, metrics)
                 converged = True
                 break
-            frontier = imp
             if delta is None and n_improved * 2 > base_rows:
                 # state-sized update: fold straight into a fresh base
                 set_base(full_merge(base, imp))
                 metrics["compacted"] = True
             else:
                 # delta is its own checkpoint copy, never an alias of the
-                # ctx-chain frame: ctx unpersists the previous round's imp
-                # blocks one round later, while delta may be read for many
-                # rounds (and by the final merge). Its exact row count
+                # frontier: the frontier is released once the next round's
+                # is materialized, while delta may be read for many rounds
+                # (and by the final merge). Its exact row count
                 # (re-improved (root, id) rows collapse) rides that job.
                 merged_delta, seen = local_checkpoint(
                     imp.select("root", "id", "dist")
@@ -213,18 +211,16 @@ def sssp(
                     set_base(full_merge(base, delta))
                     swap_delta(None)
                     metrics["compacted"] = True
-            ctx.record(imp, r, metrics)
         state = base if delta is None else full_merge(base, delta)
         dist_out = state.localCheckpoint(eager=True)
         return SsspResult(
             distances=dist_out,
             rounds=rounds,
             converged=converged,
-            history=ctx.history,
+            history=history,
         )
     finally:
-        ctx.cleanup()
-        for df in (old_delta, delta, base):
+        for df in (frontier, old_delta, delta, base):
             if df is not None:
                 release(df)
         e.unpersist()

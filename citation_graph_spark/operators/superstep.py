@@ -4,39 +4,43 @@ The reference's run loop is ``for depth in range(max_depth):
 _collect_papers_for_next_level(depth)`` (``src/citation_graph/traverser.py:
 132-145``) with a checkpoint after every request. Here each superstep is a
 Catalyst-planned join-aggregate over the edge table, and
-``SuperstepContext.run`` is the one loop on the driver around it. An
-operator hands it only what is its own: the iteration-0 state (``init``),
-the superstep (``step``), the convergence aggregates, the metrics it
-records and its stop rule. ``run`` owns the rest:
+``SuperstepContext`` has two methods around it:
 
-- **start or resume** — ``resume`` returns the newest durable state whose
-  recorded args match this run's (a checkpoint written under other args is
-  ignored with a ``RuntimeWarning`` and the run starts fresh); the caller
-  returns early on an already-converged checkpoint, before building any
-  static table, and passes the rest to ``run``, which truncates either the
-  resumed state or ``init()`` and records a fresh iteration 0,
-- **ending a superstep in one Spark job** — ``truncate`` attaches the
+- ``resume`` returns the newest durable state whose recorded args match
+  this run's (a checkpoint written under other args is ignored with a
+  ``RuntimeWarning`` and the run starts fresh); the caller returns early on
+  an already-converged checkpoint, before building any static table.
+- ``run`` is the one loop. An operator hands it only what is its own: the
+  iteration-0 state (``init``), the superstep (``step``), the convergence
+  aggregates, the metrics it records and its stop rule. ``run`` owns the
+  state chain: it starts from the resumed state or ``init()``, ends every
+  superstep with one ``local_checkpoint`` job that also computes the
   convergence aggregates (L1 delta, dangling mass, changed or row count,
-  checksum) as a ``pyspark.sql.Observation``, so they ride the job that
-  materializes the state instead of costing a scalar action of their own
-  (``local_checkpoint`` does the same for frames outside the loop's state
-  chain); for loops whose state is keyed on ``id`` it also hash-partitions
-  the state on ``id`` into the edge caches' partition count (see
-  ``copartitioned_planning``), so the next superstep's joins against the
-  src-partitioned caches shuffle nothing on the state side,
-- **plan-lineage truncation and durable saves** — iterative self-joins grow
-  the logical plan without bound; each state is cut by an eager
-  ``localCheckpoint`` and, every ``durable_every`` iterations, also written
-  as a durable Parquet checkpoint + manifest (resumable, see
-  ``sources.checkpoint``) while the loop keeps the in-memory state; the
-  final state is saved once more only when a superstep ran and ``record``
-  did not just save it,
-- **per-superstep history** — the convergence scalars only, so results are
-  deterministic; wall-clock timing does not belong in a result.
+  checksum) as a ``pyspark.sql.Observation``, releases the superseded state
+  once its successor is materialized, records the per-superstep history
+  (convergence scalars only, so results are deterministic) and, every
+  ``durable_every`` iterations, writes a durable Parquet checkpoint +
+  manifest (resumable, see ``sources.checkpoint``) while the loop keeps the
+  in-memory state. The final state is saved once more only when a superstep
+  ran and its boundary save did not just write it.
 
-``copartitioned_planning`` toggles session-global SQL conf for the length of
-one ``truncate``: a co-partitioned loop is not thread-safe against other
-queries planned on the same session meanwhile.
+Loops whose per-round work does not fit ``run`` (sssp's compaction,
+hyperanf's per-distance snapshots, walks, betweenness) chain plain
+``local_checkpoint`` calls and ``release`` the superseded frame themselves.
+
+For states keyed on ``id``, ``local_checkpoint`` hash-partitions the state
+on ``id`` into the edge caches' partition count (see
+``copartitioned_planning``), so the next superstep's joins against the
+src-partitioned caches shuffle nothing on the state side. That toggles
+session-global SQL conf for the length of one checkpoint: a co-partitioned
+loop is not thread-safe against other queries planned on the same session
+meanwhile.
+
+``release`` frees a frame's blocks: a cached frame's cache entry, and for a
+``localCheckpoint`` frame the checkpointed RDD's blocks, which
+``DataFrame.unpersist`` leaves in the block manager until a JVM GC. A
+released checkpoint is not recomputable, so a frame is released only after
+everything read from it is materialized.
 """
 
 from __future__ import annotations
@@ -130,10 +134,15 @@ def local_checkpoint(
 
 
 def release(df: DataFrame) -> None:
-    """Release ``df``'s cached or checkpointed blocks; a stopped session has
-    nothing left to release, anything else is logged."""
+    """Release ``df``'s cached blocks and, when ``df`` is a
+    ``localCheckpoint`` (its plan a ``LogicalRDD``), the checkpointed RDD's
+    blocks; a stopped session has nothing left to release, anything else is
+    logged."""
     try:
         df.unpersist()
+        plan = df._jdf.queryExecution().logical()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
     except Py4JError:
         # the JVM gateway is gone or the SparkContext was stopped
         log.debug("unpersist skipped: session stopped", exc_info=True)
@@ -146,7 +155,8 @@ Metrics = dict[str, Any]
 
 @dataclass
 class SuperstepContext:
-    """Per-run iteration-state handler; ``run`` is the superstep loop.
+    """Per-run superstep loop: ``resume`` finds a durable state, ``run``
+    iterates.
 
     ``checkpoint_dir``: when set, states are saved there every
     ``durable_every`` iterations under the manifest ``args`` (read with
@@ -164,9 +174,6 @@ class SuperstepContext:
     num_partitions: int | None = None
     history: list[Metrics] = field(default_factory=list)
     checkpoint: CheckpointManager | None = field(init=False, default=None)
-    _last: DataFrame | None = None
-    _pending_unpersist: DataFrame | None = None
-    _saved: tuple[int, DataFrame] | None = None
 
     def __post_init__(self) -> None:
         if self.checkpoint_dir is not None:
@@ -184,8 +191,8 @@ class SuperstepContext:
         A mismatch warns; the fresh run then prunes the dead timeline on its
         first durable save.
 
-        The returned state is the raw Parquet scan: ``run`` sends it through
-        ``truncate`` once."""
+        The returned state is the raw Parquet scan: ``run`` checkpoints it
+        once."""
         if self.checkpoint is None:
             return None
         latest = self.checkpoint.latest()
@@ -216,14 +223,15 @@ class SuperstepContext:
         feed: dict[str, Column] | None = None,
     ) -> tuple[DataFrame, int, Metrics]:
         """Iterate to ``stop`` or ``max_iter``; return the last state, its
-        iteration and its metrics.
+        iteration and its metrics. The returned state belongs to the
+        caller, who releases it; every earlier state is released here.
 
         Starts from ``latest`` (what ``resume`` returned) or, when that is
         None, from ``init()``, recorded as iteration 0. Iteration ``it``
-        truncates ``step(state, it, last)``, where ``last`` is the previous
-        iteration's metrics (for a resumed state: its manifest's, updated
-        with what was observed on it), records it and ends the loop when
-        ``stop(metrics)`` holds — tested on the starting state too.
+        checkpoints ``step(state, it, last)``, where ``last`` is the
+        previous iteration's metrics (for a resumed state: its manifest's,
+        updated with what was observed on it), records it and ends the loop
+        when ``stop(metrics)`` holds — tested on the starting state too.
 
         ``observe`` aggregates ride every state's checkpoint job; ``feed``
         aggregates ride only a superstep's job and read the ``_`` columns
@@ -232,81 +240,49 @@ class SuperstepContext:
         recorded metrics (default: as observed; ``last`` is None at a fresh
         iteration 0).
 
-        When a superstep ran, the last state is durably saved as final.
-        Each state is written once: when ``record`` just saved that very
-        frame, only its manifest's metrics are rewritten."""
+        Eager checkpoints keep the state build and the observed scalars in
+        one job (round 6 A/B, 5-superstep PageRank loops, 8M edges,
+        local[32]: min 3.32 s eager vs 5.88 s lazy). A superseded state is
+        released only after its successor is materialized: a
+        localCheckpoint is not recomputable. Keeping superseded blocks is
+        not an option either — block churn degrades iteration time
+        severalfold within ~10 supersteps (measured).
+
+        When a superstep ran, the last state is durably saved as final;
+        when its iteration was a ``durable_every`` boundary it is already
+        saved, and only its manifest's metrics are rewritten."""
         observe, feed = observe or {}, feed or {}
         metrics = metrics or (lambda it, seen, last: seen)
+        durable = self.checkpoint is not None and self.durable_every > 0
+
+        def record(state: DataFrame, it: int, last: Metrics) -> None:
+            self.history.append({"iteration": it, **last})
+            if durable and it % self.durable_every == 0:
+                self.checkpoint.save(state, it, last)
+
         if latest is None:
             done = 0
-            state, seen = self.truncate(init(), 0, **observe)
+            state, seen = local_checkpoint(init(), self.num_partitions, **observe)
             last = metrics(0, {**dict.fromkeys(feed), **seen}, None)
-            self.record(state, 0, last)
+            record(state, 0, last)
         else:
             done, state, recorded = latest
-            state, seen = self.truncate(state, done, **observe)
+            state, seen = local_checkpoint(state, self.num_partitions, **observe)
             last = {**recorded, **seen}
         it = done
         while it < max_iter and not stop(last):
             it += 1
-            state, seen = self.truncate(step(state, it, last), it, **observe, **feed)
+            new_state, seen = local_checkpoint(
+                step(state, it, last), self.num_partitions, **observe, **feed
+            )
+            release(state)
+            state = new_state
             last = metrics(it, seen, last)
-            self.record(state, it, last)
+            record(state, it, last)
         if it > done and self.checkpoint is not None:
             final = {**last, "final": stop(last)}
-            if self._saved is not None and self._saved[0] == it and self._saved[1] is state:
+            if durable and it % self.durable_every == 0:
                 self.checkpoint.set_metrics(it, final)
             else:
                 self.checkpoint.save(state, it, final)
         return state, it, last
-
-    def truncate(
-        self, state: DataFrame, iteration: int, **observe: Column
-    ) -> tuple[DataFrame, dict[str, Any]]:
-        """End a superstep: ``local_checkpoint`` the state (one Spark job
-        that also computes the ``observe`` aggregates; partitioned on
-        ``id`` when ``num_partitions`` is set — usually already true, the
-        last join being on ``id``) and return it with the observed values.
-
-        Eager materialization (round 6 A/B, 5-superstep PageRank loops, 8M
-        edges, local[32]: min 3.32 s eager vs 5.88 s lazy) keeps the state
-        build and the observed scalars in one job.
-
-        The previous iteration's blocks are released in ``record`` (i.e.
-        only after the new state is materialized): a localCheckpoint plan
-        is not recomputable, so unpersisting the parent before the child
-        materializes would lose data. Leaving superseded blocks cached is
-        not an option either — block churn degrades iteration time
-        severalfold within ~10 supersteps (measured)."""
-        new_state, seen = local_checkpoint(state, self.num_partitions, **observe)
-        self._pending_unpersist = self._last
-        self._last = new_state
-        return new_state, seen
-
-    def record(
-        self,
-        state: DataFrame,
-        iteration: int,
-        metrics: Metrics | None = None,
-    ) -> None:
-        """Log this iteration's metrics; release the superseded iteration's
-        blocks (``truncate`` has materialized ``state`` by now); durably
-        checkpoint every ``durable_every`` iterations. The loop keeps
-        iterating on the in-memory ``state``, which keeps its partitioning;
-        a re-read of the Parquet copy would not."""
-        if self._pending_unpersist is not None:
-            release(self._pending_unpersist)
-            self._pending_unpersist = None
-        self.history.append({"iteration": iteration, **(metrics or {})})
-        if (
-            self.checkpoint is not None
-            and self.durable_every > 0
-            and iteration % self.durable_every == 0
-        ):
-            self.checkpoint.save(state, iteration, metrics)
-            self._saved = (iteration, state)
-
-    def cleanup(self) -> None:
-        if self._last is not None:
-            release(self._last)
-            self._last = None

@@ -102,10 +102,7 @@ def random_walks(
     steps: list[DataFrame] = [state]
     history: list[dict[str, Any]] = []
     try:
-        import time as _time
-
         for t in range(1, walk_length + 1):
-            t0 = _time.time()
             cand = state.join(e, state["id"] == e["src"]).select(
                 "walk",
                 F.struct(
@@ -120,11 +117,9 @@ def random_walks(
                 n=F.count(F.lit(1)),
             )
             n = seen["n"]
-            history.append(
-                {"step": t, "walkers": n, "seconds": round(_time.time() - t0, 3)}
-            )
+            history.append({"step": t, "walkers": n})
             if n == 0:
-                nxt.unpersist()
+                release(nxt)
                 break
             steps.append(nxt)
             state = nxt

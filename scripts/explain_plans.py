@@ -70,28 +70,30 @@ def main() -> int:
     assert "Window" in plan
     sections.append(("Per-src top-k: Window row_number", plan))
 
-    # 4. pagerank superstep: the truncated rank state is co-partitioned with
+    # 4. pagerank superstep: the checkpointed rank state is co-partitioned with
     # the src-partitioned edge cache, so neither join shuffles the state —
     # the dst aggregate is the only Exchange outside the cache build — and
     # the cached edge side is merge-joined without a re-sort
     from citation_graph_spark.operators.pagerank import superstep_ranks
     from citation_graph_spark.operators.prepared import PreparedGraph
     from citation_graph_spark.operators.superstep import (
-        SuperstepContext,
         copartitioned_planning,
+        local_checkpoint,
+        release,
     )
 
     pg = PreparedGraph(edges)
-    ctx = SuperstepContext(num_partitions=pg.num_partitions)
-    state, _ = ctx.truncate(
-        pg.dangling_flagged().select("id", F.lit(1e-4).alias("rank"), "is_dangling"), 0
+    state0, _ = local_checkpoint(
+        pg.dangling_flagged().select("id", F.lit(1e-4).alias("rank"), "is_dangling"),
+        pg.num_partitions,
     )
     # plan the second superstep: its state is the output of a superstep
-    state, _ = ctx.truncate(
-        superstep_ranks(state, pg.weighted_edges(0), 0, F.lit(0.0), 0.85),
-        1,
+    state, _ = local_checkpoint(
+        superstep_ranks(state0, pg.weighted_edges(0), 0, F.lit(0.0), 0.85),
+        pg.num_partitions,
         delta=F.sum("_delta"),
     )
+    release(state0)
     step = superstep_ranks(state, pg.weighted_edges(0), 0, F.lit(0.0), 0.85)
     with copartitioned_planning(spark, pg.num_partitions):
         plan = grab(step, "simple")
@@ -103,7 +105,7 @@ def main() -> int:
     sections.append(
         ("PageRank superstep: co-partitioned state, SMJ + partial agg, one Exchange", plan)
     )
-    ctx.cleanup()
+    release(state)
     pg.unpersist()
 
     w_edges = (

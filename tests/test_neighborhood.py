@@ -134,6 +134,7 @@ def test_hyperanf_deterministic_across_partitionings(spark):
     rows_a = sorted(map(tuple, a.per_vertex.collect()))
     rows_b = sorted(map(tuple, b.per_vertex.collect()))
     assert rows_a == rows_b  # the integer sketch rows are BIT-exact
+    assert a.history == b.history
     # the NF scalars are float sums over vertices — summation order varies
     # with partitioning, so they are equal only to fp accumulation noise
     assert [d for d, _ in a.nf] == [d for d, _ in b.nf]

@@ -25,6 +25,7 @@ from citation_graph_spark.operators.bfs import bfs_expand
 from citation_graph_spark.operators.components import connected_components
 from citation_graph_spark.operators.hits import hits
 from citation_graph_spark.operators.kcore import k_core
+from citation_graph_spark.operators.neighborhood import neighborhood_function_exact
 from citation_graph_spark.operators.scc import strongly_connected_components
 from citation_graph_spark.operators.sssp import sssp
 from citation_graph_spark.operators.walks import random_walks
@@ -204,27 +205,29 @@ def test_assortativity_single_pass_exact_moments(spark):
 
 def _superstep_plan(spark, pg):
     """Plan of one PageRank superstep over ``pg``, with the rank state
-    truncated (co-partitioned on id) by the loop's own calls."""
+    checkpointed (co-partitioned on id) the way the superstep loop does."""
     from citation_graph_spark.operators.pagerank import superstep_ranks
     from citation_graph_spark.operators.superstep import (
-        SuperstepContext,
         copartitioned_planning,
+        local_checkpoint,
+        release,
     )
 
-    ctx = SuperstepContext(num_partitions=pg.num_partitions)
-    state, _ = ctx.truncate(
-        pg.dangling_flagged().select("id", F.lit(1.0).alias("rank"), "is_dangling"), 0
+    state0, _ = local_checkpoint(
+        pg.dangling_flagged().select("id", F.lit(1.0).alias("rank"), "is_dangling"),
+        pg.num_partitions,
     )
     # plan the SECOND superstep: its state is the output of a superstep
-    state, _ = ctx.truncate(
-        superstep_ranks(state, pg.weighted_edges(0), 0, F.lit(0.0), 0.85),
-        1,
+    state, _ = local_checkpoint(
+        superstep_ranks(state0, pg.weighted_edges(0), 0, F.lit(0.0), 0.85),
+        pg.num_partitions,
         delta=F.sum("_delta"),
     )
+    release(state0)
     step = superstep_ranks(state, pg.weighted_edges(0), 0, F.lit(0.0), 0.85)
     with copartitioned_planning(spark, pg.num_partitions):
         plan = _plan(step, "simple")
-    ctx.cleanup()
+    release(state)
     return plan
 
 
@@ -336,9 +339,10 @@ def _weighted_zipf(spark):
 # superstep and breaks them. hits keeps one such action, its normalization
 # sums; its L1 delta rides the checkpoint job of the normalized state.
 _JOB_BOUNDS = {
+    "nf_exact": (lambda e: neighborhood_function_exact(e, max_d=4), 18),
     "bfs": (lambda e: bfs_expand(e, root=0, max_depth=8), 40),
     "cc_two_star": (lambda e: connected_components(e, algorithm="two_star"), 26),
-    "hits": (lambda e: hits(e, max_iter=6), 70),
+    "hits": (lambda e: hits(e, max_iter=6), 30),
     "kcore": (lambda e: k_core(e, k=5), 8),
     "scc": (strongly_connected_components, 64),
     "sssp": (lambda e: sssp(e, roots=[0, 1, 2, 3]), 83),
@@ -361,3 +365,34 @@ def test_superstep_scalars_ride_the_checkpoint_job(spark, name):
     finally:
         edges.unpersist()
     assert jobs <= bound, (jobs, bound)
+
+
+def test_release_frees_local_checkpoint_blocks(spark):
+    """``release`` frees a localCheckpoint frame's blocks: its checkpointed
+    RDD leaves the persistent RDDs (``unpersist`` alone leaves it there)."""
+    from citation_graph_spark.operators.superstep import local_checkpoint, release
+
+    jsc = spark.sparkContext._jsc
+    df, _ = local_checkpoint(spark.range(100))
+    rdd_id = df._jdf.queryExecution().logical().rdd().id()
+    assert jsc.getPersistentRDDs().containsKey(rdd_id)
+    release(df)
+    assert not jsc.getPersistentRDDs().containsKey(rdd_id)
+
+
+def test_superstep_loop_releases_superseded_states(spark):
+    """A superstep loop over prebuilt statics leaves at most one more
+    persistent RDD behind — its result; every superseded state is freed."""
+    from citation_graph_spark.operators.prepared import PreparedGraph
+
+    pg = PreparedGraph(datagen.zipf_edges(spark, 300, 3_000, seed=5))
+    pg.symmetrized()
+    pg.dangling_flagged()
+    try:
+        before = spark.sparkContext._jsc.getPersistentRDDs().size()
+        res = connected_components(prepared=pg)
+        after = spark.sparkContext._jsc.getPersistentRDDs().size()
+    finally:
+        pg.unpersist()
+    assert res.iterations > 2
+    assert after <= before + 1, (before, after)

@@ -70,6 +70,7 @@ def test_walks_deterministic_across_partitionings(spark):
     assert sorted(map(tuple, a.corpus.collect())) == sorted(
         map(tuple, b.corpus.collect())
     )
+    assert a.history == b.history
 
 
 def test_walks_seed_changes_corpus(spark):
