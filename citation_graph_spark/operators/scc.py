@@ -10,11 +10,12 @@ Algorithm: the coloring variant of FW-BW-Trim (Orzan; Slota et al.), the
 standard distributed SCC — every phase is the same merge-join +
 partial-agg superstep shape as ``_hash_min``:
 
-repeat until no active vertices:
+repeat until no active edges:
   1. **Trim** (to fixpoint): a vertex with no in-edge or no out-edge in
-     the active subgraph lies on no cycle → it is its own singleton SCC.
-     One pass = two semi/anti joins against the distinct src / dst
-     projections.
+     the active subgraph lies on no cycle, and neither does any of its
+     edges. One pass is a two-semi-join peel of the edge set: keep an
+     edge iff its src has an in-edge and its dst has an out-edge. The
+     trim stops when a pass drops no edge.
   2. **Forward max-coloring** (to fixpoint): ``color(v) = max(id(u) : u
      can reach v)`` via ``color'(v) = max(color(v), max_{(u,v)∈E}
      color(u))`` — hash-min with ``max`` over the directed edges.
@@ -23,35 +24,42 @@ repeat until no active vertices:
      id in its own SCC). ``SCC(r)`` = vertices that reach ``r`` moving
      backward WITHOUT leaving color class ``r``: ``mark(v) ⇐ ∃ (v,u)∈E:
      mark(u) ∧ color(u) = color(v)``, seeded from the roots.
-  4. Marked vertices are assigned ``scc = color``; they and their edges
-     leave the active subgraph.
+  4. Marked vertices are assigned ``scc = color``; their edges leave the
+     active edge set (a two-anti-join peel).
 
-No superstep runs a scalar action: each coloring and marking fixpoint is
-one ``SuperstepContext.run``, whose checkpoint job observes the phase's
-changed count (and the active / marked vertex counts), like PageRank/CC; the
-trim pass counts its singletons the same way (``local_checkpoint``). The
-final labels are canonicalized to ``min(id in SCC)`` (one groupBy) so the
-convention matches ``connected_components``.
+A vertex that no round assigns (trimmed, self-loop-only, or still active
+when ``max_rounds`` runs out) is its own SCC: the final
+``coalesce("scc", "id")`` labels it with its own id. The labels are then
+canonicalized to ``min(id in SCC)`` (one groupBy), the convention of
+``connected_components``.
 
-Scale shape: the active edge set shrinks monotonically and is
-re-persisted sorted by src AND by dst once per round (coloring joins on
-src, backward-marking joins on dst — the same dual-orientation cache HITS
-uses); message aggregation is a map-side-partial ``groupBy(...).max()``.
+No phase runs a scalar action. Each coloring and marking fixpoint is one
+``SuperstepContext.run`` over states co-partitioned on ``id`` with the
+edge sets, whose checkpoint job observes the phase's changed count (and
+the active / marked vertex counts), like PageRank/CC.
+Each active edge set (every trim pass, every peel and the round's
+dst-sorted twin) is one ``local_checkpoint`` job planned under
+``copartitioned_planning``: it keeps the edges hash-partitioned and
+sorted on their join key (src for coloring, dst for backward marking —
+the dual-orientation layout HITS uses) and observes their row count. The
+superseded edge set is released once its successor is materialized, so
+an edge set's plan never reaches back past the previous one. Message
+aggregation is a map-side-partial ``groupBy(...).max()``.
+
 On bow-tie-shaped web graphs the first round's trim peels the IN/OUT
 tendrils and the first coloring finds the giant SCC, so the expected
 round count is small; a long path-of-cycles graph degrades to many cheap
 rounds — ``max_rounds`` caps it and the result reports
-``converged=False`` with the residual active count rather than looping
-forever.
+``converged=False`` rather than looping forever.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 from functools import reduce
-from typing import Any
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from citation_graph_spark.edges import vertices_of
 from citation_graph_spark.session import partition_count
@@ -71,13 +79,18 @@ class SccResult:
     history: list[dict[str, Any]] = field(default_factory=list)
 
 
-def _persist_sorted(df: DataFrame, key: str, num_partitions: int) -> tuple[DataFrame, int]:
-    """Repartition+sort a round's active edge set on the join key so every
-    fixpoint superstep inside the round runs a merge join that re-sorts
-    only the (small) state frame — the CSR-style layout of pagerank.py.
-    Returns the persisted frame with its row count."""
-    out = df.repartition(num_partitions, key).sortWithinPartitions(key).persist()
-    return out, out.count()
+def _checkpoint_edges(df: DataFrame, key: str, num_partitions: int) -> tuple[DataFrame, int]:
+    """Materialize an active edge set in one job, hash-partitioned and
+    sorted on its join ``key`` so that every merge join against it
+    re-sorts only the (small) state side — the CSR-style layout of
+    pagerank.py. Returns the checkpoint with its row count."""
+    out, seen = local_checkpoint(
+        df.select("src", "dst").repartition(num_partitions, key).sortWithinPartitions(key),
+        num_partitions,
+        key=key,
+        n=F.count(F.lit(1)),
+    )
+    return out, seen["n"]
 
 
 def strongly_connected_components(
@@ -93,66 +106,66 @@ def strongly_connected_components(
     supersteps). Self-loops are irrelevant to mutual reachability and are
     dropped from the traversal (the vertex itself is still labeled).
     """
-    spark = edges.sparkSession
-    num_partitions = partition_count(spark, num_partitions)
+    num_partitions = partition_count(edges.sparkSession, num_partitions)
 
-    all_vertices = vertices_of(edges)
-    active_e = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
+    def fixpoint(
+        init: Callable[[], DataFrame],
+        step: Callable[[DataFrame, int, dict[str, Any]], DataFrame],
+        **observe: Column,
+    ) -> tuple[DataFrame, int, dict[str, Any]]:
+        """Run ``step`` from ``init()`` until no vertex changes, the states
+        co-partitioned on ``id`` with the edge sets."""
+        return SuperstepContext(num_partitions=num_partitions).run(
+            None,
+            init,
+            step,
+            max_iter,
+            stop=lambda m: m["changed"] == 0,
+            observe=observe,
+            feed={"changed": count_true("_changed")},
+        )
+
+    active_e, n_edges = _checkpoint_edges(
+        edges.where(F.col("src") != F.col("dst")).select("src", "dst").distinct(),
+        "src",
+        num_partitions,
     )
-    active_e, n_edges = _persist_sorted(active_e, "src", num_partitions)
-
-    assigned_parts: list[DataFrame] = []  # (id, scc_root) frames
+    assigned_parts: list[DataFrame] = []  # (id, scc_root) frames, one per round
     history: list[dict[str, Any]] = []
     converged = False
     rounds = 0
 
     try:
         for rounds in range(1, max_rounds + 1):
-            round_metrics: dict[str, Any] = {"round": rounds}
-
-            # --- 1. trim to fixpoint: no in-edge or no out-edge → singleton
-            trimmed_total = 0
+            # --- 1. trim to fixpoint: an edge survives a pass iff its src
+            # has an in-edge and its dst has an out-edge
+            n_untrimmed = n_edges
             for _ in range(max_iter):
-                srcs = active_e.select(F.col("src").alias("id")).distinct()
-                dsts = active_e.select(F.col("dst").alias("id")).distinct()
-                # vertices still carrying edges, flagged by side
-                verts = srcs.withColumn("has_out", F.lit(True)).join(
-                    dsts.withColumn("has_in", F.lit(True)), "id", "full"
-                )
-                dead = verts.where(
-                    F.col("has_out").isNull() | F.col("has_in").isNull()
-                ).select("id", F.col("id").alias("scc"))
-                # the singletons outlive the round (released after the
-                # final union)
-                dead, seen = local_checkpoint(dead, n=F.count(F.lit(1)))
-                n_dead = seen["n"]
-                if n_dead == 0:
-                    release(dead)
+                if n_edges == 0:
                     break
-                trimmed_total += n_dead
-                assigned_parts.append(dead)
-                new_e = active_e.join(
-                    dead.select(F.col("id").alias("src")), "src", "anti"
-                ).join(dead.select(F.col("id").alias("dst")), "dst", "anti")
-                old_e = active_e
-                active_e, n_edges = _persist_sorted(
-                    new_e.select("src", "dst"), "src", num_partitions
+                kept, n_kept = _checkpoint_edges(
+                    active_e.join(
+                        active_e.select(F.col("dst").alias("src")), "src", "left_semi"
+                    ).join(active_e.select(F.col("src").alias("dst")), "dst", "left_semi"),
+                    "src",
+                    num_partitions,
                 )
-                old_e.unpersist()
-            round_metrics["trimmed"] = trimmed_total
-            round_metrics["active_edges"] = n_edges
+                release(active_e)
+                active_e, n_dropped, n_edges = kept, n_edges - n_kept, n_kept
+                if n_dropped == 0:
+                    break
+            round_metrics: dict[str, Any] = {
+                "round": rounds,
+                "trimmed_edges": n_untrimmed - n_edges,
+                "active_edges": n_edges,
+            }
             if n_edges == 0:
                 history.append(round_metrics)
                 converged = True
                 break
 
-            # dst-sorted twin for the backward phase (HITS-style dual cache)
-            active_e_bydst, _ = _persist_sorted(
-                active_e.select("src", "dst"), "dst", num_partitions
-            )
+            # dst-sorted twin for the backward phase (HITS-style dual layout)
+            active_e_bydst, _ = _checkpoint_edges(active_e, "dst", num_partitions)
 
             # --- 2. forward max-coloring to fixpoint
             def color_init() -> DataFrame:
@@ -179,14 +192,8 @@ def strongly_connected_components(
                     ),
                 )
 
-            colored, color_iters, seen = SuperstepContext().run(
-                None,
-                color_init,
-                color_step,
-                max_iter,
-                stop=lambda m: m["changed"] == 0,
-                observe={"n": F.count(F.lit(1))},
-                feed={"changed": count_true("_changed")},
+            colored, color_iters, seen = fixpoint(
+                color_init, color_step, n=F.count(F.lit(1))
             )
             n_active = seen["n"]
             round_metrics["active_vertices"] = n_active
@@ -220,20 +227,18 @@ def strongly_connected_components(
                     (~F.col("marked") & msgs.mcolor.isNotNull()).alias("_changed"),
                 )
 
-            marked, mark_iters, seen = SuperstepContext().run(
-                None,
+            marked, mark_iters, seen = fixpoint(
                 lambda: colored.withColumn("marked", F.col("color") == F.col("id")),
                 mark_step,
-                max_iter,
-                stop=lambda m: m["changed"] == 0,
-                observe={"marked": count_true("marked")},
-                feed={"changed": count_true("_changed")},
+                marked=count_true("marked"),
             )
             release(colored)
+            release(active_e_bydst)
             round_metrics["mark_iters"] = mark_iters
 
             done, _ = local_checkpoint(
-                marked.where("marked").select("id", F.col("color").alias("scc"))
+                marked.where("marked").select("id", F.col("color").alias("scc")),
+                num_partitions,
             )
             release(marked)
             n_done = seen["marked"]
@@ -241,43 +246,27 @@ def strongly_connected_components(
             assigned_parts.append(done)
             history.append(round_metrics)
 
-            remaining = n_active - n_done
-            if remaining == 0:
-                active_e_bydst.unpersist()
+            if n_done == n_active:
                 converged = True
                 break
 
-            # --- 4. peel: drop assigned vertices and their edges
-            new_e = active_e.join(
-                done.select(F.col("id").alias("src")), "src", "anti"
-            ).join(done.select(F.col("id").alias("dst")), "dst", "anti")
-            old_e = active_e
-            active_e, n_edges = _persist_sorted(
-                new_e.select("src", "dst"), "src", num_partitions
+            # --- 4. peel: drop the assigned vertices' edges
+            peeled, n_edges = _checkpoint_edges(
+                active_e.join(done.select(F.col("id").alias("src")), "src", "left_anti")
+                .join(done.select(F.col("id").alias("dst")), "dst", "left_anti"),
+                "src",
+                num_partitions,
             )
-            old_e.unpersist()
-            active_e_bydst.unpersist()
-        else:
-            # max_rounds exhausted: label leftovers by themselves, disclose
-            leftovers = (
-                active_e.select(F.col("src").alias("id"))
-                .union(active_e.select("dst"))
-                .distinct()
-                .select("id", F.col("id").alias("scc"))
-            )
-            leftovers = leftovers.localCheckpoint(eager=True)
-            assigned_parts.append(leftovers)
-            history.append({"round": max_rounds, "unconverged_leftovers": True})
+            release(active_e)
+            active_e = peeled
 
-        # isolated vertices (self-loop-only or never active) → own SCC
-        assigned = (
-            reduce(DataFrame.union, assigned_parts)
-            if assigned_parts
-            else all_vertices.sparkSession.createDataFrame([], "id long, scc long")
-        )
-        labels = all_vertices.join(assigned, "id", "left").select(
-            "id", F.coalesce("scc", "id").alias("scc")
-        )
+        vertices = vertices_of(edges)
+        labels = vertices.select("id", F.col("id").alias("scc"))
+        if assigned_parts:
+            # a vertex that no round assigned is its own SCC
+            labels = vertices.join(
+                reduce(DataFrame.union, assigned_parts), "id", "left"
+            ).select("id", F.coalesce("scc", "id").alias("scc"))
         # canonicalize: scc label = min member id (matches the CC convention
         # and the mutual-reachability SQL oracle)
         min_per = labels.groupBy(F.col("scc").alias("_root")).agg(
@@ -287,8 +276,8 @@ def strongly_connected_components(
             labels.join(min_per, labels.scc == min_per._root)
             .select("id", F.col("label").alias("scc"))
         )
-        # materialize before unpersisting the lineage the join depends on
-        labels = labels.localCheckpoint(eager=True)
+        # materialize before releasing the frames the join reads
+        labels, _ = local_checkpoint(labels, num_partitions)
         for part in assigned_parts:
             release(part)
         return SccResult(labels, rounds, converged, history)

@@ -25,13 +25,15 @@ Catalyst-planned join-aggregate over the edge table, and
   ran and its boundary save did not just write it.
 
 Loops whose per-round work does not fit ``run`` (sssp's compaction,
-hyperanf's per-distance snapshots, walks, betweenness) chain plain
-``local_checkpoint`` calls and ``release`` the superseded frame themselves.
+hyperanf's per-distance snapshots, walks, betweenness, scc's edge-set
+peels) chain plain ``local_checkpoint`` calls and ``release`` the
+superseded frame themselves.
 
 For states keyed on ``id``, ``local_checkpoint`` hash-partitions the state
 on ``id`` into the edge caches' partition count (see
 ``copartitioned_planning``), so the next superstep's joins against the
-src-partitioned caches shuffle nothing on the state side. That toggles
+src-partitioned caches shuffle nothing on the state side (scc keeps its
+edge sets partitioned on ``src`` or ``dst`` the same way). That toggles
 session-global SQL conf for the length of one checkpoint: a co-partitioned
 loop is not thread-safe against other queries planned on the same session
 meanwhile.
@@ -108,7 +110,7 @@ def exact_sum(col: Column) -> Column:
 
 
 def local_checkpoint(
-    df: DataFrame, num_partitions: int | None = None, **observe: Column
+    df: DataFrame, num_partitions: int | None = None, *, key: str = "id", **observe: Column
 ) -> tuple[DataFrame, dict[str, Any]]:
     """Materialize ``df`` in ONE Spark job as an eager ``localCheckpoint``;
     return it with the values of the ``observe`` aggregates (name →
@@ -116,10 +118,11 @@ def local_checkpoint(
 
     Columns whose names start with ``_`` exist only to feed the observed
     aggregates and are dropped before the checkpoint. With
-    ``num_partitions`` set, ``df`` is keyed on ``id``: it is repartitioned
-    on ``id`` and checkpointed under ``copartitioned_planning`` (the
+    ``num_partitions`` set, ``df`` is keyed on ``key``: it is repartitioned
+    on ``key`` and checkpointed under ``copartitioned_planning`` (the
     repartition is elided by the planner when ``df`` already has that
-    partitioning)."""
+    partitioning, so a frame sorted within those partitions stays
+    sorted)."""
     observation = None
     if observe:
         observation = Observation()
@@ -129,7 +132,7 @@ def local_checkpoint(
         out = df.localCheckpoint(eager=True)
     else:
         with copartitioned_planning(df.sparkSession, num_partitions):
-            out = df.repartition(num_partitions, "id").localCheckpoint(eager=True)
+            out = df.repartition(num_partitions, key).localCheckpoint(eager=True)
     return out, (observation.get if observation is not None else {})
 
 

@@ -8,6 +8,10 @@ Usage:
 
 Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in bench.py; TAG=before|after
 selects the plan-file suffix.
+
+Superstep plans are not captured here: ``scripts/explain_plans.py`` prints
+the PageRank superstep as the engine runs it (state co-partitioned on
+``id``, one Exchange).
 """
 
 from __future__ import annotations
@@ -60,7 +64,7 @@ def main() -> int:
 
     from citation_graph_spark import datagen
     from citation_graph_spark.edges import build_edges
-    from citation_graph_spark.operators.prepared import PreparedGraph, superstep_contribs
+    from citation_graph_spark.operators.prepared import PreparedGraph
     from citation_graph_spark.pipeline.dedup import (
         exact_jaccard_for_candidates,
         minhash_lsh_pairs,
@@ -95,61 +99,6 @@ def main() -> int:
     stage("graph_build: weighted_edges", lambda: pg.weighted_edges(0))
     stage("graph_build: dangling_flagged", lambda: pg.dangling_flagged())
     stage("graph_build: symmetrized", lambda: pg.symmetrized())
-
-    # ---- pagerank superstep -------------------------------------------------
-    w_edges = pg.weighted_edges(0)
-    flagged = pg.dangling_flagged()
-    n = pg.n_vertices()
-    state = flagged.select("id", F.lit(1.0 / n).alias("rank"), "is_dangling")
-    state = state.localCheckpoint(eager=True)
-    contribs = superstep_contribs(state, w_edges, 0)
-    new_state = (
-        state.join(contribs.hint("merge"), state.id == contribs.dst, "left")
-        .select(
-            state.id.alias("id"),
-            (F.lit(0.15 / n) + F.lit(0.85) * F.coalesce("contrib", F.lit(0.0))).alias("new_rank"),
-            state.rank.alias("old_rank"),
-            state.is_dangling.alias("is_dangling"),
-        )
-        .select(
-            "id", F.col("new_rank").alias("rank"), "is_dangling",
-            F.abs(F.col("new_rank") - F.col("old_rank")).alias("_delta"),
-        )
-    )
-    if mode == "plans":
-        save_plan("pagerank_superstep", new_state)
-    else:
-        for i in range(3):
-            stage(f"pagerank: superstep noop {i}", lambda: noop(new_state))
-        stage("pagerank: contribs only noop", lambda: noop(contribs))
-        # components of the superstep
-        joined = state.join(w_edges.hint("merge"), state.id == w_edges.src)
-        stage("pagerank: join only noop", lambda: noop(joined))
-
-    # ---- cc superstep -------------------------------------------------------
-    sym = pg.symmetrized()
-    cstate = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .select("id", F.col("id").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    nbr_min = (
-        cstate.join(sym.hint("merge"), cstate.id == sym.src)
-        .groupBy(sym.dst.alias("id"))
-        .agg(F.min("label").alias("nbr_label"))
-    )
-    cc_new = cstate.join(nbr_min.hint("merge"), "id", "left").select(
-        "id",
-        F.least("label", F.coalesce("nbr_label", "label")).alias("label"),
-        (F.col("label") > F.coalesce("nbr_label", "label")).alias("_changed"),
-    )
-    if mode == "plans":
-        save_plan("cc_superstep", cc_new)
-    else:
-        for i in range(2):
-            stage(f"cc: superstep noop {i}", lambda: noop(cc_new))
 
     # ---- minhash ------------------------------------------------------------
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")

@@ -13,10 +13,12 @@ scripts/explain_plans.py audit):
 import io
 import json
 import os
+import re
 from contextlib import redirect_stdout
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from citation_graph_spark import datagen
 from citation_graph_spark.edges import dedup_edges, out_degrees
@@ -166,29 +168,52 @@ def test_hyperanf_superstep_is_jvm_side_single_exchange(spark):
         e.unpersist()
 
 
-def test_scc_runs_no_python_stages(spark):
+@pytest.fixture
+def checkpoint_plans(monkeypatch):
+    """The executed plan of every frame checkpointed while the test runs —
+    the plans the operators' checkpoint jobs ran (a result frame's own plan
+    is a bare ``Scan ExistingRDD``)."""
+    plans = []
+    checkpoint = ClassicDataFrame.localCheckpoint
+
+    def spy(self, eager=True, storageLevel=None):
+        out = checkpoint(self, eager, storageLevel)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", spy)
+    return plans
+
+
+def _no_python(plans):
+    assert plans
+    for plan in plans:
+        assert "BatchEvalPython" not in plan and "ArrowEval" not in plan, plan
+
+
+def test_scc_runs_no_python_stages(spark, checkpoint_plans):
     """The whole SCC loop must stay JVM-side: no row-at-a-time or Arrow
-    Python evaluation anywhere in the final labels plan."""
-    from citation_graph_spark.operators.scc import strongly_connected_components
-
+    Python evaluation in any job it checkpoints a frame with (trim passes,
+    peels, coloring and marking supersteps, final labels)."""
     edges = datagen.zipf_edges(spark, 500, 1_500, seed=4)
-    res = strongly_connected_components(edges)
-    plan = _plan(res.labels, "simple")
-    assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
+    strongly_connected_components(edges)
+    _no_python(checkpoint_plans)
 
 
-def test_betweenness_stays_jvm_side_two_phase_aggs(spark):
+def test_betweenness_stays_jvm_side_two_phase_aggs(spark, checkpoint_plans):
     """The Brandes cells must stay JVM-side end to end (no Python eval in
-    either the scores or the forward-state plan) and the sigma/delta
-    groupBys must be two-phase HashAggregates (map-side partials) — the
-    properties the 2·max_d-superstep scale contract depends on."""
-    from citation_graph_spark.operators.betweenness import betweenness
-
+    any job they checkpoint a frame with) and the sigma/delta groupBys must
+    be two-phase HashAggregates (map-side partials) — the properties the
+    2·max_d-superstep scale contract depends on."""
     edges = datagen.zipf_edges(spark, 500, 1_500, seed=4)
-    res = betweenness(edges, n_roots=3, max_d=2)
-    for df in (res.scores, res.per_vertex):
-        plan = _plan(df, "simple")
-        assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
+    betweenness(edges, n_roots=3, max_d=2)
+    _no_python(checkpoint_plans)
+    for col in ("sigma", "c"):  # forward sigma sums, backward delta sums
+        partial, final = (
+            re.compile(rf"(?<![A-Za-z])HashAggregate\(keys=\[[^\]]*\], functions=\[{fn}\({col}#")
+            for fn in ("partial_sum", "sum")
+        )
+        assert any(partial.search(p) and final.search(p) for p in checkpoint_plans), col
 
 
 def test_assortativity_single_pass_exact_moments(spark):
@@ -344,7 +369,7 @@ _JOB_BOUNDS = {
     "cc_two_star": (lambda e: connected_components(e, algorithm="two_star"), 26),
     "hits": (lambda e: hits(e, max_iter=6), 30),
     "kcore": (lambda e: k_core(e, k=5), 8),
-    "scc": (strongly_connected_components, 64),
+    "scc": (strongly_connected_components, 19),
     "sssp": (lambda e: sssp(e, roots=[0, 1, 2, 3]), 83),
     "walks": (random_walks, 35),
     "betweenness": (betweenness, 48),

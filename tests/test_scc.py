@@ -7,6 +7,7 @@ directed counterpart of the ``connected_components`` parity suite.
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from citation_graph_spark import datagen
@@ -54,18 +55,38 @@ def test_scc_self_loops_and_isolates(spark):
     assert _labels(res.labels) == {7: 7, 8: 8, 9: 9}
 
 
+def _tail_chains(k=8):
+    """Top SCC {100, 101} with an in-chain 50→…→57→100 (round 1 trims it
+    one edge per pass) and an out-chain 101→20→…→27→{0, 1}: the max color
+    101 reaches the chain and the bottom 2-cycle {0, 1}, so round 1 assigns
+    only the top SCC, and round 2's trim peels the out-chain one edge per
+    pass before it assigns {0, 1}."""
+    cin = list(range(50, 50 + k)) + [100]
+    cout = [101] + list(range(20, 20 + k)) + [0]
+    return (
+        [(100, 101), (101, 100), (0, 1), (1, 0)]
+        + list(zip(cin, cin[1:]))
+        + list(zip(cout, cout[1:]))
+    )
+
+
 def test_scc_random_graphs_match_tarjan(spark):
+    graphs = {}
     for seed in (1, 2, 3):
         rng = random.Random(seed)
         n = 120
-        pairs = list(
+        graphs[f"seed {seed}"] = sorted(
             {(rng.randrange(n), rng.randrange(n)) for _ in range(420)}
         )
-        edges = _edges_df(spark, sorted(pairs))
-        exp = scc_oracle(sorted(pairs))
+    graphs["tail chains"] = _tail_chains()
+    for name, pairs in graphs.items():
+        edges = _edges_df(spark, pairs)
+        exp = scc_oracle(pairs)
         res = strongly_connected_components(edges)
-        assert res.converged, f"seed {seed} did not converge: {res.history}"
-        assert _labels(res.labels) == exp, f"seed {seed}"
+        assert res.converged, f"{name} did not converge: {res.history}"
+        assert _labels(res.labels) == exp, name
+    # res is the last graph's, the tail chains': it trims in both rounds
+    assert [r["trimmed_edges"] for r in res.history] == [8, 8], res.history
 
 
 def test_scc_zipf_skewed_matches_tarjan(spark):
@@ -119,3 +140,20 @@ def test_scc_empty_graph(spark):
     res = strongly_connected_components(edges)
     assert res.converged
     assert res.labels.count() == 0
+
+
+@pytest.mark.parametrize(
+    "pairs, expected",
+    [
+        # self-loops only: no round assigns a vertex
+        ([("a", "a"), ("b", "b")], {"a": "a", "b": "b"}),
+        ([("a", "b"), ("b", "c")], {"a": "a", "b": "b", "c": "c"}),
+        ([("a", "b"), ("b", "a"), ("b", "c")], {"a": "a", "b": "a", "c": "c"}),
+    ],
+    ids=["self_loops_only", "dag", "two_cycle_with_tail"],
+)
+def test_scc_string_ids(spark, pairs, expected):
+    edges = spark.createDataFrame(pairs, "src string, dst string")
+    res = strongly_connected_components(edges)
+    assert res.converged
+    assert _labels(res.labels) == expected == scc_oracle(pairs)
