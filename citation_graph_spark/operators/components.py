@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from citation_graph_spark.edges import symmetrize, vertices_of
 from citation_graph_spark.operators.prepared import PreparedGraph
-from citation_graph_spark.operators.superstep import SuperstepContext, count_true
+from citation_graph_spark.operators.superstep import SuperstepContext, count_true, id_copy
 from citation_graph_spark.session import partition_count
 
 
@@ -142,7 +142,7 @@ def label_fixpoint(
         # aggregation, shared with pagerank and prebuilt by callers that
         # pass a prepared graph) instead of a private union-distinct over
         # the edge table (r06)
-        lambda: prepared.dangling_flagged().select("id", F.col("id").alias("label")),
+        lambda: prepared.dangling_flagged().select("id", id_copy().alias("label")),
         lambda state, it, last: step(state, sym),
         max_iter,
         stop=fixpoint,

@@ -7,10 +7,13 @@ breaking count-ties toward the SMALLEST label; isolated vertices keep
 their label. Stops at fixpoint or ``max_iter`` (synchronous LPA can
 2-cycle on bipartite structures — the converged flag reports which).
 
-Superstep shape: labels ⋈ sym-edges on ``src`` → ``groupBy(dst, label).
-count()`` → per-dst argmax as two hash aggregations (max count, then min
-label among the tied) — no window sort, works for long AND string labels,
-and the whole argmax stays JVM-side with map-side partials.
+Superstep shape: labels ⋈ sym-edges on ``src`` → ``groupBy(dst).agg(
+mode(label, deterministic=True))`` → left join back onto the state. The
+deterministic mode is the whole argmax in one aggregate: the most frequent
+label, the smallest one on a count tie, for long AND string labels. It
+keeps a per-vertex label histogram with map-side partials, so the
+superstep's one Exchange is the ``dst`` shuffle of those partials; the
+state side stays co-partitioned with the symmetrized edge cache.
 """
 
 from __future__ import annotations
@@ -32,6 +35,22 @@ class LPAResult:
     history: list[dict[str, Any]] = field(default_factory=list)
 
 
+def superstep_labels(state: DataFrame, sym: DataFrame) -> DataFrame:
+    """One LPA superstep over the ``(id, label)`` state and the symmetrized
+    edge cache: ``(id, label, _changed)``, each vertex's label replaced by
+    the most frequent one among its neighbours (the smallest on a tie)."""
+    nbr_best = (
+        state.join(sym.hint("merge"), state.id == sym.src)
+        .groupBy(sym.dst.alias("id"))
+        .agg(F.mode("label", deterministic=True).alias("best_label"))
+    )
+    return state.join(nbr_best.hint("merge"), "id", "left").select(
+        "id",
+        F.coalesce("best_label", "label").alias("label"),
+        (F.coalesce("best_label", "label") != F.col("label")).alias("_changed"),
+    )
+
+
 def label_propagation(
     edges: DataFrame | None = None,
     max_iter: int = 20,
@@ -46,31 +65,10 @@ def label_propagation(
             raise ValueError("pass either edges or prepared")
         prepared = PreparedGraph(edges, num_partitions)
 
-    def step(state: DataFrame, sym: DataFrame) -> DataFrame:
-        # Count neighbour labels per vertex, then a type-agnostic argmax:
-        # max count first, smallest label on ties. Two hash aggs (both with
-        # map-side partials), no window sort, works for long AND string ids.
-        counts = (
-            state.join(sym.hint("merge"), state.id == sym.src)
-            .groupBy(sym.dst.alias("id"), F.col("label"))
-            .agg(F.count("*").alias("cnt"))
-        )
-        max_cnt = counts.groupBy("id").agg(F.max("cnt").alias("max_cnt"))
-        nbr_best = (
-            counts.join(max_cnt, "id")
-            .where(F.col("cnt") == F.col("max_cnt"))
-            .groupBy("id")
-            .agg(F.min("label").alias("best_label"))
-        )
-        return state.join(nbr_best.hint("merge"), "id", "left").select(
-            "id",
-            F.coalesce("best_label", "label").alias("label"),
-            (F.coalesce("best_label", "label") != F.col("label")).alias("_changed"),
-        )
-
     try:
         res = label_fixpoint(
-            prepared, "label_propagation", step, max_iter, checkpoint_dir, durable_every
+            prepared, "label_propagation", superstep_labels,
+            max_iter, checkpoint_dir, durable_every,
         )
     finally:
         if owns_prepared:

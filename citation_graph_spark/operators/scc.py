@@ -43,8 +43,10 @@ dst-sorted twin) is one ``local_checkpoint`` job planned under
 sorted on their join key (src for coloring, dst for backward marking —
 the dual-orientation layout HITS uses) and observes their row count. The
 superseded edge set is released once its successor is materialized, so
-an edge set's plan never reaches back past the previous one. Message
-aggregation is a map-side-partial ``groupBy(...).max()``.
+an edge set's plan never reaches back past the previous one. Messages
+are aggregated per receiving vertex alone, with map-side partials (the
+max color; the set of a predecessor's marked successors' colors), so
+each coloring or marking superstep shuffles only its messages.
 
 On bow-tie-shaped web graphs the first round's trim peels the IN/OUT
 tendrils and the first coloring finds the giant SCC, so the expected
@@ -66,6 +68,7 @@ from citation_graph_spark.session import partition_count
 from citation_graph_spark.operators.superstep import (
     SuperstepContext,
     count_true,
+    id_copy,
     local_checkpoint,
     release,
 )
@@ -173,7 +176,7 @@ def strongly_connected_components(
                     active_e.select(F.col("src").alias("id"))
                     .union(active_e.select("dst"))
                     .distinct()
-                    .select("id", F.col("id").alias("color"))
+                    .select("id", id_copy().alias("color"))
                 )
 
             def color_step(state: DataFrame, it: int, last: dict[str, Any]) -> DataFrame:
@@ -202,29 +205,25 @@ def strongly_connected_components(
             # --- 3. backward mark within color class, seeded at the roots
             def mark_step(state: DataFrame, it: int, last: dict[str, Any]) -> DataFrame:
                 # messages flow AGAINST edge direction: a marked u tells
-                # every predecessor v (edge v→u) in the same color class
+                # every predecessor v (edge v→u) its color; v is marked when
+                # one of them is its own. Grouped by v alone, so the join
+                # back onto the state keys on id: the messages' shuffle is
+                # the superstep's only Exchange
                 msgs = (
                     state.where("marked")
                     .join(
                         active_e_bydst.hint("merge"),
                         state.id == active_e_bydst.dst,
                     )
-                    .groupBy(
-                        active_e_bydst.src.alias("id"),
-                        F.col("color").alias("mcolor"),
-                    )
-                    .agg(F.count(F.lit(1)).alias("_n"))
-                    .drop("_n")
+                    .groupBy(active_e_bydst.src.alias("id"))
+                    .agg(F.collect_set("color").alias("mcolors"))
                 )
-                return state.join(
-                    msgs.hint("merge"),
-                    (state.id == msgs.id) & (state.color == msgs.mcolor),
-                    "left",
-                ).select(
-                    state.id,
-                    state.color,
-                    (F.col("marked") | msgs.mcolor.isNotNull()).alias("marked"),
-                    (~F.col("marked") & msgs.mcolor.isNotNull()).alias("_changed"),
+                reached = F.coalesce(F.array_contains("mcolors", F.col("color")), F.lit(False))
+                return state.join(msgs.hint("merge"), "id", "left").select(
+                    "id",
+                    "color",
+                    (F.col("marked") | reached).alias("marked"),
+                    (~F.col("marked") & reached).alias("_changed"),
                 )
 
             marked, mark_iters, seen = fixpoint(

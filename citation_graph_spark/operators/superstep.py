@@ -109,6 +109,20 @@ def exact_sum(col: Column) -> Column:
     return F.coalesce(F.sum(col.cast("decimal(38,30)")).cast("double"), F.lit(0.0))
 
 
+def id_copy() -> Column:
+    """A copy of the ``id`` column, for a state that starts out labelled
+    with its own id (cc's and lpa's ``label``, scc's ``color``).
+
+    Not a bare alias: over a frame already partitioned on ``id`` the
+    aliasing projection reports both ``id`` and the alias as partitioning
+    columns, the planner drops ``local_checkpoint``'s repartition, and the
+    checkpoint records only the first of the two, the alias. The next
+    superstep's joins on ``id`` would then shuffle the state again.
+    ``greatest(id, id)`` equals ``id`` for every orderable type and is not
+    an alias of it."""
+    return F.greatest("id", "id")
+
+
 def local_checkpoint(
     df: DataFrame, num_partitions: int | None = None, *, key: str = "id", **observe: Column
 ) -> tuple[DataFrame, dict[str, Any]]:

@@ -6,6 +6,8 @@ the plan properties the scale design depends on:
 - the PageRank superstep joins are SortMergeJoins that shuffle neither the
   co-partitioned rank state nor the cached edge side (no re-sort either):
   the dst aggregate is the superstep's only Exchange,
+- the LPA superstep's argmax is one ``mode`` aggregate: its dst shuffle is
+  the superstep's only Exchange,
 - the per-src top-k is a single WindowExec, the degree agg is a partial +
   final HashAggregate pair.
 
@@ -104,6 +106,28 @@ def main() -> int:
     )
     sections.append(
         ("PageRank superstep: co-partitioned state, SMJ + partial agg, one Exchange", plan)
+    )
+    release(state)
+
+    # 4b. LPA superstep: the argmax is one mode(label, deterministic=True)
+    # aggregate with map-side partials, and the label state is co-partitioned
+    # with the symmetrized edge cache — the dst shuffle of the partials is
+    # the superstep's only Exchange outside the cache build
+    from citation_graph_spark.operators.label_propagation import (
+        label_propagation,
+        superstep_labels,
+    )
+
+    # the state after one superstep, as the loop checkpointed it
+    state = label_propagation(prepared=pg, max_iter=1).labels
+    with copartitioned_planning(spark, pg.num_partitions):
+        plan = grab(superstep_labels(state, pg.symmetrized()), "simple")
+    tree = plan[: plan.index("InMemoryRelation")]
+    assert tree.count("Exchange") == 1 and "Exchange hashpartitioning(dst" in tree, (
+        "LPA superstep shuffles more than the dst aggregate"
+    )
+    sections.append(
+        ("LPA superstep: one mode aggregate, co-partitioned state, one Exchange", plan)
     )
     release(state)
     pg.unpersist()

@@ -1,3 +1,7 @@
+import random
+
+import pytest
+
 from citation_graph_spark import datagen
 from citation_graph_spark.operators.components import connected_components
 from citation_graph_spark.operators.label_propagation import label_propagation
@@ -60,6 +64,36 @@ def test_lpa_zipf_matches_oracle(spark):
     edges = datagen.zipf_edges(spark, n_vertices=120, n_edges=400, seed=9).cache()
     exp, _ = label_propagation_oracle(_edge_list(edges), max_iter=8)
     res = label_propagation(edges, max_iter=8)
+    assert _labels(res.labels) == exp
+
+
+def _tie_graphs(n_graphs=12, seed=2024):
+    """Disjoint union of small seeded random graphs (5-40 vertices each,
+    with multi-edges and self-loops). In superstep 1 every neighbour label
+    is distinct, so each vertex of degree >= 2 breaks a count tie; later
+    supersteps tie often too on graphs this small."""
+    rng = random.Random(seed)
+    pairs = []
+    for g in range(n_graphs):
+        n = rng.randint(5, 40)
+        local = [(rng.randrange(n), rng.randrange(n)) for _ in range(rng.randint(n, 2 * n))]
+        local += rng.sample(local, len(local) // 4)  # multi-edges
+        local += [(v, v) for v in rng.sample(range(n), 2)]  # self-loops
+        pairs += [(100 * g + s, 100 * g + d) for s, d in local]
+    return pairs
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_lpa_count_ties_take_the_smallest_label(spark, id_type):
+    """LPA's tie rule against the oracle: the most frequent neighbour label,
+    the smallest one on a count tie, in long order and in string order
+    (``"1005" < "999"``). Each component of the union is one seeded graph."""
+    pairs = _tie_graphs()
+    if id_type == "string":
+        pairs = [(str(s), str(d)) for s, d in pairs]
+    edges = spark.createDataFrame(pairs, f"src {id_type}, dst {id_type}")
+    exp, _ = label_propagation_oracle(pairs, max_iter=6)
+    res = label_propagation(edges, max_iter=6)
     assert _labels(res.labels) == exp
 
 

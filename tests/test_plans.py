@@ -200,6 +200,23 @@ def test_scc_runs_no_python_stages(spark, checkpoint_plans):
     _no_python(checkpoint_plans)
 
 
+def test_scc_supersteps_shuffle_only_their_messages(spark, checkpoint_plans):
+    """Each coloring and marking superstep of scc has exactly one Exchange,
+    its messages' shuffle: the colored state is co-partitioned with the edge
+    sets from iteration 0 on, and marking groups its messages by vertex
+    alone, so the join back onto the state keys on ``id`` (joining on
+    ``(id, color)`` shuffles the state there and back again)."""
+    strongly_connected_components(datagen.zipf_edges(spark, 300, 3_000, seed=5))
+    steps = [p for p in checkpoint_plans if "AS changed#" in p]
+    marking = [p for p in steps if "AS marked#" in p]
+    coloring = [p for p in steps if "AS marked#" not in p]
+    assert marking and coloring
+    for plans, key in ((coloring, "dst"), (marking, "src")):
+        for plan in plans:
+            assert plan.count("Exchange") == 1, plan
+            assert f"Exchange hashpartitioning({key}#" in plan, plan
+
+
 def test_betweenness_stays_jvm_side_two_phase_aggs(spark, checkpoint_plans):
     """The Brandes cells must stay JVM-side end to end (no Python eval in
     any job they checkpoint a frame with) and the sigma/delta groupBys must
@@ -226,6 +243,20 @@ def test_assortativity_single_pass_exact_moments(spark):
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
     assert "Window" not in plan
     assert plan.count("HashAggregate") >= 2
+
+
+def _outside_caches(plan):
+    """``plan`` (``explain("simple")`` text) without the cache-build subtree
+    under each ``InMemoryRelation``: what the query itself runs."""
+    kept, cut = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cut is not None and depth > cut:
+            continue
+        cut = depth if "InMemoryRelation" in line else None
+        if cut is None:
+            kept.append(line)
+    return "\n".join(kept)
 
 
 def _superstep_plan(spark, pg):
@@ -267,9 +298,59 @@ def test_pagerank_superstep_state_side_has_no_exchange(spark):
     pg = PreparedGraph(datagen.zipf_edges(spark, 500, 4_000, seed=3), num_partitions=5)
     try:
         plan = _superstep_plan(spark, pg)
-        outside_cache = plan[: plan.index("InMemoryRelation")]
+        outside_cache = _outside_caches(plan)
         assert outside_cache.count("Exchange") == 1, plan
         assert "Exchange hashpartitioning(dst" in outside_cache, plan
+    finally:
+        pg.unpersist()
+
+
+def test_lpa_superstep_has_one_exchange(spark):
+    """The LPA argmax is one ``mode(label, deterministic=True)`` aggregate,
+    and the state is co-partitioned with the symmetrized edge cache: the
+    second superstep's only Exchange outside the cache build is the dst
+    shuffle of the aggregate's partials (a count-then-argmax plan shuffles
+    the ``(dst, label)`` counts and joins them back on ``(cnt, id)``)."""
+    from citation_graph_spark.operators.label_propagation import (
+        label_propagation,
+        superstep_labels,
+    )
+    from citation_graph_spark.operators.prepared import PreparedGraph
+    from citation_graph_spark.operators.superstep import copartitioned_planning, release
+
+    pg = PreparedGraph(datagen.zipf_edges(spark, 500, 4_000, seed=3), num_partitions=5)
+    try:
+        # the state after one superstep, as the loop checkpointed it
+        state = label_propagation(prepared=pg, max_iter=1).labels
+        with copartitioned_planning(spark, pg.num_partitions):
+            plan = _plan(superstep_labels(state, pg.symmetrized()), "simple")
+        release(state)
+        outside_cache = _outside_caches(plan)
+        assert outside_cache.count("Exchange") == 1, plan
+        assert "Exchange hashpartitioning(dst" in outside_cache, plan
+        assert not re.search(r"SortMergeJoin \[[^\]]*cnt", outside_cache), plan
+    finally:
+        pg.unpersist()
+
+
+def test_iteration0_label_state_is_partitioned_on_id(spark):
+    """Hash-min cc and LPA start with every vertex labelled by its own id.
+    The checkpointed iteration-0 state must still report
+    ``hashpartitioning(id, P)``, not partitioning on ``label``, or superstep
+    1 shuffles the state again on both of its joins."""
+    from citation_graph_spark.operators.label_propagation import label_propagation
+    from citation_graph_spark.operators.prepared import PreparedGraph
+    from citation_graph_spark.operators.superstep import release
+
+    pg = PreparedGraph(datagen.zipf_edges(spark, 300, 3_000, seed=5))
+    try:
+        for call in (connected_components, label_propagation):
+            res = call(prepared=pg, max_iter=0)
+            part = res.labels._jdf.queryExecution().executedPlan().outputPartitioning()
+            release(res.labels)
+            assert res.iterations == 0
+            assert part.toString().startswith("hashpartitioning(id#"), (call, part.toString())
+            assert part.numPartitions() == pg.num_partitions, (call, part.toString())
     finally:
         pg.unpersist()
 
@@ -287,7 +368,7 @@ def test_bucketed_prepared_graph_partitions_match_buckets(spark):
     try:
         assert pg.num_partitions == 4
         plan = _superstep_plan(spark, pg)
-        outside_cache = plan[: plan.index("InMemoryRelation")]
+        outside_cache = _outside_caches(plan)
         assert outside_cache.count("Exchange") == 1, plan
     finally:
         pg.unpersist()
